@@ -661,8 +661,7 @@ class ReplayPeer:
 
 
 def task_roundtrip(spark, runs: int = 20, trigger_seconds: float = 0.2,
-                   state_partitions: int = 4,
-                   use_tws: bool | None = None) -> dict | None:
+                   state_partitions: int = 4) -> dict | None:
     """End-to-end task round-trip latency, the last BASELINE.md part-B
     row without a number (VERDICT r7 item 5): POST /wfrun of the
     one-task harness `basic` case → COMPLETED folded document visible
@@ -689,15 +688,10 @@ def task_roundtrip(spark, runs: int = 20, trigger_seconds: float = 0.2,
 
     case = all_cases()["basic"]
     workdir = tempfile.mkdtemp(prefix="lh-bench-lat-")
-    # use_tws=None measures whatever SparkEngineManager deploys by
-    # default (tws since its r10 promotion) — the bench tracks the
-    # production path, not a pinned engine.
     mgr = SparkEngineManager(spark, os.path.join(workdir, "engines"),
                              executor=execute,
                              trigger_seconds=trigger_seconds,
-                             state_partitions=state_partitions,
-                             **({} if use_tws is None
-                                else {"use_tws": use_tws}))
+                             state_partitions=state_partitions)
     api_obj = LittleHorseAPI(
         spark, metadata=MetadataStore(os.path.join(workdir, "meta")),
         engines=mgr)
@@ -738,8 +732,7 @@ def task_roundtrip(spark, runs: int = 20, trigger_seconds: float = 0.2,
             "p95_ms": round(lat[min(len(lat) - 1, int(len(lat) * 0.95))], 1),
             "runs": len(lat),
             "trigger_ms": int(trigger_seconds * 1000),
-            "state_partitions": state_partitions,
-            "engine": "tws" if mgr.use_tws else "pandas-state"}
+            "state_partitions": state_partitions}
 
 
 def fold_throughput(min_seconds: float = 2.0) -> int:

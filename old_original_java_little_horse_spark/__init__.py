@@ -6,9 +6,9 @@ state machine + indexed query store).  This package re-expresses those
 capabilities Spark-first:
 
 - ``engine``     — the event-fold state machine (pure Python core,
-                   executed via ``applyInPandas`` in batch and
-                   ``applyInPandasWithState`` / ``transformWithStateInPandas``
-                   in streaming).
+                   executed via ``applyInPandas`` in batch and one
+                   ``transformWithStateInPandas`` processor in
+                   streaming).
 - ``sdk``        — workflow-as-code builder emitting WFSpec JSON
                    (port of the reference's Python SDK surface).
 - ``operators``  — relational parity operators (filters, joins, aggs,
@@ -17,7 +17,9 @@ capabilities Spark-first:
                    JSONPath) + LLM-data-pipeline ops (dedup, similarity,
                    text analysis, multimodal).
 - ``sources``    — parquet/kafka source + sink builders.
-- ``streaming``  — Structured Streaming wiring of the engine.
+- ``streaming``  — Structured Streaming wiring of the engine (RocksDB
+                   state store; protobuf required, resolved by
+                   ``protobuf_compat``).
 - ``plans``      — plan-inspection helpers (explain/shuffle audits).
 """
 

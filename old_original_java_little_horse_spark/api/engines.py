@@ -18,8 +18,6 @@ the process-isolated variant; here tasks run inline in the fold like
 
 from __future__ import annotations
 
-import json
-import os
 import shutil
 import threading
 from dataclasses import dataclass
@@ -35,93 +33,6 @@ class EngineHandle:
     output_dir: str
     serving_dir: str
     query: object  # StreamingQuery
-
-
-def detect_checkpoint_engine(ckpt_dir: Path) -> bool | None:
-    """Which engine created this checkpoint, read from Spark's OWN
-    record: every committed offsets file carries the session conf the
-    batch ran under, including `spark.sql.streaming.stateStore.
-    providerClass` — the tws engine requires (and `_tws_confs` sets)
-    the RocksDB provider, pandas-state runs the default HDFS-backed
-    one, and a provider mismatch is exactly what Spark rejects on
-    resume.  Returns True (tws), False (committed offsets, not
-    RocksDB — the pandas-state / pre-flip era), or None (no committed
-    offsets: a fresh checkpoint, caller's default applies)."""
-    import re
-
-    offsets = ckpt_dir / "offsets"
-
-    # Offsets filenames are batch ids; sort NUMERICALLY so batch 10
-    # outranks batch 9 (lexicographic order would scan '9' first once
-    # ids pass one digit — ADVICE r11).  Non-numeric names sort FIRST
-    # so `reversed(files)` reads genuinely newest-batch-first — a
-    # stray non-numeric file must never shadow the newest batch's
-    # provider record (ADVICE r12); Spark batch ids are always
-    # numeric, so these are never authoritative.
-    def _batch_key(p: Path):
-        try:
-            return (1, int(p.name), p.name)
-        except ValueError:
-            return (0, 0, p.name)
-
-    try:
-        files = sorted((p for p in offsets.iterdir()
-                        if p.is_file() and not p.name.startswith(".")),
-                       key=_batch_key)
-    except OSError:
-        return None
-    for path in reversed(files):
-        try:
-            txt = path.read_text()
-        except OSError:
-            continue
-        m = re.search(
-            r'"spark\.sql\.streaming\.stateStore\.providerClass"\s*:\s*"([^"]+)"',
-            txt)
-        if m:
-            return m.group(1).endswith("RocksDBStateStoreProvider")
-    # Offsets exist but record no provider: treat as the pre-flip
-    # pandas-state era (the conservative historical read).
-    return False if files else None
-
-
-def pin_engine(ckpt_dir: Path, default_tws: bool,
-               marker: Path | None = None) -> bool:
-    """Resolve which engine runs a deployment, pinned to whatever
-    created its checkpoint: a Structured Streaming checkpoint cannot
-    be resumed by the other engine (different stateful operator AND
-    state-store provider — Spark rejects the mismatch), so
-    `default_tws` applies to FRESH checkpoints only.  Detection order:
-    the `engine.json` marker (a cache of the decision), else the
-    providerClass Spark recorded in the checkpoint's own offsets
-    metadata (`detect_checkpoint_engine` — authoritative for ANY
-    marker-less checkpoint, whichever engine or release created it),
-    else the caller's default for a fresh checkpoint.  The marker is
-    written atomically and is self-healing: a lost or corrupt marker
-    is re-derived from the offsets record next boot.
-
-    Shared by the manager's deploy paths AND `cli.py cmd_process`
-    (ADVICE r10): re-running `process` over a checkpoint the other
-    engine created must resume on that engine, not the current
-    default.
-    """
-    marker = marker if marker is not None else ckpt_dir / "engine.json"
-    if marker.exists():
-        try:
-            return json.loads(marker.read_text()).get("engine") == "tws"
-        except Exception:
-            pass  # unreadable marker: fall through to detection
-    detected = detect_checkpoint_engine(ckpt_dir)
-    use_tws = default_tws if detected is None else detected
-    marker.parent.mkdir(parents=True, exist_ok=True)
-    try:
-        tmp = marker.with_name(marker.name + ".tmp")
-        tmp.write_text(json.dumps(
-            {"engine": "tws" if use_tws else "pandas-state"}))
-        os.replace(tmp, marker)
-    except OSError:
-        pass  # benign: the offsets record re-derives it next boot
-    return use_tws
 
 
 class SparkEngineManager:
@@ -152,7 +63,6 @@ class SparkEngineManager:
                  executor: TaskExecutor | None = None,
                  trigger_seconds: float = 0.2,
                  barrier_timeout: float = 60.0,
-                 use_tws: bool = True,
                  shared: bool = False,
                  state_partitions: int | None = 4):
         self.spark = spark
@@ -160,21 +70,6 @@ class SparkEngineManager:
         self.executor = executor
         self.trigger_seconds = trigger_seconds
         self.barrier_timeout = barrier_timeout
-        # Engine runtime.  transformWithStateInPandas (tws) is the
-        # PROMOTED DEFAULT (r10 soak, VERDICT r9 item 4): it measured
-        # faster on every latency cell (barrier p50 1.2-1.4 s vs
-        # 1.9-3.3 s across 100-50k keys, round-trip p50 1.05 vs
-        # 1.16 s), passed the full 15-case harness, the parametrized
-        # restart/recovery test, and the 50k-key scale probe
-        # (sub-linear, within 12% of the twin on backlog drain), and
-        # carries the r9 exactly-once hardening (tombstoned native
-        # timers).  use_tws=False selects the applyInPandasWithState
-        # twin — still fully tested, the fallback for Spark builds
-        # without transformWithStateInPandas/protobuf.  This default
-        # governs the DEPLOY path (API/CLI servers); the low-level
-        # start_continuous* functions keep an explicit parameter so
-        # the twin test matrix stays split.
-        self.use_tws = use_tws
         self.shared = shared
         # Engine state-store fanout (see start_continuous docstring):
         # every state partition costs a store commit + an Arrow
@@ -198,12 +93,6 @@ class SparkEngineManager:
         # could leak a never-stopped query for the same name.  RLock:
         # deploy/undeploy call _shared_restart internally.
         self._lock = threading.RLock()
-
-    def _pin_engine(self, root: Path) -> bool:
-        """`pin_engine` for this deployment root (marker lives beside
-        the checkpoint, the manager's pre-existing layout)."""
-        return pin_engine(root / "ckpt", self.use_tws,
-                          marker=root / "engine.json")
 
     # -- shared-mode plumbing ------------------------------------------------
 
@@ -229,7 +118,6 @@ class SparkEngineManager:
             serving_dirs=serving_dirs,
             executor=self.executor,
             trigger_seconds=self.trigger_seconds,
-            use_tws=self._pin_engine(root),
             state_partitions=self.state_partitions,
         )
         for name, spec in self._specs.items():
@@ -242,7 +130,10 @@ class SparkEngineManager:
             )
 
     def deploy(self, spec: dict) -> EngineHandle:
-        """Start (or restart, on spec update) the spec's engine."""
+        """Start (or restart, on spec update) the spec's engine.
+        Raises `streaming.checkpoint.StaleCheckpointError` when the
+        checkpoint was left by the removed applyInPandasWithState
+        engine (shared mode too): it must be rebuilt by replay."""
         from ..streaming.engine import start_continuous
 
         name = spec["name"]
@@ -273,7 +164,6 @@ class SparkEngineManager:
                     serving_dir=str(root / "serving"),
                     executor=self.executor,
                     trigger_seconds=self.trigger_seconds,
-                    use_tws=self._pin_engine(root),
                     state_partitions=self.state_partitions,
                 ),
             )

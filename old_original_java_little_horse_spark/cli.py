@@ -44,17 +44,6 @@ def _spark():
     return get_spark("lhctl-spark")
 
 
-def _use_tws(args) -> bool:
-    """Engine selection for process/serve/test: tws
-    (transformWithStateInPandas) is the promoted default runtime;
-    `--engine pandas-state` opts into the applyInPandasWithState twin
-    (the fallback for Spark builds without tws/protobuf), and the
-    pre-promotion `--tws` flag survives as a forcing alias."""
-    if getattr(args, "tws", False):
-        return True
-    return getattr(args, "engine", "tws") != "pandas-state"
-
-
 def _api_call(api: str, method: str, path: str, body=None):
     """Minimal LHClient: JSON in/out against a `serve`d API."""
     import urllib.error
@@ -398,21 +387,14 @@ def cmd_process(args) -> int:
         mod_name, _, attr = args.executor.partition(":")
         executor = getattr(importlib.import_module(mod_name), attr)
 
-    # Pin to the checkpoint's engine (ADVICE r10): re-running process
-    # over a checkpoint the OTHER engine created must not resume it
-    # with this invocation's default — Spark rejects the stateful-
-    # operator mismatch.  Fresh checkpoints take _use_tws(args) and
-    # write the marker; pre-flip marker-less checkpoints (offsets, no
-    # marker) pin pandas-state.
-    from .api.engines import pin_engine
-
+    # A checkpoint of the removed applyInPandasWithState engine is
+    # refused before the query starts (StaleCheckpointError).
     spark = _spark()
     tagged = run_streaming_availablenow(
         spark, str(Path(args.events_dir)) + "/*", spec,
         checkpoint_dir=args.checkpoint_dir,
         output_dir=args.snapshots_dir,
         executor=executor,
-        use_tws=pin_engine(Path(args.checkpoint_dir), _use_tws(args)),
     )
     import pyspark.sql.functions as F
 
@@ -654,8 +636,7 @@ def cmd_serve(args) -> int:
     mgr = SparkEngineManager(spark, str(base / "engines"), executor=executor,
                              shared=bool(getattr(args, "shared", False)),
                              trigger_seconds=trigger_ms / 1000.0,
-                             state_partitions=parts,
-                             use_tws=_use_tws(args))
+                             state_partitions=parts)
     api = LittleHorseAPI(spark, metadata=MetadataStore(str(base / "meta")),
                          engines=mgr)
     srv = LittleHorseHTTPServer(api, host=args.host, port=args.port).start()
@@ -711,26 +692,15 @@ def cmd_test(args) -> int:
 
     spark = _spark()
     workdir = Path(tempfile.mkdtemp(prefix="lh-harness-"))
-    use_tws = _use_tws(args)
     mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                             executor=execute, trigger_seconds=0.2,
-                             use_tws=use_tws)
+                             executor=execute, trigger_seconds=0.2)
     api = LittleHorseAPI(spark, metadata=MetadataStore(str(workdir / "meta")),
                          engines=mgr)
     srv = LittleHorseHTTPServer(api).start()
-    # tws: each micro-batch commits one RocksDB store PER state
-    # partition; the harness keyspace is 1-2 runs per case, so the
-    # session's analytic partition count (32) is pure commit overhead
-    # — size the engines' state stores down (fixed at query start
-    # from this conf, see session.scoped_conf).
-    from .session import scoped_conf
-
     try:
-        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}
-                         if use_tws else {}):
-            results = run_all(f"http://127.0.0.1:{srv.port}", cases,
-                              names=args.cases or None,
-                              requests=args.requests)
+        results = run_all(f"http://127.0.0.1:{srv.port}", cases,
+                          names=args.cases or None,
+                          requests=args.requests)
         return sum(r.failed for r in results)
     finally:
         srv.stop()
@@ -823,12 +793,6 @@ def main(argv: list[str] | None = None) -> int:
     pr.add_argument("--snapshots-dir", required=True)
     pr.add_argument("--checkpoint-dir", required=True)
     pr.add_argument("--executor", help="module.path:function for inline tasks")
-    pr.add_argument("--engine", choices=["tws", "pandas-state"],
-                    default="tws",
-                    help="state engine: tws (default, transformWith"
-                         "StateInPandas) or the applyInPandasWithState "
-                         "twin")
-    pr.add_argument("--tws", action="store_true", help=argparse.SUPPRESS)
     pr.set_defaults(fn=cmd_process)
 
     wk = sub.add_parser("work", help="standalone per-TaskDef worker "
@@ -857,10 +821,6 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--shared", action="store_true",
                     help="one shared engine for all specs (one checkpoint/"
                          "state store; per-spec serving stores)")
-    sv.add_argument("--engine", choices=["tws", "pandas-state"],
-                    default="tws",
-                    help="state engine for spec deployments (tws is "
-                         "the promoted default)")
     sv.add_argument("--latency-profile", action="store_true",
                     help="latency-critical preset: 100 ms trigger x 4 "
                          "state partitions (~150 ms better task "
@@ -873,7 +833,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="state-store shuffle partitions (default 4 = "
                          "serving optimum; 32 drains big backlogs "
                          "~4x faster at +0.8 s barrier)")
-    sv.add_argument("--tws", action="store_true", help=argparse.SUPPRESS)
     sv.add_argument("--smoke", action="store_true", help=argparse.SUPPRESS)
     sv.set_defaults(fn=cmd_serve)
 
@@ -885,17 +844,16 @@ def main(argv: list[str] | None = None) -> int:
                     help="runs per case launch")
     ts.add_argument("--api", help="drive an already-running API "
                                   "(default: boot an embedded one)")
-    ts.add_argument("--engine", choices=["tws", "pandas-state"],
-                    default="tws",
-                    help="state engine for the embedded server (tws is "
-                         "the promoted default)")
-    ts.add_argument("--tws", action="store_true", help=argparse.SUPPRESS)
     ts.set_defaults(fn=cmd_test)
 
     args = p.parse_args(argv)
+    from .streaming.checkpoint import StaleCheckpointError
+
     try:
         return args.fn(args)
-    except ValueError as e:  # spec validation failures → clean error
+    except (ValueError, StaleCheckpointError) as e:
+        # spec validation failures and checkpoints that must be
+        # rebuilt by replay → clean error
         print(f"error: {e}", file=sys.stderr)
         return 2
 

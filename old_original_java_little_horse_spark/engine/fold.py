@@ -12,8 +12,8 @@ That purity is the point: the same function is
 - unit-tested without Spark (tests mirror the reference harness
   scenarios, `lhctl/lh_test_harness/tests/*`),
 - applied per-key in batch via ``applyInPandas`` (engine/batch.py),
-- applied per-key in streaming via ``applyInPandasWithState``
-  (streaming/engine.py),
+- applied per-key in streaming via ``transformWithStateInPandas``
+  (streaming/tws.py, wired by streaming/engine.py),
 - usable as the batch oracle for the streaming engine.
 
 Events, specs, and state use the column shapes documented in

@@ -121,10 +121,6 @@ def normalized_text(c: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
 
 
-def shingle_rows(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
-    return shingle_rows_df(load_table(spark, sf_dir, "documents"), k)
-
-
 def shingle_rows_df(d: DataFrame, k: int, distinct: bool = True) -> DataFrame:
     """Distinct (doc_id, source, s) k-word shingle rows.
 

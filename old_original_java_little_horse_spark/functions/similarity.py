@@ -44,11 +44,6 @@ def dot_q(a: Column, b: Column) -> Column:
     )
 
 
-def cosine_q(a: Column, b: Column) -> Column:
-    """Cosine over quantized vectors: exact int dot / sqrt(exact int norms)."""
-    return dot_q(a, b) / F.sqrt(dot_q(a, a).cast("double") * dot_q(b, b).cast("double"))
-
-
 def directed_vectors(spark: SparkSession, sf_dir: str,
                      with_label: bool = False) -> DataFrame:
     """The cosine family's vector universe: quantized embeddings with

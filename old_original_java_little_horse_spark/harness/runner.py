@@ -103,7 +103,7 @@ def run_case(api: str, case: Case, requests: int = 1,
             # every finished case leaves a live continuous query
             # behind, and by the Nth case the accumulated micro-batch
             # load starves the active engine's read-your-writes
-            # barrier (observed: tws sweep failing from case 11 on).
+            # barrier (observed: the sweep failing from case 11 on).
             _req(api, "DELETE", f"/wfSpec/{spec_id}")
     status = "PASS" if not res.failed else "FAIL"
     log(f"{status} {case.name}: {res.passed} ok, {res.failed} failed")

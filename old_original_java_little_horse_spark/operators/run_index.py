@@ -117,11 +117,6 @@ def search(snapshots: DataFrame, key: str, value: str) -> DataFrame:
     ).select("wf_run_id", "status", "state_json")
 
 
-def get_by_id(snapshots: DataFrame, run_id: str) -> DataFrame:
-    """GET /WFRun/{id} — point lookup on the id table."""
-    return snapshots.where(F.col("wf_run_id") == run_id)
-
-
 @query(
     "engine_run_index",
     oracle="""

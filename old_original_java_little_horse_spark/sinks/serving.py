@@ -304,8 +304,7 @@ def _read_bucket_dir(spark: SparkSession, store_dir: str, rel: str,
 # replays blow past the threshold and take the distributed path; both
 # paths write byte-compatible stores (parity-pinned in
 # tests/test_serving_store.py).
-_FASTPATH_MAX_ROWS = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_ROWS",
-                                        "5000"))
+_FASTPATH_MAX_ROWS = 5000
 
 # The arrow fast path merges each touched bucket's FULL committed
 # contents on the driver, and bucket size grows with the store
@@ -314,15 +313,14 @@ _FASTPATH_MAX_ROWS = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_ROWS",
 # Gate on the ON-DISK bytes of the touched buckets (cheap os.scandir
 # over the manifest's committed dirs) and keep big merges distributed,
 # where executors own the per-bucket work (ADVICE r8).
-_FASTPATH_MAX_BYTES = int(os.environ.get("LH_SPARK_SERVING_FASTPATH_BYTES",
-                                         str(64 * 1024 * 1024)))
+_FASTPATH_MAX_BYTES = 64 * 1024 * 1024
 
 # Reader grace for superseded generation directories (see _commit):
 # a dereferenced dir survives at least this long before GC so an
 # in-flight read planned against an older manifest never has files
 # deleted under its scan.  30 s is orders of magnitude above a point
 # read; raise it if analytic readers scan whole stores off CURRENT.
-_GC_GRACE_S = float(os.environ.get("LH_SPARK_SERVING_GC_GRACE_S", "30"))
+_GC_GRACE_S = 30.0
 
 
 def _touched_bucket_bytes(store_dir: str, manifest: dict,
@@ -482,8 +480,8 @@ def _commit(store_dir: str, manifest: dict, gen_rel: str,
     commit lands while a GET is still mid-scan of a superseded
     directory, so "one commit of grace" would delete files under a
     live reader.  A dereferenced dir is deleted only once it has been
-    pending for `_GC_GRACE_S` (default 30 s — orders of magnitude
-    above any point read; env `LH_SPARK_SERVING_GC_GRACE_S`); until
+    pending for `_GC_GRACE_S` (30 s — orders of magnitude above any
+    point read); until
     then it rides along in `pending_delete` as {"rel", "ts"}.
     Pre-grace manifests carried bare strings — read as ts=0, i.e.
     immediately eligible, which matches their old semantics.
@@ -656,10 +654,6 @@ def has_snapshots(serving_dir: str) -> bool:
     a real read failure on an existing store (must surface as an
     error, not an empty result)."""
     return _load_manifest(snapshots_dir(serving_dir)) is not None
-
-
-def has_aliases(serving_dir: str) -> bool:
-    return _load_manifest(aliases_dir(serving_dir)) is not None
 
 
 def _read_point(spark: SparkSession, store_dir: str,

@@ -71,22 +71,13 @@ def format_task_schedule(tagged: DataFrame) -> DataFrame:
     )
 
 
-def format_snapshots(tagged: DataFrame, topic: str) -> DataFrame:
-    """S5: snapshot rows → the shared WFRun topic."""
-    return tagged.where(F.col("kind") == "snapshot").select(
-        F.lit(topic).alias("topic"),
-        F.col("wf_run_id").cast("binary").alias("key"),
-        F.col("payload").cast("binary").alias("value"),
-    )
-
-
 def task_schedule_sink(tagged: DataFrame, bootstrap_servers: str,
                        checkpoint_dir: str):
     """Start the S4 kafka sink (requires a broker + kafka package)."""
-    return (
-        format_task_schedule(tagged)
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
+    from ..streaming.engine import start_engine_query
+
+    return start_engine_query(
+        tagged.sparkSession,
+        format_task_schedule(tagged).writeStream.format("kafka")
+        .option("kafka.bootstrap.servers", bootstrap_servers),
+        checkpoint_dir)

@@ -15,8 +15,8 @@ one big file, and FIFO file admission would still queue a new
 command behind every backlog file.
 
 `CatchUpAdmission` is the row-granular, latency-preserving
-equivalent, implemented SOURCE-SIDE so both stateful engines
-(pandas-state and tws — the cap is upstream of either) get it:
+equivalent, implemented SOURCE-SIDE (upstream of the stateful
+operator):
 
 - Bulk backlogs go to a SPOOL, not the live events dir.  The spool
   is split into offset-ordered segments of `segment_rows` rows.

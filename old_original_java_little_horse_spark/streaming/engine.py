@@ -4,13 +4,14 @@ SURVEY.md §3.2 / §7 step 4 — the reference's Kafka Streams topology
 (`J/scheduler/SchedulerTopology.java:23-154`) re-expressed as ONE
 streaming query:
 
-    events → groupBy(wf_run_id) → applyInPandasWithState(fold)
+    events → groupBy(wf_run_id)
+           → transformWithStateInPandas(tws.WFRunFoldProcessor)
            → tagged output rows → filter-split → sinks
 
 - Per-key state is the WFRun JSON document (the reference's RocksDB
   value, `SchedulerProcessor.java:133-231`); Structured Streaming's
-  state store (RocksDB-backed in prod) replaces the store + changelog
-  topic pair — the write-amplification the reference laments in
+  RocksDB state store replaces the store + changelog topic pair — the
+  write-amplification the reference laments in
   `SchedulerTopology.java:33-46` disappears.
 - Intra-key ordering: events are sorted by `offset` inside each
   micro-batch group (Structured Streaming does not guarantee
@@ -20,29 +21,30 @@ streaming query:
   or a Kafka sink with a `topic` column — strictly better than the
   reference's one-processor-per-TaskDef (§2.2 P1).
 - Timers: the live path (`start_continuous`) fires its own stored
-  timers via group-state ProcessingTimeTimeout — the reference's 1 s
-  punctuator (`SchedulerProcessor.java:56-60`, `Constants.java:36`)
-  without any satellite process; a SLEEP completes with no further
-  input.  Replay paths keep timers as emitted `kind='timer'` rows +
-  explicit TIMER_EVENTs (deterministic: no wall-clock reads), served
-  by the legacy `TimerPump` when needed.
+  timers through one native processing-time timer per WFRunTimer — the
+  reference's 1 s punctuator (`SchedulerProcessor.java:56-60`,
+  `Constants.java:36`) without any satellite process; a SLEEP
+  completes with no further input.  Replay paths keep timers as
+  emitted `kind='timer'` rows + explicit TIMER_EVENTs (deterministic:
+  no wall-clock reads), served by the legacy `TimerPump` when needed.
+- Every engine query starts through `start_engine_query`, which sets
+  the RocksDB state store the processor needs and refuses checkpoints
+  it cannot resume.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType, LongType, StringType, StructField, StructType,
 )
 
-from ..engine.fold import TaskExecutor, process_event
+from ..engine.fold import TaskExecutor
 
 OUTPUT_SCHEMA = StructType([
     StructField("wf_run_id", StringType()),
@@ -56,28 +58,6 @@ OUTPUT_SCHEMA = StructType([
     StructField("payload", StringType()),    # full JSON of the row's object
 ])
 
-# Engine bookkeeping lives in the state tuple, NOT inside the WFRun
-# JSON document: the document is the public surface (snapshots, index,
-# lhctl get) and must contain only reference fields.  `max_offset`
-# gives snapshots a monotonic sequence number (latest-wins selection
-# in the query layer); `max_event_ts` drives the lateness bound;
-# `pending_json` is the run's stored-timer list (the reference's timer
-# store, SchedulerProcessor.java:56-60) and `tomb` marks an evicted
-# terminal run (full document dropped, dedupe marker retained).
-STATE_SCHEMA = StructType([
-    StructField("state_json", StringType()),
-    StructField("max_offset", LongType()),
-    StructField("max_event_ts", LongType()),
-    StructField("pending_json", StringType()),
-    StructField("tomb", IntegerType()),
-])
-
-# A tombstone keeps exactly-once under redelivery (a duplicate
-# WF_RUN_STARTED for an evicted run must NOT restart it) at ~40 bytes
-# instead of the full multi-KB WFRun document — at 100× run
-# cardinality the state store holds markers, not history.
-_TOMB_STATE = ""
-
 
 def _timer_key(t: dict) -> tuple:
     return (t["thread_run_id"], t["task_run_id"], t["maturation_timestamp"])
@@ -85,9 +65,7 @@ def _timer_key(t: dict) -> tuple:
 
 def emit_ctx_rows(out_rows: list, wf_run_id: str, ctx, pending: list) -> None:
     """Append a fold invocation's task-schedule and timer output rows
-    (shared by the applyInPandasWithState and transformWithState
-    engines; new timers also join `pending`, the run's stored-timer
-    list)."""
+    (new timers also join `pending`, the run's stored-timer list)."""
     for tsr in ctx.to_schedule:
         out_rows.append({
             "wf_run_id": wf_run_id, "kind": "task_schedule",
@@ -128,8 +106,7 @@ def _ival(x) -> int:
 
 def prepare_events(events: list[dict], max_offset: int, max_event_ts: int,
                    allowed_lateness_ms: int | None) -> tuple[list[dict], int, int]:
-    """Order + bound a micro-batch group's events (shared by both
-    stateful engines): sort by per-key offset (Structured Streaming
+    """Order + bound a micro-batch group's events: sort by per-key offset (Structured Streaming
     gives no intra-batch order), drop events beyond the lateness
     allowance, and advance the key's (max_offset, max_event_ts) —
     `seq` must STRICTLY increase whenever events fold, so an
@@ -198,235 +175,32 @@ def index_diff_rows(out_rows: list, wf_run_id: str, old_aliases: set,
             })
 
 
-def fire_matured_timers(spec: dict, executor, wf_run_id: str, state,
-                        pending: list, max_offset: int, now_ms: int,
-                        out_rows: list):
-    """Fold every matured stored timer as a TIMER_EVENT; firing can
-    create new timers (sequential SLEEPs), so loop to quiescence.
-    Synthetic offsets continue the per-key sequence (+1 each) so
-    snapshot `seq` stays monotonic.
+def _export_worker_pythonpath(spark) -> None:
+    """transformWithStateInPandas starts a LONG-LIVED state-server
+    Python process through `StreamingPythonRunner`, which (unlike
+    task workers) does not consult the session's addPyFile includes —
+    its import path comes from the PYTHONPATH in the Python
+    function's captured env (`sc.environment`, snapshotted when the
+    UDF is wrapped).  Export this package's parent dir and, when the
+    protobuf fallback is active, the shim path, BEFORE the UDF is
+    created.  Driver-local paths are fine: the runner lives on the
+    driver node; ordinary executor workers are covered by
+    ship_package/ship_protobuf."""
+    import pathlib
 
-    ONE implementation for BOTH stateful engines
-    (applyInPandasWithState here, transformWithState in tws.py) — the
-    firing order below is a cross-engine parity contract, so the
-    twins share the code instead of promising byte-equality."""
-    fired = False
-    while True:
-        matured = [t for t in pending
-                   if t["maturation_timestamp"] <= now_ms]
-        if not matured:
-            break
-        # Maturation order FIRST (thread/task ids only break ties):
-        # the reference punctuator range-scans [0, now] by
-        # maturation time (SchedulerProcessor), and the TimerPump
-        # replay path injects events whose offsets are the
-        # µs-scaled maturation timestamps — firing here in any
-        # other order could diverge from both when one timer's
-        # fold halts a thread whose own timer matured earlier.
-        for t in sorted(matured,
-                        key=lambda t: (t["maturation_timestamp"],
-                                       t["thread_run_id"],
-                                       t["task_run_id"])):
-            pending.remove(t)
-            max_offset += 1
-            ev = {
-                "wf_run_id": wf_run_id, "event_type": "TIMER_EVENT",
-                "thread_id": t["thread_run_id"],
-                "timestamp": t["maturation_timestamp"],
-                "offset": max_offset, "content": json.dumps(t),
-            }
-            state, ctx = process_event(spec, state, ev, executor=executor)
-            emit_ctx_rows(out_rows, wf_run_id, ctx, pending)
-            fired = True
-    return state, pending, max_offset, fired
+    extra = [str(pathlib.Path(__file__).resolve().parents[2])]
+    try:
+        import google.protobuf as gp
 
-
-def make_update_fn(spec: dict, executor: TaskExecutor | None = None,
-                   allowed_lateness_ms: int | None = None,
-                   native_timers: bool = False,
-                   evict_completed: bool = False,
-                   tombstone_ttl_ms: int | None = None):
-    """Build the applyInPandasWithState update function for a spec.
-
-    `allowed_lateness_ms`: Spark's watermark does NOT filter input
-    rows for arbitrary stateful ops (it only drives state-timeout
-    eviction), so event-time lateness is enforced here — events whose
-    timestamp trails the key's max seen event-time by more than the
-    allowance are dropped, deterministically per key.
-
-    `native_timers` (requires ProcessingTimeTimeout): the engine fires
-    its own stored timers — matured pending timers are folded as
-    TIMER_EVENTs inside the update function, and a group-state timeout
-    is armed for the earliest immature one, so a SLEEP completes with
-    NO further input (the reference punctuator's "fires with no
-    events" guarantee, SchedulerProcessor.java:56-60, 88-126).  Spark
-    schedules empty micro-batches while processing-time timeouts are
-    pending, which is what makes this self-contained.  Replay/parity
-    paths leave this off: a deterministic replay wants an explicit
-    TIMER_EVENT stream, not wall-clock reads.
-
-    `evict_completed`: once a run reaches COMPLETED and its final
-    snapshot is emitted, replace the state document with a tombstone.
-    Late/duplicate deliveries for the run are dropped (exactly-once
-    preserved) but the store no longer grows with run *history* —
-    only with run *count*, and `tombstone_ttl_ms` (native mode)
-    removes even the marker once the redelivery horizon passes.
-    HALTED runs are NOT evicted: WF_RUN_RESUME_REQUEST must find
-    their full document (fold.py resume semantics).
-    """
-
-    _emit = emit_ctx_rows
-
-    def _fire_matured(wf_run_id: str, state, pending: list, max_offset: int,
-                      now_ms: int, out_rows: list):
-        return fire_matured_timers(spec, executor, wf_run_id, state,
-                                   pending, max_offset, now_ms, out_rows)
-
-    def _store(group_state: GroupState, state, max_offset: int,
-               max_event_ts: int, pending: list, out_rows: list,
-               wf_run_id: str, old_aliases: set | None = None) -> None:
-        """Emit the per-batch snapshot (S5, SchedulerTopology.java:74-87;
-        `seq` = max folded offset, a monotonic per-key version the query
-        layer orders by — file-scan order is NOT write order), then
-        persist state, tombstoning terminal runs when configured.
-
-        `old_aliases`: the run's alias set BEFORE this batch's events —
-        diffed against the new document to emit `kind='index'`
-        CREATE/DELETE changelog rows (ResourceIndexProcessor.java:41-131
-        semantics: the scheduler, which alone sees old+new state,
-        publishes index diffs; downstream compaction is latest-op-wins).
-        Index work per batch is O(changed runs), never O(index).
-        """
-        if old_aliases is not None:
-            index_diff_rows(out_rows, wf_run_id, old_aliases, state, max_offset)
-        out_rows.append(snapshot_row(wf_run_id, state, max_offset))
-        if evict_completed and state["status"] == "COMPLETED":
-            # Terminal run: stored timers can no longer change anything
-            # (the fold's stale guards no-op a timer against a terminal
-            # run, same as the reference punctuator firing late), so
-            # any still pending are dropped rather than blocking
-            # eviction — in replay mode (no wheel tick) an unmatured
-            # task-timeout timer would otherwise pin the full document
-            # forever.  One guard, one motion: drop timers + tombstone.
-            group_state.update((_TOMB_STATE, max_offset, max_event_ts,
-                                "[]", 1))
-            if native_timers and tombstone_ttl_ms is not None:
-                group_state.setTimeoutDuration(tombstone_ttl_ms)
-            return
-        _persist_and_arm(group_state, state, max_offset, max_event_ts,
-                         pending)
-
-    def _persist_and_arm(group_state: GroupState, state, max_offset: int,
-                         max_event_ts: int, pending: list) -> None:
-        """Persist live (non-tombstone) state and re-arm the timer
-        wheel — the ONE place the state tuple shape and the
-        earliest-immature-timer arming live (shared by _store and the
-        spurious-wake path, which must not diverge)."""
-        group_state.update((json.dumps(state, separators=(",", ":")),
-                            max_offset, max_event_ts,
-                            json.dumps(pending, separators=(",", ":")), 0))
-        if native_timers and pending:
-            # Arm for the earliest immature timer.  Processing-time
-            # timeouts are cleared whenever the function runs for the
-            # key, so re-arm on every invocation that leaves timers.
-            next_mat = min(t["maturation_timestamp"] for t in pending)
-            import time as _time
-            delay = max(1, next_mat - int(_time.time() * 1000))
-            group_state.setTimeoutDuration(delay)
-
-    def update(key: tuple, pdf_iter: Iterator[pd.DataFrame],
-               group_state: GroupState) -> Iterator[pd.DataFrame]:
-        import time as _time
-
-        (wf_run_id,) = key
-        cols = [f.name for f in OUTPUT_SCHEMA.fields]
-        state = None
-        max_offset = 0
-        max_event_ts = 0
-        pending: list[dict] = []
-        tomb = 0
-        if group_state.exists:
-            (state_json, max_offset, max_event_ts,
-             pending_json, tomb) = group_state.get
-            max_offset = max_offset or 0
-            max_event_ts = max_event_ts or 0
-            tomb = tomb or 0
-            pending = json.loads(pending_json) if pending_json else []
-            if not tomb:
-                state = json.loads(state_json)
-        # Alias set before this invocation's folding — the index diff
-        # base (the fold mutates `state` in place, so capture now).
-        from ..operators.run_index import doc_aliases
-
-        old_aliases = doc_aliases(state)
-
-        if group_state.hasTimedOut:
-            # Timer wheel tick for this key — no input rows.
-            if tomb:
-                group_state.remove()  # redelivery horizon passed
-                yield pd.DataFrame([], columns=cols)
-                return
-            out_rows: list = []
-            now_ms = int(_time.time() * 1000)
-            state, pending, max_offset, fired = _fire_matured(
-                wf_run_id, state, pending, max_offset, now_ms, out_rows)
-            if fired:
-                _store(group_state, state, max_offset, max_event_ts,
-                       pending, out_rows, wf_run_id, old_aliases)
-            elif pending:
-                # Spurious/early wake: just re-persist and re-arm
-                # (shared helper — the state tuple shape must never
-                # fork between this path and _store).
-                _persist_and_arm(group_state, state, max_offset,
-                                 max_event_ts, pending)
-            yield pd.DataFrame(out_rows, columns=cols)
-            return
-
-        events: list[dict] = []
-        for pdf in pdf_iter:
-            events.extend(pdf.to_dict("records"))
-
-        if tomb:
-            # Evicted terminal run: every redelivered/late event is
-            # dropped — the marker exists precisely to make this safe.
-            if native_timers and tombstone_ttl_ms is not None:
-                group_state.setTimeoutDuration(tombstone_ttl_ms)
-            yield pd.DataFrame([], columns=cols)
-            return
-
-        events, max_offset, max_event_ts = prepare_events(
-            events, max_offset, max_event_ts, allowed_lateness_ms)
-
-        out_rows = []
-        for ev in events:
-            if ev.get("event_type") == "TIMER_EVENT":
-                # Externally-injected firing (TimerPump replay path):
-                # drain the matching stored timer so `pending` tracks
-                # only live timers in every mode.
-                try:
-                    fired_key = _timer_key(json.loads(ev.get("content") or "{}"))
-                    pending = [t for t in pending
-                               if _timer_key(t) != fired_key]
-                except (KeyError, ValueError, TypeError):
-                    # TypeError: content that is valid JSON but not an
-                    # object ('123', '[1]', 'null') — a poison pill
-                    # must be tolerated, not crash the micro-batch
-                    # (which would replay and crash forever).
-                    pass
-            state, ctx = process_event(spec, state, ev, executor=executor)
-            _emit(out_rows, wf_run_id, ctx, pending)
-
-        if state is not None and native_timers:
-            state, pending, max_offset, _ = _fire_matured(
-                wf_run_id, state, pending, max_offset,
-                int(_time.time() * 1000), out_rows)
-
-        if state is not None:
-            _store(group_state, state, max_offset, max_event_ts,
-                   pending, out_rows, wf_run_id, old_aliases)
-        yield pd.DataFrame(out_rows, columns=cols)
-
-    return update
+        extra.append(str(pathlib.Path(gp.__file__).resolve().parents[2]))
+    except ImportError:
+        pass
+    env = spark.sparkContext.environment
+    parts = [p for p in (env.get("PYTHONPATH") or
+                         os.environ.get("PYTHONPATH", "")).split(os.pathsep)
+             if p]
+    env["PYTHONPATH"] = os.pathsep.join(
+        dict.fromkeys(extra + parts))  # ordered de-dup
 
 
 def streaming_engine(events: DataFrame, spec: dict,
@@ -435,50 +209,56 @@ def streaming_engine(events: DataFrame, spec: dict,
                      allowed_lateness_ms: int | None = None,
                      native_timers: bool = False,
                      evict_completed: bool = False,
-                     tombstone_ttl_ms: int | None = None,
-                     use_tws: bool = False) -> DataFrame:
-    """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream.
+                     tombstone_ttl_ms: int | None = None) -> DataFrame:
+    """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream,
+    folded per run by `tws.WFRunFoldProcessor` under
+    `transformWithStateInPandas` (typed state variables + one native
+    timer per stored WFRunTimer).  Start the query through
+    `start_engine_query`: the processor's state needs the RocksDB
+    state store.
 
     Late-data bound (SURVEY §2.10): `allowed_lateness_ms` drops
     events trailing the key's max event-time — enforced in the
-    update function because Spark's watermark does not filter input
-    rows for arbitrary stateful ops.  `watermark_delay` additionally
-    declares the watermark on the stream (state-timeout eviction +
-    downstream aggregations); both complement the fold's own
-    stale-result guard for in-window out-of-order arrivals.
+    processor because Spark's watermark does not filter input rows
+    for arbitrary stateful ops.  `watermark_delay` additionally
+    declares the watermark on the stream (downstream aggregations);
+    both complement the fold's own stale-result guard for in-window
+    out-of-order arrivals.
 
-    `use_tws` selects the `transformWithStateInPandas` implementation
-    (`tws.py`: typed state variables + per-timer native callbacks);
-    default stays `applyInPandasWithState`.  Semantics are identical —
-    the twin tests run both.
+    `native_timers`: the engine fires its own stored timers (a SLEEP
+    completes with NO further input, the reference punctuator's
+    guarantee).  Replay/parity paths leave this off: a deterministic
+    replay wants an explicit TIMER_EVENT stream, not wall-clock reads.
+    `evict_completed` tombstones COMPLETED runs and `tombstone_ttl_ms`
+    (native mode) later drops the marker — see `WFRunFoldProcessor`.
     """
-    if use_tws:
-        from .tws import streaming_engine_tws
-
-        return streaming_engine_tws(
-            events, spec, executor=executor,
-            watermark_delay=watermark_delay,
-            allowed_lateness_ms=allowed_lateness_ms,
-            native_timers=native_timers,
-            evict_completed=evict_completed,
-            tombstone_ttl_ms=tombstone_ttl_ms)
+    from ..protobuf_compat import ensure_protobuf, ship_protobuf
     from ..session import ship_package
+    from .tws import WFRunFoldProcessor
 
-    ship_package(events.sparkSession)
+    if not ensure_protobuf():
+        raise RuntimeError(
+            "the streaming engine (transformWithStateInPandas) needs the "
+            "protobuf package (google.protobuf) for its Python state "
+            "server, and protobuf_compat found no runtime to resolve; "
+            "install protobuf")
+    spark = events.sparkSession
+    ship_package(spark)
+    ship_protobuf(spark)
+    _export_worker_pythonpath(spark)
     if watermark_delay is not None:
         events = events.withColumn(
             "event_time", F.timestamp_millis(F.col("timestamp"))
         ).withWatermark("event_time", watermark_delay)
-    return events.groupBy("wf_run_id").applyInPandasWithState(
-        make_update_fn(spec, executor, allowed_lateness_ms=allowed_lateness_ms,
-                       native_timers=native_timers,
-                       evict_completed=evict_completed,
-                       tombstone_ttl_ms=tombstone_ttl_ms),
+    processor = WFRunFoldProcessor(
+        spec, executor, allowed_lateness_ms=allowed_lateness_ms,
+        native_timers=native_timers, evict_completed=evict_completed,
+        tombstone_ttl_ms=tombstone_ttl_ms)
+    return events.groupBy("wf_run_id").transformWithStateInPandas(
+        statefulProcessor=processor,
         outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout if native_timers
-                     else GroupStateTimeout.NoTimeout),
+        outputMode="Update",
+        timeMode="ProcessingTime" if native_timers else "None",
     )
 
 
@@ -498,16 +278,12 @@ def split_outputs(tagged: DataFrame) -> dict[str, DataFrame]:
     }
 
 
-_ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
-                     "state.RocksDBStateStoreProvider")
-
-
 # A micro-batch at or under this row count is appended + upserted
 # driver-side from one toArrow() collection (see the continuous
 # sink): live serving emits a handful of rows per trigger, and each
 # extra Spark job there is ~0.15-0.4 s of scheduler overhead on the
 # command-latency path.  Backfills blow past it and stay distributed.
-_SMALL_BATCH_ROWS = int(os.environ.get("LH_SPARK_SMALL_BATCH_ROWS", "5000"))
+_SMALL_BATCH_ROWS = 5000
 
 
 def _append_output_arrow(tbl, output_dir: str) -> None:
@@ -545,7 +321,7 @@ def _append_output_arrow(tbl, output_dir: str) -> None:
 def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
     """Driver-side twin of the shared sink's attribution + per-spec
     upsert for a collected small batch: each row joins to its run's
-    spec via the batch's own snapshot payloads (the update fn emits a
+    spec via the batch's own snapshot payloads (the processor emits a
     snapshot row in every invocation that emits index rows, so every
     serving-relevant run has one in-batch)."""
     import pyarrow as pa
@@ -568,17 +344,52 @@ def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
                                      preserve_index=False), sdir)
 
 
-def _tws_confs(use_tws: bool) -> dict[str, str]:
-    """`transformWithStateInPandas` requires a state store that
-    supports multiple column families (one per typed state variable /
-    timer store) — Spark's RocksDB provider, not the default
-    HDFS-backed one.  Fitting: RocksDB is exactly what the
-    reference's stores run on (SURVEY §2.1 S6).  The provider class
-    is read at query START, so callers scope it around `.start()`."""
-    if not use_tws:
-        return {}
-    return {"spark.sql.streaming.stateStore.providerClass":
-            _ROCKSDB_PROVIDER}
+def start_engine_query(spark: SparkSession, writer, checkpoint_dir: str,
+                       state_partitions: int | None = None):
+    """Start a streaming query over the engine's tagged output — the
+    ONE place every engine query start goes through.
+
+    `transformWithStateInPandas` needs a state store that supports
+    multiple column families (one per typed state variable / timer
+    store): Spark's RocksDB provider, not the default HDFS-backed one.
+    Fitting: RocksDB is exactly what the reference's stores run on
+    (SURVEY §2.1 S6).  The provider and `state_partitions` (the
+    state-store fanout, `spark.sql.shuffle.partitions` at FIRST start;
+    an existing checkpoint keeps its own) are read at query start, so
+    they are scoped around `.start()` and never set session-wide: the
+    other streaming replays keep the default store.
+
+    Stamps `_lh_fresh_start` on the returned query (see
+    await_read_your_writes)."""
+    from ..session import scoped_conf
+    from .checkpoint import (
+        PROVIDER_CONF, ROCKSDB_PROVIDER, check_engine_checkpoint,
+        fresh_checkpoint,
+    )
+
+    check_engine_checkpoint(checkpoint_dir)
+    confs = {PROVIDER_CONF: ROCKSDB_PROVIDER}
+    if state_partitions is not None:
+        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
+    fresh = fresh_checkpoint(checkpoint_dir)
+    with scoped_conf(spark, confs):
+        q = writer.option("checkpointLocation", checkpoint_dir).start()
+    q._lh_fresh_start = fresh
+    return q
+
+
+def _event_stream(spark: SparkSession, events_dir: str,
+                  max_files_per_trigger: int | None) -> DataFrame:
+    """The engine's input: the events directory as a file stream.
+    `max_files_per_trigger` is the source's coarse admission cap; the
+    row-granular pacer is streaming.admission.CatchUpAdmission."""
+    from ..engine.batch import WF_EVENT_SCHEMA
+
+    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger",
+                               str(max_files_per_trigger))
+    return reader.parquet(events_dir)
 
 
 def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
@@ -589,7 +400,6 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                      evict_completed: bool = True,
                      tombstone_ttl_ms: int | None = None,
                      serving_dir: str | None = None,
-                     use_tws: bool = False,
                      state_partitions: int | None = None,
                      max_files_per_trigger: int | None = None):
     """Start the engine as a continuously-running query (ProcessingTime
@@ -597,7 +407,7 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
 
     The live path defaults to self-contained timers (a SLEEP completes
     with no external pump and no further input — Spark keeps scheduling
-    micro-batches while processing-time timeouts are armed) and to
+    micro-batches while processing-time timers are registered) and to
     tombstone eviction of COMPLETED runs.  Returns the StreamingQuery
     handle.
 
@@ -627,20 +437,12 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     order is preserved, so a live command still queues behind
     remaining backlog files; for row-granular pacing that keeps new
     runs at idle-grade latency, wrap the bulk import in
-    `streaming.admission.CatchUpAdmission` instead (source-side, so
-    it applies identically to the tws engine)."""
-    from ..engine.batch import WF_EVENT_SCHEMA
-
-    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    events = reader.parquet(events_dir)
+    `streaming.admission.CatchUpAdmission` instead (source-side)."""
+    events = _event_stream(spark, events_dir, max_files_per_trigger)
     tagged = streaming_engine(events, spec, executor=executor,
                               native_timers=native_timers,
                               evict_completed=evict_completed,
-                              tombstone_ttl_ms=tombstone_ttl_ms,
-                              use_tws=use_tws)
+                              tombstone_ttl_ms=tombstone_ttl_ms)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # ONE count materializes the batch into the cache and gates
@@ -683,36 +485,13 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
             # copy per attempt into executor storage memory.
             batch_df.unpersist()
 
-    from ..session import scoped_conf
-
-    confs = _tws_confs(use_tws)
-    if state_partitions is not None:
-        confs = {**confs,
-                 "spark.sql.shuffle.partitions": str(state_partitions)}
-    fresh = _fresh_checkpoint(checkpoint_dir)
-    with scoped_conf(spark, confs):
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
-    q._lh_fresh_start = fresh  # see await_read_your_writes
+    q = start_engine_query(
+        spark,
+        tagged.writeStream.foreachBatch(sink).outputMode("update")
+        .trigger(processingTime=f"{trigger_seconds} seconds"),
+        checkpoint_dir, state_partitions)
     q._lh_capped_admission = max_files_per_trigger is not None
     return q
-
-
-def _fresh_checkpoint(checkpoint_dir: str) -> bool:
-    """True iff the checkpoint has NO committed offsets — i.e. this
-    query run cannot begin with a WAL-recovery replay, so the
-    read-your-writes barrier may trust its first progress entry
-    (stamped on the query as `_lh_fresh_start`).  Checked BEFORE
-    .start(): afterwards the running query itself writes offsets."""
-    try:
-        return not os.listdir(os.path.join(checkpoint_dir, "offsets"))
-    except FileNotFoundError:
-        return True
 
 
 def start_continuous_shared(spark: SparkSession, events_dir: str,
@@ -720,7 +499,6 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
                             output_dir: str, serving_dirs: dict[str, str],
                             executor: TaskExecutor | None = None,
                             trigger_seconds: float = 0.5,
-                            use_tws: bool = False,
                             state_partitions: int | None = None,
                             max_files_per_trigger: int | None = None):
     """ONE engine for ALL deployed specs (SURVEY §7 ops profile: 100
@@ -728,14 +506,14 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
 
     The reference deploys one scheduler app per WFSpec
     (`Scheduler.java:29-47`); this is the consolidated alternative the
-    fold already supports: the update function receives a
+    fold already supports: the processor receives a
     `make_spec_registry` dict and each run resolves its pinned spec
     per event (`fold.resolve_spec`).  One events directory (the shared
     event topic — rows carry `wf_spec_name`), one checkpoint, one
     state store; serving stays PER SPEC.
 
-    Per-spec serving routing: the update fn emits a snapshot row in
-    every invocation that emits index rows (`_store`), and the
+    Per-spec serving routing: the processor emits a snapshot row in
+    every invocation that emits index rows (`_save`), and the
     snapshot payload carries `wf_spec_name` — so a broadcast join of
     the batch against its own snapshot rows attributes every serving
     row to its spec without widening OUTPUT_SCHEMA.  The driver loop
@@ -743,20 +521,12 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
     count); at 100s of specs you would instead add a spec partition
     column to the store root — same motion, one pass.
     """
-    from ..engine.batch import WF_EVENT_SCHEMA
     from ..engine.fold import make_spec_registry
 
     registry = make_spec_registry(specs)
-    reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-    if max_files_per_trigger is not None:
-        # Coarse catch-up admission cap — see start_continuous; the
-        # row-granular pacer is streaming.admission.CatchUpAdmission.
-        reader = reader.option("maxFilesPerTrigger",
-                               str(max_files_per_trigger))
-    events = reader.parquet(events_dir)
+    events = _event_stream(spark, events_dir, max_files_per_trigger)
     tagged = streaming_engine(events, registry, executor=executor,
-                              native_timers=True, evict_completed=True,
-                              use_tws=use_tws)
+                              native_timers=True, evict_completed=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         from ..sinks.serving import upsert_serving_stores
@@ -804,22 +574,11 @@ def start_continuous_shared(spark: SparkSession, events_dir: str,
                 attributed.unpersist()
             batch_df.unpersist()
 
-    from ..session import scoped_conf
-
-    confs = _tws_confs(use_tws)
-    if state_partitions is not None:
-        confs = {**confs,
-                 "spark.sql.shuffle.partitions": str(state_partitions)}
-    fresh = _fresh_checkpoint(checkpoint_dir)
-    with scoped_conf(spark, confs):
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start()
-        )
-    q._lh_fresh_start = fresh  # see await_read_your_writes
+    q = start_engine_query(
+        spark,
+        tagged.writeStream.foreachBatch(sink).outputMode("update")
+        .trigger(processingTime=f"{trigger_seconds} seconds"),
+        checkpoint_dir, state_partitions)
     q._lh_capped_admission = max_files_per_trigger is not None
     return q
 
@@ -906,8 +665,7 @@ def run_streaming_availablenow(spark: SparkSession, events_dir: str, spec: dict,
                                executor: TaskExecutor | None = None,
                                max_files_per_trigger: int | None = None,
                                evict_completed: bool = False,
-                               shuffle_partitions: int | None = None,
-                               use_tws: bool = False) -> DataFrame:
+                               shuffle_partitions: int | None = None) -> DataFrame:
     """Run the engine over a parquet directory of events with an
     Available-Now trigger, appending tagged outputs to `output_dir`
     via foreachBatch (fault-tolerant: the checkpoint is recoverable,
@@ -928,36 +686,23 @@ def run_streaming_availablenow(spark: SparkSession, events_dir: str, spec: dict,
     replay on the session's 32 analytic partitions pays 32x that for
     nothing.  Scoped to this query; the session default is restored.
     """
-    from ..engine.batch import WF_EVENT_SCHEMA
-    from ..session import scoped_conf
+    events = _event_stream(spark, events_dir, max_files_per_trigger)
+    tagged = streaming_engine(events, spec, executor=executor,
+                              evict_completed=evict_completed)
 
-    confs = ({"spark.sql.shuffle.partitions": str(shuffle_partitions)}
-             if shuffle_partitions is not None else {})
-    confs.update(_tws_confs(use_tws))
-    with scoped_conf(spark, confs):
-        reader = spark.readStream.schema(WF_EVENT_SCHEMA)
-        if max_files_per_trigger is not None:
-            reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-        events = reader.parquet(events_dir)
-        tagged = streaming_engine(events, spec, executor=executor,
-                                  evict_completed=evict_completed,
-                                  use_tws=use_tws)
+    def sink(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.write.mode("append").parquet(output_dir)
 
-        def sink(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df.write.mode("append").parquet(output_dir)
-
-        q = (
-            tagged.writeStream.foreachBatch(sink)
-            .outputMode("update")
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(300):
-            # A truncated replay must be an ERROR, not a silently
-            # short output a parity gate would misread as data drift.
-            q.stop()
-            raise TimeoutError(
-                "availableNow replay did not finish within 300s; "
-                "output would be truncated")
+    q = start_engine_query(
+        spark,
+        tagged.writeStream.foreachBatch(sink).outputMode("update")
+        .trigger(availableNow=True),
+        checkpoint_dir, shuffle_partitions)
+    if not q.awaitTermination(300):
+        # A truncated replay must be an ERROR, not a silently
+        # short output a parity gate would misread as data drift.
+        q.stop()
+        raise TimeoutError(
+            "availableNow replay did not finish within 300s; "
+            "output would be truncated")
     return spark.read.parquet(output_dir)

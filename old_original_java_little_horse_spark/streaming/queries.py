@@ -1,5 +1,5 @@
-"""Streaming-engine parity query: the applyInPandasWithState engine
-run end-to-end (availableNow) and hash-checked against the same SQL
+"""Streaming-engine parity query: the transformWithStateInPandas
+engine run end-to-end (availableNow) and hash-checked against the same SQL
 oracle as the batch fold — streaming == batch == closed form.
 """
 
@@ -49,24 +49,7 @@ from .engine import run_streaming_availablenow
 _STREAM_PARTS = 4
 
 
-@query(
-    "engine_streaming_fold",
-    oracle=_ORACLE_AGG + """
-SELECT 'user-' || CAST(user_id AS VARCHAR) AS wf_run_id,
-       'COMPLETED' AS status,
-       CAST(n_purch * 2 + n_click + 7 AS BIGINT) AS score,
-       CASE WHEN n_click > n_purch THEN 'clicky' ELSE 'buyy' END AS tier
-FROM agg
-""",
-)
-def engine_streaming_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full Structured Streaming engine (state store, micro-batch,
-    foreachBatch sink) over the per-user pipeline; the oracle is the
-    workflow's closed form.  Proves streaming == batch == SQL."""
-    return _streaming_fold(spark, sf_dir, use_tws=False)
-
-
-_TWS_ORACLE = _ORACLE_AGG + """
+_FOLD_ORACLE = _ORACLE_AGG + """
 SELECT 'user-' || CAST(user_id AS VARCHAR) AS wf_run_id,
        'COMPLETED' AS status,
        CAST(n_purch * 2 + n_click + 7 AS BIGINT) AS score,
@@ -75,20 +58,15 @@ FROM agg
 """
 
 
-@query("engine_streaming_fold_tws", oracle=_TWS_ORACLE)
-def engine_streaming_fold_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SAME end-to-end streaming fold under the
-    `transformWithStateInPandas` engine (`streaming/tws.py`: typed
-    state variables, RocksDB state store, per-timer callbacks —
-    the cleaner map of SchedulerProcessor.java:88-126), hash-checked
-    against the same closed-form oracle.  Proves the two stateful
-    engines are interchangeable AT RUNTIME, not just in fake-handle
-    parity tests."""
-    return _streaming_fold(spark, sf_dir, use_tws=True)
-
-
-def _streaming_fold(spark: SparkSession, sf_dir: str,
-                    use_tws: bool) -> DataFrame:
+# `engine_streaming_fold_tws` is a second registry name of the same
+# query: both names are part of the driver contract.
+@query("engine_streaming_fold_tws", oracle=_FOLD_ORACLE)
+@query("engine_streaming_fold", oracle=_FOLD_ORACLE)
+def engine_streaming_fold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The full Structured Streaming engine (RocksDB state store,
+    micro-batch, foreachBatch sink) over the per-user pipeline; the
+    oracle is the workflow's closed form.  Proves streaming == batch
+    == SQL."""
     workdir = tempfile.mkdtemp(prefix="engine-stream-q-")
     events_dir = f"{workdir}/events"
     _wf_events_from_users(spark, sf_dir).coalesce(_STREAM_PARTS) \
@@ -99,7 +77,6 @@ def _streaming_fold(spark: SparkSession, sf_dir: str,
         output_dir=f"{workdir}/out",
         executor=pipeline_executor,
         shuffle_partitions=_STREAM_PARTS,
-        use_tws=use_tws,
     )
     out = tagged.where(F.col("kind") == "snapshot").select(
         "wf_run_id", "status",

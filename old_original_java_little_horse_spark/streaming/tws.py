@@ -1,34 +1,25 @@
-"""The engine fold on `transformWithStateInPandas` (Spark 4's
-arbitrary-stateful-processing API) — the same semantics as
-`engine.make_update_fn`, expressed with typed state variables and
-per-timer native callbacks.
+"""The engine's per-run processor on `transformWithStateInPandas`
+(Spark 4's arbitrary-stateful-processing API): the pure fold
+(`engine/fold.py`) with typed state variables and per-timer native
+callbacks.  `engine.streaming_engine` wires it into a query.
 
-Why this API maps cleaner to the reference than
-`applyInPandasWithState` (SURVEY §3.2; carried VERDICT item):
+Why this API maps cleanly to the reference (SURVEY §3.2):
 
 - **Per-timer callbacks.**  `handle.registerTimer(ts)` registers one
   native timer per stored `WFRunTimer`; `handleExpiredTimer` fires for
   exactly that maturation — the reference's timer wheel
   (`SchedulerProcessor.java:88-126`: one punctuator visit per matured
-  timer) without the single-timeout re-arm dance the old API forces
-  (`engine.py` arms only the EARLIEST timer and must re-arm on every
-  invocation because any visit clears it).
+  timer).
 - **Typed state columns.**  The WFRun document and its bookkeeping
   live in a `ValueState`; pending timers are a `ListState` element
   each (the timer store), appended/cleared independently of the
   document instead of round-tripping one JSON blob of all timers.
 - **State removal.**  A drained tombstone deletes its state variables
-  (`clear()`), removing the key — the old API can only `remove()` on
-  a timeout path.
+  (`clear()`), removing the key.
 
-The fold itself (`engine/fold.py`), output schema, ordering, lateness,
-seq, eviction, and index-diff semantics are byte-identical — shared
-helpers `emit_ctx_rows` / `prepare_events` / `snapshot_row` /
-`index_diff_rows` come from `engine.py`, and the twin tests in
-`tests/test_streaming.py` run the same scenarios under both engines.
-
-Select it with `use_tws=True` on `streaming_engine` /
-`run_streaming_availablenow` / `start_continuous`.
+Output schema, ordering, lateness, seq and index-diff helpers
+(`emit_ctx_rows` / `prepare_events` / `snapshot_row` /
+`index_diff_rows`) come from `engine.py`.
 """
 
 from __future__ import annotations
@@ -37,17 +28,25 @@ import json
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
 from pyspark.sql.streaming.stateful_processor import (
     ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle, TimerValues,
 )
 
 from ..engine.fold import TaskExecutor, process_event
 from .engine import (
-    OUTPUT_SCHEMA, _timer_key, emit_ctx_rows, fire_matured_timers,
-    index_diff_rows, prepare_events, snapshot_row,
+    OUTPUT_SCHEMA, _timer_key, emit_ctx_rows, index_diff_rows,
+    prepare_events, snapshot_row,
 )
 
+# Engine bookkeeping lives in the state row, NOT inside the WFRun
+# JSON document: the document is the public surface (snapshots, index,
+# lhctl get) and must contain only reference fields.  `max_offset`
+# gives snapshots a monotonic sequence number (latest-wins selection
+# in the query layer); `max_event_ts` drives the lateness bound;
+# `tomb` marks an evicted terminal run (full document dropped, dedupe
+# marker retained: a duplicate WF_RUN_STARTED for an evicted run must
+# NOT restart it).  Pending timers are the separate `timers` list
+# state (the reference's timer store, SchedulerProcessor.java:56-60).
 _RUN_STATE_SCHEMA = ("state_json string, max_offset long, "
                      "max_event_ts long, tomb integer")
 _TIMER_STATE_SCHEMA = "payload string"
@@ -55,53 +54,18 @@ _TIMER_STATE_SCHEMA = "payload string"
 _COLS = [f.name for f in OUTPUT_SCHEMA.fields]
 
 
-def tws_runtime_available() -> bool:
-    """Spark's transformWithStateInPandas Python worker speaks a
-    protobuf state-server protocol — without `google.protobuf`
-    importable the query crashes at initialization
-    (STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE).  Feature-detect
-    so callers/tests gate cleanly, as with the Kafka integration
-    tests (broker required).  `protobuf_compat.ensure_protobuf`
-    first tries to RESOLVE a runtime (a pure-Python bundle shipped
-    with the host's gcloud SDK, exposed through a shim path) before
-    giving up — where it succeeds, the tws engine runs for real."""
-    from ..protobuf_compat import ensure_protobuf
-
-    return ensure_protobuf()
-
-
-def _export_worker_pythonpath(spark) -> None:
-    """transformWithStateInPandas starts a LONG-LIVED state-server
-    Python process through `StreamingPythonRunner`, which (unlike
-    task workers) does not consult the session's addPyFile includes —
-    its import path comes from the PYTHONPATH in the Python
-    function's captured env (`sc.environment`, snapshotted when the
-    UDF is wrapped).  Export this package's parent dir and, when the
-    protobuf fallback is active, the shim path, BEFORE the UDF is
-    created.  Driver-local paths are fine: the runner lives on the
-    driver node; ordinary executor workers are covered by
-    ship_package/ship_protobuf."""
-    import os
-    import pathlib
-
-    extra = [str(pathlib.Path(__file__).resolve().parents[2])]
-    try:
-        import google.protobuf as gp
-
-        extra.append(str(pathlib.Path(gp.__file__).resolve().parents[2]))
-    except ImportError:
-        pass
-    env = spark.sparkContext.environment
-    parts = [p for p in (env.get("PYTHONPATH") or
-                         os.environ.get("PYTHONPATH", "")).split(os.pathsep)
-             if p]
-    env["PYTHONPATH"] = os.pathsep.join(
-        dict.fromkeys(extra + parts))  # ordered de-dup
-
-
 class WFRunFoldProcessor(StatefulProcessor):
     """One instance per state partition; state accessors are per-key
-    (implicit grouping key, as with the reference's processor)."""
+    (implicit grouping key, as with the reference's processor).
+
+    `evict_completed`: once a run reaches COMPLETED and its final
+    snapshot is emitted, replace the state document with a tombstone.
+    Late/duplicate deliveries for the run are dropped (exactly-once
+    preserved) but the store no longer grows with run *history* —
+    only with run *count*, and `tombstone_ttl_ms` (native timers)
+    removes even the marker once the redelivery horizon passes.
+    HALTED runs are NOT evicted: WF_RUN_RESUME_REQUEST must find
+    their full document (fold.py resume semantics)."""
 
     def __init__(self, spec: dict, executor: TaskExecutor | None = None,
                  allowed_lateness_ms: int | None = None,
@@ -137,19 +101,30 @@ class WFRunFoldProcessor(StatefulProcessor):
     def _save(self, state, max_offset: int, max_event_ts: int,
               pending: list, out_rows: list, wf_run_id: str,
               old_aliases: set | None) -> None:
-        """Emit snapshot + index diffs, persist state, register one
-        native timer per pending WFRunTimer, tombstone terminal runs."""
+        """Emit the per-batch snapshot (S5, SchedulerTopology.java:74-87;
+        `seq` = max folded offset, a monotonic per-key version the
+        query layer orders by — file-scan order is NOT write order),
+        persist state, register one native timer per pending
+        WFRunTimer, tombstone terminal runs.
+
+        `old_aliases`: the run's alias set BEFORE this batch's events —
+        diffed against the new document to emit `kind='index'`
+        CREATE/DELETE changelog rows (ResourceIndexProcessor.java:41-131
+        semantics: the scheduler, which alone sees old+new state,
+        publishes index diffs; downstream compaction is latest-op-wins).
+        Index work per batch is O(changed runs), never O(index)."""
         if old_aliases is not None:
             index_diff_rows(out_rows, wf_run_id, old_aliases, state, max_offset)
         out_rows.append(snapshot_row(wf_run_id, state, max_offset))
         if self.evict_completed and state["status"] == "COMPLETED":
-            # Terminal run (one guard, one motion — see engine._store):
-            # stored timers are dead (stale-guarded no-ops), so drop
-            # them rather than block eviction on an unmatured
-            # task-timeout.  CRITICALLY, also delete every REGISTERED
-            # native timer: unlike GroupState's single replaceable
-            # timeout, this API keeps each registered expiry alive,
-            # and a leftover task-timeout firing on the tombstoned key
+            # Terminal run: stored timers are dead (the fold's stale
+            # guards no-op a timer against a terminal run), so drop
+            # them rather than block eviction — in replay mode (no
+            # timer callbacks) an unmatured task-timeout timer would
+            # otherwise pin the full document forever.  CRITICALLY,
+            # also delete every REGISTERED native timer: this API
+            # keeps each registered expiry alive, and a leftover
+            # task-timeout firing on the tombstoned key
             # would look exactly like the TTL expiry — wiping the
             # dedupe marker early (with ttl=None: a PERMANENT marker)
             # and re-opening the run to redelivered events.
@@ -181,12 +156,40 @@ class WFRunFoldProcessor(StatefulProcessor):
 
     def _fire_matured(self, wf_run_id: str, state, pending: list,
                       max_offset: int, now_ms: int, out_rows: list):
-        """Shared with the applyInPandasWithState engine — the firing
-        order is a cross-engine parity contract, so one implementation
-        (engine.fire_matured_timers) serves both twins."""
-        return fire_matured_timers(self.spec, self.executor, wf_run_id,
-                                   state, pending, max_offset, now_ms,
-                                   out_rows)
+        """Fold every matured stored timer as a TIMER_EVENT; firing can
+        create new timers (sequential SLEEPs), so loop to quiescence.
+        Synthetic offsets continue the per-key sequence (+1 each) so
+        snapshot `seq` stays monotonic."""
+        fired = False
+        while True:
+            matured = [t for t in pending
+                       if t["maturation_timestamp"] <= now_ms]
+            if not matured:
+                break
+            # Maturation order FIRST (thread/task ids only break ties):
+            # the reference punctuator range-scans [0, now] by
+            # maturation time (SchedulerProcessor), and the TimerPump
+            # replay path injects events whose offsets are the
+            # µs-scaled maturation timestamps — firing here in any
+            # other order could diverge from both when one timer's
+            # fold halts a thread whose own timer matured earlier.
+            for t in sorted(matured,
+                            key=lambda t: (t["maturation_timestamp"],
+                                           t["thread_run_id"],
+                                           t["task_run_id"])):
+                pending.remove(t)
+                max_offset += 1
+                ev = {
+                    "wf_run_id": wf_run_id, "event_type": "TIMER_EVENT",
+                    "thread_id": t["thread_run_id"],
+                    "timestamp": t["maturation_timestamp"],
+                    "offset": max_offset, "content": json.dumps(t),
+                }
+                state, ctx = process_event(self.spec, state, ev,
+                                           executor=self.executor)
+                emit_ctx_rows(out_rows, wf_run_id, ctx, pending)
+                fired = True
+        return state, pending, max_offset, fired
 
     # -- input path --------------------------------------------------------
 
@@ -266,46 +269,6 @@ class WFRunFoldProcessor(StatefulProcessor):
             self._save(state, max_offset, max_event_ts, pending,
                        out_rows, wf_run_id, old_aliases)
         # Not fired (early/stale callback): stored timers and their
-        # still-registered native timers are untouched — unlike the
-        # old API there is nothing to re-arm.
+        # still-registered native timers are untouched — nothing to
+        # re-arm.
         yield pd.DataFrame(out_rows, columns=_COLS)
-
-
-def streaming_engine_tws(events: DataFrame, spec: dict,
-                         executor: TaskExecutor | None = None,
-                         watermark_delay: str | None = None,
-                         allowed_lateness_ms: int | None = None,
-                         native_timers: bool = False,
-                         evict_completed: bool = False,
-                         tombstone_ttl_ms: int | None = None) -> DataFrame:
-    """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream,
-    via transformWithStateInPandas.  Same contract as
-    `engine.streaming_engine`."""
-    from pyspark.sql import functions as F
-
-    from ..session import ship_package
-
-    if not tws_runtime_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs the protobuf package "
-            "(google.protobuf) for its Python state server; install it or "
-            "use the applyInPandasWithState engine (use_tws=False)")
-    ship_package(events.sparkSession)
-    from ..protobuf_compat import ship_protobuf
-
-    ship_protobuf(events.sparkSession)
-    _export_worker_pythonpath(events.sparkSession)
-    if watermark_delay is not None:
-        events = events.withColumn(
-            "event_time", F.timestamp_millis(F.col("timestamp"))
-        ).withWatermark("event_time", watermark_delay)
-    processor = WFRunFoldProcessor(
-        spec, executor, allowed_lateness_ms=allowed_lateness_ms,
-        native_timers=native_timers, evict_completed=evict_completed,
-        tombstone_ttl_ms=tombstone_ttl_ms)
-    return events.groupBy("wf_run_id").transformWithStateInPandas(
-        statefulProcessor=processor,
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="ProcessingTime" if native_timers else "None",
-    )

@@ -1,0 +1,116 @@
+"""Checkpoints the engine cannot resume fail fast (`streaming/checkpoint.py`).
+
+Spark restores the state-store provider from a checkpoint on every
+restart, and the engine's processor needs RocksDB.  A checkpoint left
+by the removed applyInPandasWithState engine (HDFS-backed provider) is
+refused with a rebuild-by-replay message before any query starts, on
+every start path: `SparkEngineManager.deploy` (per-spec and shared)
+and `cli process`.  Fresh and RocksDB checkpoints start."""
+from __future__ import annotations
+
+import argparse
+import json
+from pathlib import Path
+
+import pytest
+
+from old_original_java_little_horse_spark.api.engines import SparkEngineManager
+from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
+from old_original_java_little_horse_spark.sdk.builder import Workflow
+from old_original_java_little_horse_spark.streaming.checkpoint import (
+    ROCKSDB_PROVIDER, StaleCheckpointError, check_engine_checkpoint,
+)
+
+_HDFS_OFFSETS = (
+    'v1\n{"batchWatermarkMs":0,"conf":{'
+    '"spark.sql.streaming.stateStore.providerClass":'
+    '"org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"}}'
+    "\n{}\n")
+_ROCKSDB_OFFSETS = _HDFS_OFFSETS.replace("HDFSBacked", "RocksDB")
+_REBUILD = "replaying the event log into a fresh checkpoint"
+
+
+def _mk_offsets(ckpt: Path, txt: str) -> None:
+    (ckpt / "offsets").mkdir(parents=True)
+    (ckpt / "offsets" / "0").write_text(txt)
+
+
+def _spec() -> dict:
+    wf = Workflow("greeter")
+    wf.thread("entrypoint").execute("greet", x="hi")
+    return wf.build()
+
+
+def test_checkpoint_provider_detection(tmp_path):
+    check_engine_checkpoint(str(tmp_path / "none"))  # no checkpoint yet
+    empty = tmp_path / "empty"
+    (empty / "offsets").mkdir(parents=True)
+    check_engine_checkpoint(str(empty))
+    rocks = tmp_path / "rocks"
+    _mk_offsets(rocks, _ROCKSDB_OFFSETS)
+    check_engine_checkpoint(str(rocks))
+    # offsets with no provider record: nothing to refuse on
+    bare = tmp_path / "bare"
+    _mk_offsets(bare, "v1\n{}\n{}\n")
+    check_engine_checkpoint(str(bare))
+    hdfs = tmp_path / "hdfs"
+    _mk_offsets(hdfs, _HDFS_OFFSETS)
+    with pytest.raises(StaleCheckpointError, match=_REBUILD) as e:
+        check_engine_checkpoint(str(hdfs))
+    assert "HDFSBackedStateStoreProvider" in str(e.value)
+
+
+@pytest.mark.parametrize("shared", [False, True], ids=["per-spec", "shared"])
+def test_deploy_refuses_pandas_state_checkpoint(spark, tmp_path, shared):
+    root = tmp_path / "engines"
+    _mk_offsets(root / ("_shared" if shared else "greeter") / "ckpt",
+                _HDFS_OFFSETS)
+    mgr = SparkEngineManager(spark, str(root), shared=shared)
+    try:
+        with pytest.raises(StaleCheckpointError, match=_REBUILD):
+            mgr.deploy(_spec())
+        assert mgr.handles() == []  # no query was started
+    finally:
+        mgr.stop_all()
+
+
+def test_cmd_process_checkpoints(spark, tmp_path, capsys):
+    """`cli process` starts on a fresh checkpoint, resumes its own
+    RocksDB checkpoint, and refuses one that a stateful query on
+    Spark's default (HDFS-backed) state store wrote — what the removed
+    applyInPandasWithState engine left behind."""
+    from old_original_java_little_horse_spark import cli
+
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(json.dumps(_spec()))
+    events = tmp_path / "events"
+    ckpt = tmp_path / "ckpt"
+
+    def process(wave: str, checkpoint: Path) -> list[str]:
+        row = (f"r-{wave}", "greeter", "greeter", "WF_RUN_STARTED", 0,
+               1000, 0, json.dumps({"variables": {}}))
+        spark.createDataFrame([row], schema=WF_EVENT_SCHEMA) \
+             .coalesce(1).write.parquet(str(events / wave))
+        return ["process", str(spec_file), "--events-dir", str(events),
+                "--snapshots-dir", str(tmp_path / "snaps"),
+                "--checkpoint-dir", str(checkpoint)]
+
+    assert cli.main(process("w1", ckpt)) == 0  # fresh
+    assert ROCKSDB_PROVIDER in (ckpt / "offsets" / "0").read_text()
+    assert cli.main(process("w2", ckpt)) == 0  # resumes RocksDB
+    assert "processed: 2 snapshots" in capsys.readouterr().out
+
+    stale = tmp_path / "stale"
+    (spark.readStream.schema(WF_EVENT_SCHEMA).parquet(str(events) + "/*")
+     .dropDuplicates(["wf_run_id"])
+     .writeStream.foreachBatch(lambda df, _bid: df.count())
+     .option("checkpointLocation", str(stale))
+     .trigger(availableNow=True).start().awaitTermination(120))
+    assert "HDFSBackedStateStoreProvider" in (stale / "offsets" / "0").read_text()
+    argv = process("w3", stale)
+    with pytest.raises(StaleCheckpointError, match=_REBUILD):
+        cli.cmd_process(argparse.Namespace(
+            spec=argv[1], events_dir=argv[3], snapshots_dir=argv[5],
+            checkpoint_dir=argv[7], executor=None))
+    assert cli.main(argv) == 2
+    assert _REBUILD in capsys.readouterr().err

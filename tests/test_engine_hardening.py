@@ -1,8 +1,9 @@
-"""Failure-edge hardening of the streaming update function (round-7
-review findings): poison-pill TIMER_EVENT content, pandas-nullified
-(NaN) offset/timestamp columns, and eviction of COMPLETED runs whose
-dead task-timeout timers would otherwise pin state forever in replay
-mode.  All pure-Python — no SparkSession needed."""
+"""Failure-edge hardening of the streaming processor (round-7 review
+findings): poison-pill TIMER_EVENT content, pandas-nullified (NaN)
+offset/timestamp columns, and eviction of COMPLETED runs whose dead
+task-timeout timers would otherwise pin state forever in replay mode.
+All pure-Python (a fake StatefulProcessorHandle) — no SparkSession
+needed."""
 
 from __future__ import annotations
 
@@ -13,32 +14,13 @@ import pandas as pd
 from old_original_java_little_horse_spark.sdk.builder import Workflow, lit
 from old_original_java_little_horse_spark.streaming.engine import (
     _ival,
-    make_update_fn,
     prepare_events,
 )
+from old_original_java_little_horse_spark.streaming.tws import (
+    WFRunFoldProcessor,
+)
 
-
-class FakeGroupState:
-    def __init__(self):
-        self._v = None
-        self.hasTimedOut = False
-
-    @property
-    def exists(self):
-        return self._v is not None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-    def remove(self):
-        self._v = None
-
-    def setTimeoutDuration(self, ms):
-        pass
+from .test_tws_engine import FakeHandle
 
 
 def _spec(timeout: int | None = None):
@@ -73,9 +55,17 @@ def _events(rid="r1"):
     ]
 
 
-def _drive(update, gs, events):
+def _processor(spec, **kw):
+    handle = FakeHandle()
+    proc = WFRunFoldProcessor(spec, **kw)
+    proc.init(handle)
+    return proc, handle
+
+
+def _drive(proc, events):
     rows = []
-    for res in update(("r1",), iter([pd.DataFrame(events)]), gs):
+    for res in proc.handleInputRows(("r1",), iter([pd.DataFrame(events)]),
+                                    None):
         rows.extend(res.to_dict("records"))
     return rows
 
@@ -84,15 +74,14 @@ def test_poison_timer_event_content_is_tolerated():
     """TIMER_EVENT content that is valid JSON but not an object
     ('123', '[1,2]', 'null') must not crash the micro-batch — a crash
     would replay from the checkpoint and crash forever."""
-    update = make_update_fn(_spec())
-    gs = FakeGroupState()
+    proc, _ = _processor(_spec())
     events = _events()
     for i, poison in enumerate(("123", "[1,2]", "null", "\"str\"")):
         events.append({
             "wf_run_id": "r1", "wf_spec_id": "s", "wf_spec_name": "s",
             "event_type": "TIMER_EVENT", "thread_id": 0,
             "timestamp": 1003 + i, "offset": 3 + i, "content": poison})
-    rows = _drive(update, gs, events)  # must not raise
+    rows = _drive(proc, events)  # must not raise
     snap = [r for r in rows if r["kind"] == "snapshot"][-1]
     assert json.loads(snap["payload"])["status"] == "COMPLETED"
 
@@ -103,8 +92,7 @@ def test_out_of_range_timer_ids_are_tolerated():
     it must be skipped, not raise IndexError/TypeError into the
     blanket handler and halt the run with INTERNAL_ERROR (ADVICE r7:
     the shape guard validated key presence but not range)."""
-    update = make_update_fn(_spec())
-    gs = FakeGroupState()
+    proc, _ = _processor(_spec())
     events = _events()
     bad_ids = [
         {"thread_run_id": 7, "task_run_id": 0},     # no such thread
@@ -121,7 +109,7 @@ def test_out_of_range_timer_ids_are_tolerated():
             "event_type": "TIMER_EVENT", "thread_id": 0,
             "timestamp": 1003 + i, "offset": 3 + i,
             "content": json.dumps(content)})
-    rows = _drive(update, gs, events)  # must not raise
+    rows = _drive(proc, events)  # must not raise
     snap = [r for r in rows if r["kind"] == "snapshot"][-1]
     assert json.loads(snap["payload"])["status"] == "COMPLETED"
 
@@ -153,23 +141,23 @@ def test_evict_completed_drops_dead_task_timeout_timers():
     tombstoned anyway — in replay mode (no timer wheel) nothing else
     ever drains the timer, and the full document would be pinned
     forever (round-7 review finding)."""
-    update = make_update_fn(_spec(timeout=3600), evict_completed=True)
-    gs = FakeGroupState()
-    rows = _drive(update, gs, _events())
+    proc, handle = _processor(_spec(timeout=3600), evict_completed=True)
+    rows = _drive(proc, _events())
     snap = [r for r in rows if r["kind"] == "snapshot"][-1]
     assert json.loads(snap["payload"])["status"] == "COMPLETED"
     # a timeout timer WAS created for the task...
     assert any(r["kind"] == "timer" for r in rows)
-    # ...and the stored state is nevertheless the tombstone
-    state_json, _off, _ts, pending_json, tomb = gs._v
+    # ...and the stored state is nevertheless the tombstone, with the
+    # dead timer dropped from the timer store
+    state_json, _off, _ts, tomb = handle.states["run"].get()
     assert tomb == 1 and state_json == ""
+    assert list(handle.states["timers"].get()) == []
 
 
 def test_completed_run_without_evict_keeps_document():
     """Control: without evict_completed the document stays readable."""
-    update = make_update_fn(_spec(timeout=3600), evict_completed=False)
-    gs = FakeGroupState()
-    _drive(update, gs, _events())
-    state_json, _off, _ts, _pending, tomb = gs._v
+    proc, handle = _processor(_spec(timeout=3600), evict_completed=False)
+    _drive(proc, _events())
+    state_json, _off, _ts, tomb = handle.states["run"].get()
     assert tomb == 0
     assert json.loads(state_json)["status"] == "COMPLETED"

@@ -1,15 +1,23 @@
-"""Unit tests for `pin_engine` — the checkpoint/engine compatibility
-pin shared by the manager's deploy paths and `cli.py cmd_process`
-(ADVICE r10: the process verb used to resume pre-flip pandas-state
-checkpoints with the tws default, which Spark rejects)."""
+"""A checkpoint resumes on the state store it was written on.
+
+Spark records the state-store provider in every committed offsets
+file and restores it on restart, so the provider of a checkpoint with
+no other marker is read from its offsets (`streaming/checkpoint.py`).
+The engine's processor resumes RocksDB checkpoints; one written by the
+removed applyInPandasWithState engine (HDFS-backed provider) is
+refused by `cli process` before any query starts."""
 from __future__ import annotations
 
 import json
 from pathlib import Path
 
-from old_original_java_little_horse_spark.api.engines import (
-    detect_checkpoint_engine,
-    pin_engine,
+import pytest
+
+from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
+from old_original_java_little_horse_spark.sdk.builder import Workflow
+from old_original_java_little_horse_spark.streaming.checkpoint import (
+    PROVIDER_CONF, ROCKSDB_PROVIDER, StaleCheckpointError,
+    check_engine_checkpoint,
 )
 
 _HDFS_OFFSETS = (
@@ -25,147 +33,55 @@ def _mk_offsets(ckpt: Path, txt: str = _HDFS_OFFSETS):
     (ckpt / "offsets" / "0").write_text(txt)
 
 
-def test_fresh_checkpoint_takes_default_and_stamps_marker(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    assert pin_engine(ckpt, default_tws=True) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
-    # The marker now outranks any different default.
-    assert pin_engine(ckpt, default_tws=False) is True
-
-
-def test_markerless_committed_checkpoint_pins_pandas_state(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt)
-    assert pin_engine(ckpt, default_tws=True) is False
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "pandas-state"
-
-
 def test_markerless_tws_checkpoint_detected_from_offsets(tmp_path):
-    """An r10-era `cli process` tws checkpoint has committed offsets
-    and NO marker — the providerClass Spark recorded in them must pin
-    it back to tws even when the caller asks for pandas-state."""
+    """A checkpoint with committed offsets and no marker file is
+    recognised from the providerClass Spark recorded in them: RocksDB
+    is accepted and nothing is written beside it; the HDFS-backed
+    default is refused."""
     ckpt = tmp_path / "ckpt"
     _mk_offsets(ckpt, _ROCKSDB_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
-    assert pin_engine(ckpt, default_tws=False) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
-
-
-def test_detection_tristate(tmp_path):
-    assert detect_checkpoint_engine(tmp_path / "none") is None  # fresh
+    check_engine_checkpoint(str(ckpt))
+    assert sorted(p.name for p in ckpt.iterdir()) == ["offsets"]
     hdfs = tmp_path / "hdfs"
     _mk_offsets(hdfs)
-    assert detect_checkpoint_engine(hdfs) is False
-    legacy = tmp_path / "legacy"
-    _mk_offsets(legacy, "{}")  # offsets without a provider record
-    assert detect_checkpoint_engine(legacy) is False
+    with pytest.raises(StaleCheckpointError):
+        check_engine_checkpoint(str(hdfs))
 
 
-def test_detection_reads_newest_offsets_numerically(tmp_path):
-    """ADVICE r11: offsets filenames are batch ids; lexicographic
-    order scans '9' before '10'.  Detection must read the genuinely
-    newest committed batch first — pinned here by making only batch 12
-    carry a provider record and planting a conflicting record in an
-    older batch."""
-    ckpt = tmp_path / "ckpt"
-    (ckpt / "offsets").mkdir(parents=True)
-    # batches 2 and 9 say HDFS; only the newest (12) says RocksDB — a
-    # provider flip can't happen in real life, which is exactly why
-    # the newest-first read order is the observable contract here.
-    (ckpt / "offsets" / "2").write_text(_HDFS_OFFSETS)
-    (ckpt / "offsets" / "9").write_text(_HDFS_OFFSETS)
-    (ckpt / "offsets" / "12").write_text(_ROCKSDB_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
-    # provider-less newest batch falls through to the next-newest
-    (ckpt / "offsets" / "13").write_text("v1\n{}\n{}\n")
-    assert detect_checkpoint_engine(ckpt) is True
-    # non-numeric names don't crash detection
-    (ckpt / "offsets" / "metadata-ish").write_text("v1\n{}\n{}\n")
-    assert detect_checkpoint_engine(ckpt) is True
-    # ADVICE r12: a stray non-numeric file CARRYING a provider record
-    # must not shadow the newest numeric batch — non-numeric names
-    # sort before every batch id, so batch 12's RocksDB record wins.
-    (ckpt / "offsets" / "zz-stray").write_text(_HDFS_OFFSETS)
-    assert detect_checkpoint_engine(ckpt) is True
-
-
-def test_custom_marker_location(tmp_path):
-    root = tmp_path / "root"
-    ckpt = root / "ckpt"
-    assert pin_engine(ckpt, default_tws=True, marker=root / "engine.json") is True
-    assert json.loads((root / "engine.json").read_text())["engine"] == "tws"
-    assert not (ckpt / "engine.json").exists()
-
-
-def test_unwritable_marker_is_benign_and_self_heals(tmp_path, monkeypatch):
-    """A lost marker is recoverable: the offsets record re-derives the
-    engine next boot, so a failed marker write must not fail the
-    deploy — and the later detection must return the TRUE engine."""
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt, _ROCKSDB_OFFSETS)
-
-    def boom(self, *a, **k):
-        raise OSError("read-only fs")
-
-    monkeypatch.setattr(Path, "write_text", boom)
-    assert pin_engine(ckpt, default_tws=False) is True  # detected tws
-    monkeypatch.undo()
-    assert not (ckpt / "engine.json").exists()
-    # next boot: no marker, offsets present -> detection heals the pin
-    assert pin_engine(ckpt, default_tws=False) is True
-    assert json.loads((ckpt / "engine.json").read_text())["engine"] == "tws"
-
-
-def test_marker_write_is_atomic(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    pin_engine(ckpt, default_tws=True)
-    # no orphan temp file left beside the marker
-    assert [p.name for p in ckpt.iterdir() if "tmp" in p.name] == []
-
-
-def test_corrupt_marker_falls_back_to_detection(tmp_path):
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt)
-    (ckpt / "engine.json").write_text("{not json")
-    assert pin_engine(ckpt, default_tws=True) is False
-
-
-def test_cmd_process_resumes_checkpoints_on_their_engine(spark, tmp_path, monkeypatch):
-    """The process verb must pass the PINNED engine, not its default."""
+def test_cmd_process_resumes_checkpoints_on_their_engine(spark, tmp_path):
+    """`cli process` refuses a pre-flip pandas-state checkpoint before
+    it writes anything, and resumes a RocksDB checkpoint on RocksDB
+    while the session's own provider conf stays untouched."""
     from old_original_java_little_horse_spark import cli
 
-    ckpt = tmp_path / "ckpt"
-    _mk_offsets(ckpt)  # pre-flip pandas-state checkpoint, no marker
-    events = tmp_path / "events"
-    events.mkdir()
+    wf = Workflow("greeter")
+    wf.thread("entrypoint").execute("greet", x="hi")
     spec_file = tmp_path / "spec.json"
-    spec_file.write_text(json.dumps({"name": "s", "thread_specs": {}}))
+    spec_file.write_text(json.dumps(wf.build()))
+    events = tmp_path / "events"
+    snaps = tmp_path / "snaps"
 
-    seen = {}
+    def args(wave: str, ckpt: Path):
+        row = (f"r-{wave}", "greeter", "greeter", "WF_RUN_STARTED", 0,
+               1000, 0, json.dumps({"variables": {}}))
+        spark.createDataFrame([row], schema=WF_EVENT_SCHEMA) \
+             .coalesce(1).write.parquet(str(events / wave))
+        return type("A", (), {
+            "spec": str(spec_file), "events_dir": str(events),
+            "snapshots_dir": str(snaps), "checkpoint_dir": str(ckpt),
+            "executor": None,
+        })()
 
-    def fake_run(spark, events_glob, spec, **kw):
-        seen.update(kw)
+    stale = tmp_path / "stale"
+    _mk_offsets(stale)  # pre-flip pandas-state checkpoint, no marker
+    with pytest.raises(StaleCheckpointError):
+        cli.cmd_process(args("w0", stale))
+    assert not snaps.exists()
+    assert sorted(p.name for p in stale.iterdir()) == ["offsets"]
 
-        class _DF:
-            def where(self, *_a):
-                return self
-
-            def count(self):
-                return 0
-
-        return _DF()
-
-    monkeypatch.setattr(cli, "_spark", lambda: None)
-    monkeypatch.setattr(
-        "old_original_java_little_horse_spark.streaming.engine.run_streaming_availablenow",
-        fake_run)
-    import pyspark.sql.functions  # noqa: F401  (imported inside cmd_process)
-
-    args = type("A", (), {
-        "spec": str(spec_file), "events_dir": str(events),
-        "snapshots_dir": str(tmp_path / "snaps"),
-        "checkpoint_dir": str(ckpt), "executor": None,
-        "engine": "tws", "tws": False,
-    })()
-    assert cli.cmd_process(args) == 0
-    assert seen["use_tws"] is False  # pinned, despite the tws default
+    session_provider = spark.conf.get(PROVIDER_CONF)
+    ckpt = tmp_path / "ckpt"
+    assert cli.cmd_process(args("w1", ckpt)) == 0
+    assert cli.cmd_process(args("w2", ckpt)) == 0  # resumes
+    assert ROCKSDB_PROVIDER in (ckpt / "offsets" / "1").read_text()
+    assert spark.conf.get(PROVIDER_CONF) == session_provider

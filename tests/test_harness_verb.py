@@ -18,10 +18,10 @@ def test_harness_subset_passes(spark):
 
 
 def test_harness_tws_engine(spark):
-    """--tws runs the embedded server's engines on the
-    transformWithStateInPandas runtime; one task-chain case pins the
-    flag end-to-end (the full 15-case tws sweep is the CLI's job)."""
-    rc = main(["test", "basic", "--tws"])
+    """One task-chain case alone through the embedded server, whose
+    engines run on transformWithStateInPandas (the full 15-case sweep
+    is the CLI's job)."""
+    rc = main(["test", "basic"])
     assert rc == 0
 
 

@@ -517,23 +517,19 @@ def test_http_metadata_deploy_run_query(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-@pytest.mark.parametrize("use_tws", [False, True],
-                         ids=["pandas-state", "tws"])
-def test_server_restart_recovers_specs_and_runs(spark, use_tws):
+def test_server_restart_recovers_specs_and_runs(spark):
     """Process restart: a fresh MetadataStore replays the changelog, the
     API redeploys every stored WFSpec (checkpoints + serving stores
     resume), old runs stay GETtable, and new runs fold — the reference's
-    restart-topologies-from-store behavior.  Runs on BOTH engines: the
-    tws leg is the restart/recovery half of its promotion soak
-    (VERDICT r9 item 4) — the resumed checkpoint must replay RocksDB
-    state, native timers, and the changelog identically."""
+    restart-topologies-from-store behavior.  The resumed checkpoint
+    must replay RocksDB state, native timers, and the changelog."""
     workdir = Path(tempfile.mkdtemp(prefix="http-restart-"))
     try:
         # -- process 1: deploy + run ----------------------------------
         store = MetadataStore(str(workdir / "meta"))
         mgr = SparkEngineManager(spark, str(workdir / "engines"),
                                  executor=_executor, trigger_seconds=0.2,
-                                 use_tws=use_tws, state_partitions=4)
+                                 state_partitions=4)
         api = LittleHorseAPI(spark, metadata=store, engines=mgr)
         srv = LittleHorseHTTPServer(api).start()
         try:
@@ -554,7 +550,7 @@ def test_server_restart_recovers_specs_and_runs(spark, use_tws):
         store2 = MetadataStore(str(workdir / "meta"))
         mgr2 = SparkEngineManager(spark, str(workdir / "engines"),
                                   executor=_executor, trigger_seconds=0.2,
-                                  use_tws=use_tws, state_partitions=4)
+                                  state_partitions=4)
         api2 = LittleHorseAPI(spark, metadata=store2, engines=mgr2)
         srv2 = LittleHorseHTTPServer(api2).start()
         try:
@@ -571,67 +567,6 @@ def test_server_restart_recovers_specs_and_runs(spark, use_tws):
             assert st == 200 and task0["stdout"] == "hi rey"
             st, runs = _req(srv2.port, "GET", "/wfruns")
             assert {r["id"] for r in runs} == {r1["id"], r2["id"]}
-        finally:
-            srv2.stop()
-            mgr2.stop_all()
-    finally:
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
-def test_restart_pins_pre_promotion_checkpoint_to_pandas_state(spark):
-    """Upgrade path for the r10 tws default flip: a deployment whose
-    checkpoint was created by the applyInPandasWithState engine BEFORE
-    the engine marker existed (no engine.json) must be resumed on
-    pandas-state, not the new tws default — a checkpoint cannot be
-    resumed by the other engine (different stateful operator and
-    state-store provider).  Fresh deployments take the default and
-    stamp the marker."""
-    import json as _json
-
-    workdir = Path(tempfile.mkdtemp(prefix="http-upgrade-"))
-    try:
-        # -- "old release": explicit pandas-state deployment ----------
-        store = MetadataStore(str(workdir / "meta"))
-        mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                                 executor=_executor, trigger_seconds=0.2,
-                                 use_tws=False, state_partitions=4)
-        api = LittleHorseAPI(spark, metadata=store, engines=mgr)
-        srv = LittleHorseHTTPServer(api).start()
-        try:
-            _req(srv.port, "POST", "/taskDef", {"name": "greet"})
-            st, _ = _req(srv.port, "POST", "/wfSpec", _greet_spec())
-            assert st == 201
-            st, r1 = _req(srv.port, "POST", "/wfrun",
-                          {"wf_spec_name": "greeter",
-                           "variables": {"who": "lin"}})
-            assert st == 201
-        finally:
-            srv.stop()
-            mgr.stop_all()
-        marker = workdir / "engines" / "greeter" / "engine.json"
-        assert _json.loads(marker.read_text())["engine"] == "pandas-state"
-        marker.unlink()  # simulate a pre-marker (pre-r10) deployment
-
-        # -- "new release": manager default is tws --------------------
-        store2 = MetadataStore(str(workdir / "meta"))
-        mgr2 = SparkEngineManager(spark, str(workdir / "engines"),
-                                  executor=_executor, trigger_seconds=0.2,
-                                  state_partitions=4)
-        assert mgr2.use_tws  # the promoted default
-        api2 = LittleHorseAPI(spark, metadata=store2, engines=mgr2)
-        srv2 = LittleHorseHTTPServer(api2).start()
-        try:
-            # pinned back to the checkpoint's engine, durably
-            assert _json.loads(marker.read_text())["engine"] == "pandas-state"
-            st, doc = _req(srv2.port, "GET", f"/wfrun/{r1['id']}")
-            assert st == 200 and doc["status"] == "COMPLETED"
-            st, r2 = _req(srv2.port, "POST", "/wfrun",
-                          {"wf_spec_name": "greeter",
-                           "variables": {"who": "rey"}})
-            assert st == 201
-            st, task0 = _req(srv2.port, "GET",
-                             f"/wfrun/{r2['id']}/taskRun/0/0")
-            assert st == 200 and task0["stdout"] == "hi rey"
         finally:
             srv2.stop()
             mgr2.stop_all()
@@ -836,23 +771,14 @@ def test_spec_rename_undeploys_old_engine(spark):
 
 
 def test_http_deploy_on_tws_engine(spark):
-    """The full product stack on the ALTERNATE stateful engine:
-    `SparkEngineManager(use_tws=True)` deploys the spec's continuous
-    query on `transformWithStateInPandas` (RocksDB state store,
-    per-timer callbacks) and the HTTP POST /wfrun → GET round-trip
-    completes identically — engine choice is an ops knob, not an API
-    change."""
-    from old_original_java_little_horse_spark.streaming.tws import (
-        tws_runtime_available,
-    )
-
-    if not tws_runtime_available():
-        pytest.skip("no google.protobuf runtime resolvable")
+    """The full product stack: `SparkEngineManager` deploys the spec's
+    continuous query on `transformWithStateInPandas` (RocksDB state
+    store, per-timer callbacks) and the HTTP POST /wfrun → GET
+    round-trip completes."""
     workdir = Path(tempfile.mkdtemp(prefix="http-tws-"))
     store = MetadataStore(str(workdir / "meta"))
     mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                             executor=_executor, trigger_seconds=0.2,
-                             use_tws=True)
+                             executor=_executor, trigger_seconds=0.2)
     api = LittleHorseAPI(spark, metadata=store, engines=mgr)
     srv = LittleHorseHTTPServer(api).start()
     try:
@@ -933,16 +859,10 @@ def test_run_engine_cache_is_bounded(spark):
 
 
 def test_shared_engine_with_tws(spark):
-    """The consolidated ops profile composed with the RocksDB-backed
-    transformWithState engine (`shared=True, use_tws=True`) — the
-    production pairing (one query, typed state + native timers) had
-    no test pinning that the scoped confs compose and serving rows
-    still route per spec."""
-    from old_original_java_little_horse_spark.streaming.tws import (
-        tws_runtime_available)
-
-    if not tws_runtime_available():
-        pytest.skip("no protobuf runtime for the TWS state server")
+    """The consolidated ops profile (`shared=True`) under a session
+    whose own shuffle-partition conf is scoped around the deploy: the
+    engine's scoped start confs (RocksDB provider, state partitions)
+    compose with it and serving rows still route per spec."""
     from old_original_java_little_horse_spark.session import scoped_conf
 
     workdir = Path(tempfile.mkdtemp(prefix="http-shared-tws-"))
@@ -950,7 +870,7 @@ def test_shared_engine_with_tws(spark):
     with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
         mgr = SparkEngineManager(spark, str(workdir / "engines"),
                                  executor=_executor, trigger_seconds=0.2,
-                                 shared=True, use_tws=True)
+                                 shared=True)
         api = LittleHorseAPI(spark, metadata=store, engines=mgr)
         srv = LittleHorseHTTPServer(api).start()
         try:

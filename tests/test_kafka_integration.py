@@ -51,7 +51,7 @@ def test_kafka_engine_end_to_end(spark, tmp_path):
         task_schedule_sink, wf_event_source,
     )
     from old_original_java_little_horse_spark.streaming.engine import (
-        streaming_engine,
+        start_engine_query, streaming_engine,
     )
 
     run = uuid.uuid4().hex[:8]
@@ -78,13 +78,13 @@ def test_kafka_engine_end_to_end(spark, tmp_path):
     # Engine: Kafka source → fold → Kafka task sink (+ parquet snaps).
     tagged = streaming_engine(
         wf_event_source(spark, BOOTSTRAP, events_topic), spec)
-    snaps_q = (
+    snaps_q = start_engine_query(
+        spark,
         tagged.where(F.col("kind") == "snapshot")
         .writeStream.format("parquet")
         .option("path", str(tmp_path / "snaps"))
-        .option("checkpointLocation", str(tmp_path / "ckpt-snaps"))
-        .trigger(availableNow=True).start()
-    )
+        .trigger(availableNow=True),
+        str(tmp_path / "ckpt-snaps"))
     sched_q = task_schedule_sink(
         tagged, BOOTSTRAP, str(tmp_path / "ckpt-sched"))
     snaps_q.awaitTermination(120)

@@ -228,8 +228,6 @@ def test_tws_tombstone_deletes_registered_timers():
 def test_tws_permanent_tombstone_survives_stale_expiry():
     """ttl=None = permanent marker: even a stale (pre-fix) timer
     firing on the tombstoned key must NOT clear it."""
-    from old_original_java_little_horse_spark.streaming import tws as T
-
     p = _tws_processor(ttl=None)
     p._run.update(("", 5, 5, 1))  # already tombstoned
 

@@ -1,6 +1,6 @@
 """Property tests for `streaming.engine.prepare_events` — the
-ordering / lateness / seq-advance contract BOTH stateful engines
-(applyInPandasWithState and transformWithState) rely on."""
+ordering / lateness / seq-advance contract the stateful processor
+relies on."""
 
 from __future__ import annotations
 

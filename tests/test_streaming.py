@@ -1,5 +1,5 @@
 """Streaming engine integration tests: the same fold under
-applyInPandasWithState must agree with the batch engine, including
+transformWithStateInPandas must agree with the batch engine, including
 state persisted across micro-batches."""
 
 from __future__ import annotations
@@ -192,7 +192,7 @@ def test_watermark_drops_late_events(spark):
     dropped before the fold (SURVEY §2.10 late-data bound)."""
     from old_original_java_little_horse_spark.sdk.builder import Workflow
     from old_original_java_little_horse_spark.streaming.engine import (
-        streaming_engine,
+        start_engine_query, streaming_engine,
     )
 
     wf = Workflow("wm")
@@ -227,12 +227,13 @@ def test_watermark_drops_late_events(spark):
 
         out_dir = str(workdir / "out")
 
-        q = (tagged.writeStream
-             .foreachBatch(lambda df, bid: df.write.mode("append").parquet(out_dir))
-             .outputMode("update")
-             .option("checkpointLocation", str(workdir / "ckpt"))
-             .trigger(availableNow=True)
-             .start())
+        q = start_engine_query(
+            spark,
+            tagged.writeStream
+            .foreachBatch(lambda df, bid: df.write.mode("append").parquet(out_dir))
+            .outputMode("update")
+            .trigger(availableNow=True),
+            str(workdir / "ckpt"))
         q.awaitTermination(300)
 
         snaps = [json.loads(r["payload"])

@@ -1,14 +1,13 @@
-"""transformWithStateInPandas engine (`streaming/tws.py`).
+"""The engine's transformWithStateInPandas processor (`streaming/tws.py`).
 
-The TWS Python worker needs `google.protobuf` (its state-server
-protocol); `protobuf_compat.ensure_protobuf` resolves a pure-Python
-runtime from the host where none is installed, so the full streaming
-twins RUN here — they still gate on `tws_runtime_available()` for
-hosts where no runtime can be found (like the Kafka broker tests).
-The processor's SEMANTICS are additionally proven everywhere via a
-fake StatefulProcessorHandle driving `handleInputRows` /
-`handleExpiredTimer` directly: same fold, same outputs, same state
-transitions as the applyInPandasWithState engine."""
+The live streaming tests run the real runtime (the TWS Python worker
+needs `google.protobuf`; `protobuf_compat.ensure_protobuf` resolves a
+pure-Python runtime from the host where none is installed, and the
+engine raises a clear RuntimeError where none can be found).  The
+processor's SEMANTICS are additionally proven via a fake
+StatefulProcessorHandle driving `handleInputRows` /
+`handleExpiredTimer` directly, against one sequential pass of the pure
+fold (`engine.fold.process_event`)."""
 
 from __future__ import annotations
 
@@ -18,15 +17,15 @@ import tempfile
 from pathlib import Path
 
 import pandas as pd
-import pytest
 
 from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
 from old_original_java_little_horse_spark.engine.batch_queries import (
     pipeline_executor, pipeline_spec,
 )
 from old_original_java_little_horse_spark.sdk.builder import Workflow
+from old_original_java_little_horse_spark.engine.fold import process_event
 from old_original_java_little_horse_spark.streaming.tws import (
-    WFRunFoldProcessor, tws_runtime_available,
+    WFRunFoldProcessor,
 )
 
 
@@ -112,39 +111,22 @@ def _start_event(run_id: str, variables: dict, offset: int = 0,
             "content": json.dumps({"variables": variables})}
 
 
-def test_fold_lifecycle_matches_apds_semantics():
+def test_fold_lifecycle_matches_pure_fold():
     """Full inline-executor run through the processor == the same
-    events through the applyInPandasWithState update fn (state doc,
-    snapshot seq, output kinds)."""
-    from pyspark.sql.streaming.state import GroupState  # noqa: F401
-    from old_original_java_little_horse_spark.streaming.engine import (
-        make_update_fn,
-    )
-
-    events = [_start_event("r1", {"n_purch": 2, "n_click": 5})]
+    event through the pure fold: one snapshot, carrying the fold's
+    document, at a positive seq."""
+    event = _start_event("r1", {"n_purch": 2, "n_click": 5})
 
     proc = WFRunFoldProcessor(pipeline_spec(), executor=pipeline_executor)
     proc.init(FakeHandle())
-    tws_rows = _drive(proc, "r1", events)
+    rows = _drive(proc, "r1", [dict(event)])
 
-    # Twin: the old engine's update fn with a minimal GroupState fake.
-    class FakeGroupState:
-        exists = False
-        hasTimedOut = False
-
-        def update(self, v):
-            self.v = v
-
-    update = make_update_fn(pipeline_spec(), pipeline_executor)
-    apds_rows = []
-    for res in update(("r1",), iter([pd.DataFrame(events)]), FakeGroupState()):
-        apds_rows.extend(res.to_dict("records"))
-
-    def snap(rows):
-        return [(r["seq"], r["payload"]) for r in rows if r["kind"] == "snapshot"]
-
-    assert snap(tws_rows) == snap(apds_rows)
-    state = json.loads(snap(tws_rows)[0][1])
+    want, _ctx = process_event(pipeline_spec(), None, dict(event),
+                               executor=pipeline_executor)
+    snaps = [r for r in rows if r["kind"] == "snapshot"]
+    assert len(snaps) == 1 and snaps[0]["seq"] > 0
+    state = json.loads(snaps[0]["payload"])
+    assert state == json.loads(json.dumps(want))
     assert state["status"] == "COMPLETED"
     assert state["thread_runs"][0]["variables"]["score"] == 2 * 2 + 5 + 7
 
@@ -235,12 +217,9 @@ def test_stale_timer_callback_is_noop():
     assert handle.states["run"].get() == before
 
 
-@pytest.mark.skipif(not tws_runtime_available(),
-                    reason="google.protobuf not installed — TWS Python "
-                           "state server cannot start in this sandbox")
 def test_tws_streaming_twin_matches_batch(spark):
     """Full Structured Streaming run under transformWithStateInPandas
-    (runs only where protobuf exists)."""
+    equals the workflow's closed form."""
     from old_original_java_little_horse_spark.streaming.engine import (
         run_streaming_availablenow,
     )
@@ -257,7 +236,7 @@ def test_tws_streaming_twin_matches_batch(spark):
             spark, str(events_dir) + "/*", pipeline_spec(),
             checkpoint_dir=str(workdir / "ckpt"),
             output_dir=str(workdir / "out"),
-            executor=pipeline_executor, use_tws=True)
+            executor=pipeline_executor)
         snaps = [r for r in tagged.collect() if r["kind"] == "snapshot"]
         assert len(snaps) == 1 and snaps[0]["status"] == "COMPLETED"
         state = json.loads(snaps[0]["payload"])
@@ -266,9 +245,6 @@ def test_tws_streaming_twin_matches_batch(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-@pytest.mark.skipif(not tws_runtime_available(),
-                    reason="no google.protobuf runtime resolvable — TWS "
-                           "Python state server cannot start on this host")
 def test_tws_native_timer_fires_live(spark):
     """ST2 under the REAL tws runtime: a stored SLEEP's WFRunTimer is
     armed as ONE native timer (`handle.registerTimer`) and
@@ -294,7 +270,7 @@ def test_tws_native_timer_fires_live(spark):
     q = start_continuous(
         spark, str(events_dir) + "/*", spec,
         checkpoint_dir=str(workdir / "ckpt"), output_dir=str(out_dir),
-        trigger_seconds=0.2, use_tws=True,
+        trigger_seconds=0.2,
     )
     try:
         now = int(time.time() * 1000)
@@ -327,61 +303,54 @@ def test_tws_native_timer_fires_live(spark):
 
 
 # ---------------------------------------------------------------------------
-# Engine-equivalence fuzz: ANY interleaving, ANY micro-batch slicing
+# Processor vs pure fold: ANY interleaving, ANY micro-batch slicing
 # ---------------------------------------------------------------------------
 
-def test_engines_agree_on_random_interleavings_and_batchings():
-    """The two stateful engines (applyInPandasWithState update fn vs
-    the tws processor) must emit IDENTICAL output-row streams for any
-    event interleaving AND any micro-batch slicing of it — the
-    runtime twin (`engine_streaming_fold_tws`) proves one scenario
-    end-to-end; this fuzzes the semantic surface across the fold
+_EVENT_COLS = ["wf_run_id", "wf_spec_id", "wf_spec_name", "event_type",
+               "thread_id", "timestamp", "offset", "content"]
+
+
+def test_processor_matches_pure_fold_on_random_interleavings_and_batchings():
+    """For any event interleaving AND any micro-batch slicing of it,
+    the processor's output equals ONE sequential pass of the pure fold
+    (`engine.fold.process_event`) over the same events: the same
+    task-schedule and timer rows in the same order, one snapshot per
+    batch that leaves a run, the last one carrying the fold's final
+    document, strictly increasing `seq`, and an index changelog that
+    replays to the final document's alias set.  Fuzzed across the fold
     property pool (garbage events, duplicates, interrupts, stops,
     retries, timers)."""
     import copy
 
     from hypothesis import given, settings, strategies as st
 
+    from old_original_java_little_horse_spark.operators.run_index import (
+        doc_aliases,
+    )
     from old_original_java_little_horse_spark.streaming.engine import (
-        make_update_fn,
+        emit_ctx_rows,
     )
     from .test_fold_properties import SPEC, event_pool
 
-    class FakeGroupState:
-        def __init__(self):
-            self._v = None
-            self.hasTimedOut = False
-
-        @property
-        def exists(self):
-            return self._v is not None
-
-        @property
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-        def remove(self):
-            self._v = None
-
-        def setTimeoutDuration(self, ms):
-            pass
+    def norm(rows):
+        # pandas NaN (float cols) != NaN under dict equality
+        return [{k: (None if isinstance(v, float) and v != v else v)
+                 for k, v in r.items()} for r in rows]
 
     @settings(max_examples=75, deadline=None)
     @given(st.data())
     def run(data):
         pool = event_pool()
         n = data.draw(st.integers(min_value=1, max_value=14))
-        seq = [copy.deepcopy(pool[i]) for i in
-               data.draw(st.lists(st.integers(0, len(pool) - 1),
-                                  min_size=n, max_size=n))]
-        for i, ev in enumerate(seq):
+        seq = []
+        for i, idx in enumerate(data.draw(st.lists(
+                st.integers(0, len(pool) - 1), min_size=n, max_size=n))):
+            ev = copy.deepcopy(pool[idx])
             ev["offset"] = i
             # the streaming column is always a JSON string
             if isinstance(ev.get("content"), dict):
                 ev["content"] = json.dumps(ev["content"])
+            seq.append({c: ev.get(c) for c in _EVENT_COLS})
         # random micro-batch boundaries (sorted unique cut points)
         cuts = sorted(set(data.draw(st.lists(
             st.integers(1, max(1, n - 1)), max_size=4))))
@@ -391,23 +360,41 @@ def test_engines_agree_on_random_interleavings_and_batchings():
                 batches.append(seq[lo:c])
                 lo = c
 
-        update = make_update_fn(SPEC, evict_completed=False)
-        gs = FakeGroupState()
-        apds_rows: list[dict] = []
         proc = WFRunFoldProcessor(SPEC, evict_completed=False)
         proc.init(FakeHandle())
-        tws_rows: list[dict] = []
+        got: list[dict] = []
         for batch in batches:
-            pdf = pd.DataFrame(batch)
-            for res in update(("r1",), iter([pdf.copy()]), gs):
-                apds_rows.extend(res.to_dict("records"))
-            for res in proc.handleInputRows(("r1",), iter([pdf.copy()]), None):
-                tws_rows.extend(res.to_dict("records"))
-        def norm(rows):
-            # pandas NaN (float cols) != NaN under dict equality
-            return [{k: (None if isinstance(v, float) and v != v else v)
-                     for k, v in r.items()} for r in rows]
+            for res in proc.handleInputRows(
+                    ("r1",), iter([pd.DataFrame(batch)]), None):
+                got.extend(norm(res.to_dict("records")))
 
-        assert norm(tws_rows) == norm(apds_rows)
+        state, want_emitted, runs_after = None, [], []
+        for batch in batches:
+            for ev in batch:
+                state, ctx = process_event(SPEC, state, dict(ev))
+                emit_ctx_rows(want_emitted, "r1", ctx, [])
+            runs_after.append(state is not None)
+
+        emitted = [r for r in got if r["kind"] in ("task_schedule", "timer")]
+        assert emitted == norm(want_emitted)
+        snaps = [r for r in got if r["kind"] == "snapshot"]
+        assert len(snaps) == sum(runs_after)
+        seqs = [r["seq"] for r in snaps]
+        assert seqs == sorted(set(seqs))
+        aliases: set = set()
+        for r in got:
+            if r["kind"] == "index":
+                op = json.loads(r["payload"])
+                pair = (op["key"], op["value"])
+                if op["op"] == "CREATE":
+                    aliases.add(pair)
+                else:
+                    aliases.discard(pair)
+        if state is None:
+            assert snaps == [] and aliases == set()
+        else:
+            assert json.loads(snaps[-1]["payload"]) == \
+                json.loads(json.dumps(state))
+            assert aliases == doc_aliases(state)
 
     run()

@@ -65,7 +65,7 @@ def _bulk_produce(events_dir: str, spec_name: str, n: int,
 
 
 def probe(spark, n: int, trigger_seconds: float = 0.5,
-          state_partitions: int = 8, use_tws: bool = False) -> dict:
+          state_partitions: int = 8) -> dict:
     from old_original_java_little_horse_spark.harness.cases import all_cases
     from old_original_java_little_horse_spark.harness.executor import execute
     from old_original_java_little_horse_spark.sinks.serving import (
@@ -85,8 +85,7 @@ def probe(spark, n: int, trigger_seconds: float = 0.5,
         serving_dirs={spec["name"]: serving_dir},
         executor=execute,
         trigger_seconds=trigger_seconds,
-        state_partitions=state_partitions,
-        use_tws=use_tws)
+        state_partitions=state_partitions)
     try:
         # Warm up (codegen + Python workers + batch-0 schema stamp)
         # with one throwaway run, then barrier on it: the barrier
@@ -218,8 +217,6 @@ def main() -> None:
     ap.add_argument("--cells", type=int, nargs="*", default=[],
                     help="extra state_partitions cells probed at the "
                          "largest N (the sizing-table knob sweep)")
-    ap.add_argument("--tws", action="store_true",
-                    help="probe the transformWithStateInPandas engine")
     ap.add_argument("--parts", type=int, default=8,
                     help="state_partitions for the --ns step runs")
     ap.add_argument("--out", default=None)
@@ -231,7 +228,7 @@ def main() -> None:
 
     def run_one(n: int, parts: int | None = None) -> dict:
         parts = args.parts if parts is None else parts
-        r = probe(spark, n, state_partitions=parts, use_tws=args.tws)
+        r = probe(spark, n, state_partitions=parts)
         print(f"  N={n} parts={parts}: wall {r['wall_s']}s, "
               f"{r['fold_ev_per_s']} ev/s, "
               f"batch med/max {r['batch_s_median']}/{r['batch_s_max']}s, "
@@ -250,8 +247,7 @@ def main() -> None:
         print(f"| {r['n_runs']} | {r['wall_s']} | {r['fold_ev_per_s']} "
               f"| {r['batch_s_median']} | {r['batch_s_max']} "
               f"| {r['barrier_ms_p50']} |")
-    out = {"metric": "engine_scale_probe", "steps": steps,
-           "engine": "tws" if args.tws else "applyInPandasWithState"}
+    out = {"metric": "engine_scale_probe", "steps": steps}
     if cells:
         out[f"state_partition_cells_n{args.ns[-1]}"] = cells
     if len(steps) >= 2 and steps[0]["batch_s_max"] and steps[-1]["batch_s_max"]:
