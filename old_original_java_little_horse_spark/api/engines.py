@@ -36,16 +36,18 @@ class EngineHandle:
 
 
 class SparkEngineManager:
-    """Deploys/undeploys one continuous engine per WFSpec name.
+    """Deploys/undeploys one continuous engine per WFSpec name, under
+    `base_dir/<name>/{events,ckpt,out,serving}`.
 
     `shared=True` selects the consolidated ops profile (SURVEY §7):
     ONE continuous query serves every deployed spec through the
     fold's multi-spec registry (`fold.make_spec_registry`) — one
     checkpoint and one state store instead of N, while serving
-    stores stay per spec so the HTTP read paths are unchanged.  A
-    deploy/undeploy restarts the shared query over the same
-    checkpoint; Structured Streaming resumes offsets + state, so
-    in-flight runs of other specs carry on.
+    stores stay per spec so the HTTP read paths are unchanged
+    (`base_dir/_shared/{events,ckpt,out}` plus
+    `base_dir/<name>/serving`).  A deploy/undeploy restarts the shared
+    query over the same checkpoint; Structured Streaming resumes
+    offsets + state, so in-flight runs of other specs carry on.
 
     Shared-mode contracts: (1) run ids share ONE keyspace across
     specs (the reference namespaces them per spec topic; the HTTP
@@ -84,46 +86,62 @@ class SparkEngineManager:
         # (2.9 s vs 7.4 s) — or pass None for the session conf.
         self.state_partitions = state_partitions
         self._engines: dict[str, EngineHandle] = {}
-        self._specs: dict[str, dict] = {}  # shared mode: deployed specs
+        self._specs: dict[str, dict] = {}  # deployed specs by name
         # Serializes deploy/undeploy: metadata.post() calls on_change
         # OUTSIDE its own lock, so two concurrent POST /wfSpec handler
         # threads reach deploy() together — un-serialized, the shared
         # mode would start TWO streaming queries over the one shared
         # checkpoint (corruption Spark forbids), and per-spec mode
-        # could leak a never-stopped query for the same name.  RLock:
-        # deploy/undeploy call _shared_restart internally.
-        self._lock = threading.RLock()
+        # could leak a never-stopped query for the same name.
+        self._lock = threading.Lock()
 
-    # -- shared-mode plumbing ------------------------------------------------
+    def _group(self, name: str) -> str:
+        """The engine (and base-dir entry) spec `name` runs in."""
+        return "_shared" if self.shared else name
 
-    def _shared_restart(self) -> None:
-        """(Re)start the single shared query over all deployed specs."""
-        from ..streaming.engine import start_continuous_shared
+    def _restart(self, group: str) -> None:
+        """Stop `group`'s query, then start one over the specs deployed
+        in it (none left: it stays stopped).  The stop comes first —
+        two queries may not share a checkpoint — and the new query
+        resumes the same checkpoint's offsets and state.
 
-        for h in self._engines.values():
-            if h.query is not None:
-                h.query.stop()
-        self._engines.clear()
-        if not self._specs:
+        `shared` decides only what the fold receives (the spec, or a
+        registry of every deployed spec) and how serving rows are
+        routed (all to the spec's store, or attributed per spec)."""
+        from ..engine.fold import make_spec_registry
+        from ..streaming.engine import start_continuous
+
+        for name in [n for n in self._engines if self._group(n) == group]:
+            self._engines.pop(name).query.stop()
+        specs = {n: s for n, s in self._specs.items()
+                 if self._group(n) == group}
+        if not specs:
             return
-        root = self.base_dir / "_shared"
-        events_dir = root / "events"
-        events_dir.mkdir(parents=True, exist_ok=True)
-        serving_dirs = {name: str(self.base_dir / name / "serving")
-                        for name in self._specs}
-        query = start_continuous_shared(
-            self.spark, str(events_dir) + "/*", list(self._specs.values()),
+        root = self.base_dir / group
+        (root / "events").mkdir(parents=True, exist_ok=True)
+        serving_dirs = {n: str(self.base_dir / n / "serving") for n in specs}
+        if self.shared:
+            # Direct (non-HTTP) callers may pass specs without the
+            # metadata-stamped id; the registry needs one to pin runs.
+            specs = {n: {"id": n, **s} for n, s in specs.items()}
+            fold_spec = make_spec_registry(list(specs.values()))
+            route = {"serving_dirs": serving_dirs}
+        else:
+            fold_spec = specs[group]
+            route = {"serving_dir": serving_dirs[group]}
+        query = start_continuous(
+            self.spark, str(root / "events") + "/*", fold_spec,
             checkpoint_dir=str(root / "ckpt"),
             output_dir=str(root / "out"),
-            serving_dirs=serving_dirs,
             executor=self.executor,
             trigger_seconds=self.trigger_seconds,
             state_partitions=self.state_partitions,
+            **route,
         )
-        for name, spec in self._specs.items():
+        for name, spec in specs.items():
             self._engines[name] = EngineHandle(
                 spec=spec,
-                events_dir=str(events_dir),
+                events_dir=str(root / "events"),
                 output_dir=str(root / "out"),
                 serving_dir=serving_dirs[name],
                 query=query,
@@ -134,84 +152,39 @@ class SparkEngineManager:
         Raises `streaming.checkpoint.StaleCheckpointError` when the
         checkpoint was left by the removed applyInPandasWithState
         engine (shared mode too): it must be rebuilt by replay."""
-        from ..streaming.engine import start_continuous
-
-        name = spec["name"]
-        with self._lock:
-            if self.shared:
-                # Direct (non-HTTP) callers may pass specs without the
-                # metadata-stamped id; the registry needs one to pin runs.
-                spec = dict(spec)
-                spec.setdefault("id", name)
-                self._specs[name] = spec
-                self._shared_restart()
-                return self._engines[name]
-            old = self._engines.pop(name, None)
-            if old is not None:
-                old.query.stop()
-            root = self.base_dir / name
-            events_dir = root / "events"
-            events_dir.mkdir(parents=True, exist_ok=True)
-            handle = EngineHandle(
-                spec=spec,
-                events_dir=str(events_dir),
-                output_dir=str(root / "out"),
-                serving_dir=str(root / "serving"),
-                query=start_continuous(
-                    self.spark, str(events_dir) + "/*", spec,
-                    checkpoint_dir=str(root / "ckpt"),
-                    output_dir=str(root / "out"),
-                    serving_dir=str(root / "serving"),
-                    executor=self.executor,
-                    trigger_seconds=self.trigger_seconds,
-                    state_partitions=self.state_partitions,
-                ),
-            )
-            self._engines[name] = handle
-            return handle
+        return self.deploy_many([spec])[0]
 
     def deploy_many(self, specs: list[dict]) -> list[EngineHandle]:
         """Deploy a batch of specs — the boot-recovery path.  In
         shared mode this is ONE query restart for the whole batch
         instead of N sequential stop/recover/start cycles (each of
         which replays the checkpoint)."""
-        if not specs:
-            return []
         with self._lock:
-            if self.shared:
-                for spec in specs:
-                    spec = dict(spec)
-                    spec.setdefault("id", spec["name"])
-                    self._specs[spec["name"]] = spec
-                self._shared_restart()
-                return [self._engines[s["name"]] for s in specs]
-            return [self.deploy(s) for s in specs]
+            for spec in specs:
+                self._specs[spec["name"]] = spec
+            for group in dict.fromkeys(self._group(s["name"]) for s in specs):
+                self._restart(group)
+            return [self._engines[s["name"]] for s in specs]
 
     def undeploy(self, name: str, purge: bool = False) -> None:
-        """Stop serving `name`.  `purge` removes the spec's
-        SERVING/metadata directory; in shared mode the run STATE
-        (snapshots folded into the shared checkpoint, tombstones,
-        pending timers) necessarily survives — it lives in the one
-        shared state store, where per-spec deletion isn't expressible.
-        Consequences, documented as shared-mode contract #3: a later
-        spec of the same name inherits old runs' tombstones (reused
-        run ids are dropped as duplicates — GUID run ids make this
-        moot) and a still-pending timer for an old run can fold a
-        fresh snapshot into the new deployment's serving store.  The
-        per-spec mode's purge removes checkpoint and state wholesale."""
+        """Stop serving `name`.  `purge` removes the spec's directory:
+        per spec that is checkpoint, state, changelog and serving
+        store wholesale.  In shared mode the run STATE (snapshots
+        folded into the shared checkpoint, tombstones, pending timers)
+        necessarily survives — it lives in the one shared state store,
+        where per-spec deletion isn't expressible — and only the
+        spec's serving store goes.  Consequences, documented as
+        shared-mode contract #3: a later spec of the same name
+        inherits old runs' tombstones (reused run ids are dropped as
+        duplicates — GUID run ids make this moot) and a still-pending
+        timer for an old run can fold a fresh snapshot into the new
+        deployment's serving store."""
         with self._lock:
-            if self.shared:
-                if self._specs.pop(name, None) is not None:
-                    self._shared_restart()  # remaining specs carry on
-                    if purge:
-                        shutil.rmtree(self.base_dir / name,
-                                      ignore_errors=True)
+            if self._specs.pop(name, None) is None:
                 return
-            handle = self._engines.pop(name, None)
-            if handle is not None:
-                handle.query.stop()
-                if purge:
-                    shutil.rmtree(self.base_dir / name, ignore_errors=True)
+            self._restart(self._group(name))  # other specs carry on
+            if purge:
+                shutil.rmtree(self.base_dir / name, ignore_errors=True)
 
     def get(self, name: str) -> EngineHandle | None:
         return self._engines.get(name)  # single dict read: GIL-atomic
@@ -224,9 +197,7 @@ class SparkEngineManager:
 
     def stop_all(self) -> None:
         with self._lock:
-            if self.shared:
-                self._specs.clear()
-                self._shared_restart()  # no specs left → stops the query
-                return
-            for name in list(self._engines):
-                self.undeploy(name)
+            groups = {self._group(n) for n in self._engines}
+            self._specs.clear()
+            for group in groups:
+                self._restart(group)  # no specs left: stops the query

@@ -390,17 +390,26 @@ def cmd_process(args) -> int:
     # A checkpoint of the removed applyInPandasWithState engine is
     # refused before the query starts (StaleCheckpointError).
     spark = _spark()
-    tagged = run_streaming_availablenow(
+    out = Path(args.snapshots_dir)
+    before = set(out.glob("*.parquet"))
+    run_streaming_availablenow(
         spark, str(Path(args.events_dir)) + "/*", spec,
         checkpoint_dir=args.checkpoint_dir,
         output_dir=args.snapshots_dir,
         executor=executor,
     )
-    import pyspark.sql.functions as F
+    # Count what THIS invocation folded: the changelog files it added,
+    # not the whole --snapshots-dir an earlier run also appended to.
+    added = sorted(str(p) for p in set(out.glob("*.parquet")) - before)
+    runs = tasks = 0
+    if added:
+        import pyspark.sql.functions as F
 
-    n = tagged.where(F.col("kind") == "snapshot").count()
-    s = tagged.where(F.col("kind") == "task_schedule").count()
-    print(f"processed: {n} snapshots, {s} pending task schedules")
+        kind = F.col("kind")
+        runs, tasks = spark.read.parquet(*added).agg(
+            F.countDistinct(F.when(kind == "snapshot", F.col("wf_run_id"))),
+            F.count(F.when(kind == "task_schedule", 1))).first()
+    print(f"processed: {runs} runs, {tasks} pending task schedules")
     return 0
 
 
@@ -618,25 +627,19 @@ def cmd_serve(args) -> int:
         mod_name, _, attr = args.executor.partition(":")
         executor = getattr(importlib.import_module(mod_name), attr)
 
-    # Trigger/partition profile.  The measured defaults (200 ms x
-    # parts=4) are the serving optimum of tools/latency_sweep.py;
-    # --latency-profile is the sweep's 100 ms x parts=4 cell (~150 ms
-    # better round-trip p50 for ~2x idle checkpoint commits — for
-    # latency-critical deployments that accept the idle-commit cost),
-    # and --state-partitions exposes the backfill knob (32 drained a
-    # 50k-run backlog 4.3x faster than 4 at +0.8 s barrier in
-    # tools/engine_scale_probe.py).  Explicit flags beat the profile.
-    trigger_ms = args.trigger_ms
-    if trigger_ms is None:
-        trigger_ms = 100 if args.latency_profile else 200
-    parts = args.state_partitions if args.state_partitions is not None else 4
+    # Unset flags leave the manager's measured defaults (200 ms x 4
+    # state partitions, the serving optimum of tools/latency_sweep.py).
+    knobs = {}
+    if args.trigger_ms is not None:
+        knobs["trigger_seconds"] = args.trigger_ms / 1000.0
+    if args.state_partitions is not None:
+        knobs["state_partitions"] = args.state_partitions
 
     spark = _spark()
     base = Path(args.base_dir)
     mgr = SparkEngineManager(spark, str(base / "engines"), executor=executor,
                              shared=bool(getattr(args, "shared", False)),
-                             trigger_seconds=trigger_ms / 1000.0,
-                             state_partitions=parts)
+                             **knobs)
     api = LittleHorseAPI(spark, metadata=MetadataStore(str(base / "meta")),
                          engines=mgr)
     srv = LittleHorseHTTPServer(api, host=args.host, port=args.port).start()
@@ -821,14 +824,10 @@ def main(argv: list[str] | None = None) -> int:
     sv.add_argument("--shared", action="store_true",
                     help="one shared engine for all specs (one checkpoint/"
                          "state store; per-spec serving stores)")
-    sv.add_argument("--latency-profile", action="store_true",
-                    help="latency-critical preset: 100 ms trigger x 4 "
-                         "state partitions (~150 ms better task "
-                         "round-trip p50 for ~2x idle checkpoint "
-                         "commits; measured in tools/latency_sweep.py)")
     sv.add_argument("--trigger-ms", type=int, default=None,
                     help="micro-batch trigger interval (default 200; "
-                         "overrides --latency-profile)")
+                         "100 trades ~2x idle checkpoint commits for "
+                         "~150 ms better task round-trip p50)")
     sv.add_argument("--state-partitions", type=int, default=None,
                     help="state-store shuffle partitions (default 4 = "
                          "serving optimum; 32 drains big backlogs "

@@ -57,6 +57,12 @@ Two stores, same motion:
   CREATE replayed later can never resurrect a dropped alias
   (`ResourceIndexProcessor.java:41-131` compaction semantics), and
   filtered out at read time.
+
+Each batch commits the alias store BEFORE the snapshot store, so a run
+that is GETtable is already searchable: during a catch-up, a run read
+as COMPLETED must not still miss from `/search` on its variables.  A
+failure between the two commits leaves the run searchable but not yet
+GETtable, and the redelivered batch commits both.
 """
 
 from __future__ import annotations
@@ -542,25 +548,26 @@ def aliases_dir(serving_dir: str) -> str:
 
 def upsert_serving_stores(batch_df: DataFrame, serving_dir: str,
                           n_buckets: int | None = None) -> None:
-    """Maintain both compacted stores from one tagged micro-batch.
+    """Maintain both compacted stores from one tagged micro-batch, the
+    alias store first (see the module docstring).
 
     `n_buckets` applies only when a store is first created; existing
     stores keep their creation-time fanout (see `_store_nbuckets`).
     """
-    snaps = (batch_df.where(F.col("kind") == "snapshot")
-             .select("wf_run_id", "status", "seq",
-                     F.col("payload").alias("state_json")))
-    # No isEmpty() pre-checks: _upsert's size probe doubles as the
-    # emptiness check, so an empty side costs one job, not two.
-    _upsert(snaps, snapshots_dir(serving_dir),
-            key_cols=["wf_run_id"], bucket_on="wf_run_id",
-            order_spec=[("seq", False)],
-            n_buckets=n_buckets)
     idx = index_changelog(batch_df).withColumn(
         "kv", F.concat_ws("\x1f", "key", "value"))
+    # No isEmpty() pre-checks: _upsert's size probe doubles as the
+    # emptiness check, so an empty side costs one job, not two.
     _upsert(idx, aliases_dir(serving_dir),
             key_cols=["object_id", "key", "value"], bucket_on="kv",
             order_spec=[("seq", False), ("op", False)],
+            n_buckets=n_buckets)
+    snaps = (batch_df.where(F.col("kind") == "snapshot")
+             .select("wf_run_id", "status", "seq",
+                     F.col("payload").alias("state_json")))
+    _upsert(snaps, snapshots_dir(serving_dir),
+            key_cols=["wf_run_id"], bucket_on="wf_run_id",
+            order_spec=[("seq", False)],
             n_buckets=n_buckets)
 
 
@@ -578,13 +585,6 @@ def upsert_serving_stores_arrow(tbl, serving_dir: str,
     import pandas as pd
 
     pdf = tbl.to_pandas(types_mapper=pd.ArrowDtype)
-    snaps = pdf[pdf["kind"] == "snapshot"][
-        ["wf_run_id", "status", "seq", "payload"]
-    ].rename(columns={"payload": "state_json"})
-    if len(snaps):
-        _upsert_pdf(snaps, snapshots_dir(serving_dir),
-                    key_cols=["wf_run_id"], bucket_on="wf_run_id",
-                    order_spec=[("seq", False)], n_buckets=n_buckets)
     idx_src = pdf[pdf["kind"] == "index"]
     if len(idx_src):
         parsed = [json.loads(p) for p in idx_src["payload"]]
@@ -605,6 +605,13 @@ def upsert_serving_stores_arrow(tbl, serving_dir: str,
                     bucket_on="kv",
                     order_spec=[("seq", False), ("op", False)],
                     n_buckets=n_buckets)
+    snaps = pdf[pdf["kind"] == "snapshot"][
+        ["wf_run_id", "status", "seq", "payload"]
+    ].rename(columns={"payload": "state_json"})
+    if len(snaps):
+        _upsert_pdf(snaps, snapshots_dir(serving_dir),
+                    key_cols=["wf_run_id"], bucket_on="wf_run_id",
+                    order_spec=[("seq", False)], n_buckets=n_buckets)
 
 
 def _upsert_pdf(pdf, store_dir: str, key_cols: list[str], bucket_on: str,
@@ -656,21 +663,6 @@ def has_snapshots(serving_dir: str) -> bool:
     return _load_manifest(snapshots_dir(serving_dir)) is not None
 
 
-def _read_point(spark: SparkSession, store_dir: str,
-                key: str) -> DataFrame | None:
-    """Resolve `key`'s bucket in the committed manifest and return
-    that ONE immutable directory (the manifest lookup IS the partition
-    pruning), or None when the store/bucket has no data."""
-    manifest = _load_manifest(store_dir)
-    if manifest is None:
-        return None
-    b = _bucket_of(key, _store_nbuckets(store_dir))
-    rel = manifest["buckets"].get(str(b))
-    if rel is None:
-        return None
-    return _read_bucket_dir(spark, store_dir, rel, b)
-
-
 def _point_dir(store_dir: str, key: str) -> str | None:
     """Committed directory holding `key`'s bucket, or None."""
     manifest = _load_manifest(store_dir)
@@ -688,8 +680,8 @@ def read_snapshot_rows(serving_dir: str, run_id: str) -> list[dict]:
     serve path (`store.get(objectId)` against local RocksDB,
     APIStreamsContext.java:62-83): a point lookup is a storage read,
     not a cluster computation.  Measured ~10 ms vs ~300-900 ms for
-    the DataFrame path's job; the DataFrame variants below remain for
-    joins and analytics."""
+    the DataFrame path's job; `read_all_snapshots` remains for joins
+    and analytics."""
     import pyarrow.parquet as pq
 
     path = _point_dir(snapshots_dir(serving_dir), run_id)
@@ -793,18 +785,6 @@ def search_alias_ids(serving_dir: str, key: str, value: str) -> list[str]:
     return [r["object_id"] for r in tbl.to_pylist()]
 
 
-def read_snapshot(spark: SparkSession, serving_dir: str,
-                  run_id: str) -> DataFrame:
-    """Point lookup: one immutable bucket directory, then the key."""
-    sdir = snapshots_dir(serving_dir)
-    df = _read_point(spark, sdir, run_id)
-    if df is None:
-        return spark.createDataFrame(
-            [], "wf_run_id string, status string, state_json string")
-    return (df.where(F.col("wf_run_id") == run_id)
-            .select("wf_run_id", "status", "state_json"))
-
-
 def read_all_snapshots(spark: SparkSession, serving_dir: str) -> DataFrame:
     """Full compacted table — one row per run, no windowing needed."""
     sdir = snapshots_dir(serving_dir)
@@ -818,17 +798,3 @@ def read_all_snapshots(spark: SparkSession, serving_dir: str) -> DataFrame:
                 .select("wf_run_id", "status", "state_json"))
         out = part if out is None else out.unionByName(part)
     return out
-
-
-def search_aliases(spark: SparkSession, serving_dir: str,
-                   key: str, value: str) -> DataFrame:
-    """(key, value) → live object ids; one bucket read, tombstones
-    filtered."""
-    kv = key + "\x1f" + value
-    adir = aliases_dir(serving_dir)
-    df = _read_point(spark, adir, kv)
-    if df is None:
-        return spark.createDataFrame([], "wf_run_id string")
-    return (df.where((F.col("key") == key) & (F.col("value") == value)
-                     & (F.col("op") == "CREATE"))
-            .select(F.col("object_id").alias("wf_run_id")))

@@ -10,9 +10,10 @@ as one big parquet file becomes one giant batch — correct and
 sub-linear (ENGINE_SCALE_r12: 1M events, one 190 s batch), but a new
 run POSTed behind it waits the whole fold.  Kafka's knob for this is
 `maxOffsetsPerTrigger`; the file source's `maxFilesPerTrigger` twin
-(now a `start_continuous*` parameter) caps by FILE and cannot split
-one big file, and FIFO file admission would still queue a new
-command behind every backlog file.
+(kept only on the `run_streaming_availablenow` replay; the live start
+reads uncapped) caps by FILE and cannot split one big file, and FIFO
+file admission would still queue a new command behind every backlog
+file.
 
 `CatchUpAdmission` is the row-granular, latency-preserving
 equivalent, implemented SOURCE-SIDE (upstream of the stateful

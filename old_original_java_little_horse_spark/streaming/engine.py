@@ -27,6 +27,11 @@ streaming query:
   completes with no further input.  Replay paths keep timers as
   emitted `kind='timer'` rows + explicit TIMER_EVENTs (deterministic:
   no wall-clock reads), served by the legacy `TimerPump` when needed.
+- The live engine has ONE start, `start_continuous`, and one sink,
+  for both deployment modes: a per-spec engine folds its spec and
+  upserts one serving store; a shared engine folds a multi-spec
+  registry and attributes serving rows to per-spec stores.  Replays
+  and backfills run through `run_streaming_availablenow`.
 - Every engine query starts through `start_engine_query`, which sets
   the RocksDB state store the processor needs and refuses checkpoints
   it cannot resume.
@@ -319,11 +324,11 @@ def _append_output_arrow(tbl, output_dir: str) -> None:
 
 
 def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
-    """Driver-side twin of the shared sink's attribution + per-spec
-    upsert for a collected small batch: each row joins to its run's
-    spec via the batch's own snapshot payloads (the processor emits a
-    snapshot row in every invocation that emits index rows, so every
-    serving-relevant run has one in-batch)."""
+    """Shared-engine serving upsert of a collected small batch: each
+    row joins to its run's spec via the batch's own snapshot payloads
+    (the processor emits a snapshot row in every invocation that emits
+    index rows, so every serving-relevant run has one in-batch); rows
+    of a spec with no store here are dropped."""
     import pyarrow as pa
 
     from ..sinks.serving import upsert_serving_stores_arrow
@@ -342,6 +347,33 @@ def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
             upsert_serving_stores_arrow(
                 pa.Table.from_pandas(pdf[specs == name],
                                      preserve_index=False), sdir)
+
+
+def _upsert_shared(batch_df: DataFrame, serving_dirs: dict[str, str]) -> None:
+    """Distributed twin of `_upsert_shared_arrow` for large batches: a
+    broadcast join of the batch against its own snapshot rows
+    attributes every row to its spec without widening OUTPUT_SCHEMA,
+    then one upsert per spec present in the batch."""
+    from ..sinks.serving import upsert_serving_stores
+
+    run_spec = (batch_df.where(F.col("kind") == "snapshot")
+                .select("wf_run_id",
+                        F.get_json_object("payload", "$.wf_spec_name")
+                        .alias("_spec"))
+                .distinct())
+    attributed = (batch_df.join(F.broadcast(run_spec), "wf_run_id", "left")
+                  .persist())
+    try:
+        for r in attributed.select("_spec").distinct().collect():
+            sdir = serving_dirs.get(r["_spec"])
+            if sdir is not None:
+                upsert_serving_stores(
+                    attributed.where(F.col("_spec") == r["_spec"])
+                    .drop("_spec"), sdir)
+    finally:
+        # A failed upsert re-enters on retry; without the finally each
+        # attempt would leak a cached copy of the attributed batch.
+        attributed.unpersist()
 
 
 def start_engine_query(spark: SparkSession, writer, checkpoint_dir: str,
@@ -396,26 +428,39 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                      checkpoint_dir: str, output_dir: str,
                      executor: TaskExecutor | None = None,
                      trigger_seconds: float = 0.5,
-                     native_timers: bool = True,
-                     evict_completed: bool = True,
-                     tombstone_ttl_ms: int | None = None,
                      serving_dir: str | None = None,
-                     state_partitions: int | None = None,
-                     max_files_per_trigger: int | None = None):
+                     serving_dirs: dict[str, str] | None = None,
+                     state_partitions: int | None = None):
     """Start the engine as a continuously-running query (ProcessingTime
-    trigger ~ the reference's 1 s punctuator cadence, Constants.java:36).
+    trigger ~ the reference's 1 s punctuator cadence, Constants.java:36)
+    and return the StreamingQuery handle.
 
-    The live path defaults to self-contained timers (a SLEEP completes
-    with no external pump and no further input — Spark keeps scheduling
-    micro-batches while processing-time timers are registered) and to
-    tombstone eviction of COMPLETED runs.  Returns the StreamingQuery
-    handle.
+    Timers are self-contained (a SLEEP completes with no external pump
+    and no further input: Spark keeps scheduling micro-batches while
+    processing-time timers are registered) and COMPLETED runs are
+    tombstoned.
 
-    `serving_dir`: also maintain the compacted point-lookup stores
-    (`sinks/serving.py` — the reference's materialized RocksDB serving
-    layer, APIStreamsContext.java:62-83) from each micro-batch; GETs
-    then read one bucket partition instead of re-windowing the raw
-    changelog.
+    `spec` is what the fold receives: one WFSpec for a per-spec engine,
+    or `fold.make_spec_registry(specs)` for ONE engine serving every
+    deployed spec (SURVEY §7 ops profile: 100 specs should not need
+    100 checkpoints/state stores).  A registry resolves each run's
+    pinned spec per event (`fold.resolve_spec`); the events directory
+    is then the shared event topic (rows carry `wf_spec_name`).
+
+    Serving (the compacted point-lookup stores of `sinks/serving.py`,
+    the reference's materialized RocksDB layer,
+    APIStreamsContext.java:62-83) is maintained from each micro-batch
+    in one of two ways:
+
+    - `serving_dir`: every row goes to that one store.  A per-spec
+      engine uses this; its run documents carry the EVENT's
+      `wf_spec_name`, so attributing by payload could misroute them.
+    - `serving_dirs` (spec name → store): each row is attributed to
+      its run's spec through the batch's own snapshot payloads, and a
+      row whose spec has no store here is dropped — a timer left by
+      an undeployed spec's run still emits a snapshot.  The driver
+      loop is over specs PRESENT IN THE BATCH; at 100s of specs you
+      would instead add a spec partition column to the store root.
 
     `state_partitions`: right-size the engine's state-store fanout
     (fixed at FIRST query start from `spark.sql.shuffle.partitions`;
@@ -429,20 +474,12 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     analytic fanout or more; a serving-latency deployment wants few.
     Scoped to this query's start — the session default is restored.
 
-    `max_files_per_trigger`: the file source's coarse admission cap
-    (Kafka's `maxOffsetsPerTrigger` twin at FILE granularity) — with
-    one-file-per-command production it bounds how much of a restart
-    backlog any single micro-batch folds, keeping batch time (and so
-    the read-your-writes barrier) bounded during catch-up.  FIFO file
-    order is preserved, so a live command still queues behind
-    remaining backlog files; for row-granular pacing that keeps new
-    runs at idle-grade latency, wrap the bulk import in
+    Admission is uncapped: every file visible at a trigger's start is
+    folded (see await_read_your_writes).  Pace a bulk import through
     `streaming.admission.CatchUpAdmission` instead (source-side)."""
-    events = _event_stream(spark, events_dir, max_files_per_trigger)
+    events = _event_stream(spark, events_dir, None)
     tagged = streaming_engine(events, spec, executor=executor,
-                              native_timers=native_timers,
-                              evict_completed=evict_completed,
-                              tombstone_ttl_ms=tombstone_ttl_ms)
+                              native_timers=True, evict_completed=True)
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # ONE count materializes the batch into the cache and gates
@@ -462,20 +499,24 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                 return
             if 0 < cnt <= _SMALL_BATCH_ROWS:
                 # Small live batch: collect ONCE from the cache and do
-                # changelog append + both serving upserts driver-side —
+                # changelog append + serving upserts driver-side —
                 # one Spark job total instead of three, the dominant
                 # term in command round-trip latency.  At-least-once
                 # append semantics are unchanged (a Spark re-append on
                 # batch redelivery duplicates rows the same way).
-                from ..sinks.serving import upsert_serving_stores_arrow
-
                 tbl = batch_df.toArrow()
                 _append_output_arrow(tbl, output_dir)
-                if serving_dir is not None:
+                if serving_dirs is not None:
+                    _upsert_shared_arrow(tbl, serving_dirs)
+                elif serving_dir is not None:
+                    from ..sinks.serving import upsert_serving_stores_arrow
+
                     upsert_serving_stores_arrow(tbl, serving_dir)
                 return
             batch_df.write.mode("append").parquet(output_dir)
-            if serving_dir is not None:
+            if serving_dirs is not None:
+                _upsert_shared(batch_df, serving_dirs)
+            elif serving_dir is not None:
                 from ..sinks.serving import upsert_serving_stores
 
                 upsert_serving_stores(batch_df, serving_dir)
@@ -485,102 +526,11 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
             # copy per attempt into executor storage memory.
             batch_df.unpersist()
 
-    q = start_engine_query(
+    return start_engine_query(
         spark,
         tagged.writeStream.foreachBatch(sink).outputMode("update")
         .trigger(processingTime=f"{trigger_seconds} seconds"),
         checkpoint_dir, state_partitions)
-    q._lh_capped_admission = max_files_per_trigger is not None
-    return q
-
-
-def start_continuous_shared(spark: SparkSession, events_dir: str,
-                            specs: list[dict], checkpoint_dir: str,
-                            output_dir: str, serving_dirs: dict[str, str],
-                            executor: TaskExecutor | None = None,
-                            trigger_seconds: float = 0.5,
-                            state_partitions: int | None = None,
-                            max_files_per_trigger: int | None = None):
-    """ONE engine for ALL deployed specs (SURVEY §7 ops profile: 100
-    specs should not need 100 checkpoints/state stores).
-
-    The reference deploys one scheduler app per WFSpec
-    (`Scheduler.java:29-47`); this is the consolidated alternative the
-    fold already supports: the processor receives a
-    `make_spec_registry` dict and each run resolves its pinned spec
-    per event (`fold.resolve_spec`).  One events directory (the shared
-    event topic — rows carry `wf_spec_name`), one checkpoint, one
-    state store; serving stays PER SPEC.
-
-    Per-spec serving routing: the processor emits a snapshot row in
-    every invocation that emits index rows (`_save`), and the
-    snapshot payload carries `wf_spec_name` — so a broadcast join of
-    the batch against its own snapshot rows attributes every serving
-    row to its spec without widening OUTPUT_SCHEMA.  The driver loop
-    is over specs PRESENT IN THE BATCH (bounded by deployed-spec
-    count); at 100s of specs you would instead add a spec partition
-    column to the store root — same motion, one pass.
-    """
-    from ..engine.fold import make_spec_registry
-
-    registry = make_spec_registry(specs)
-    events = _event_stream(spark, events_dir, max_files_per_trigger)
-    tagged = streaming_engine(events, registry, executor=executor,
-                              native_timers=True, evict_completed=True)
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from ..sinks.serving import upsert_serving_stores
-
-        batch_df.persist()
-        attributed = None
-        try:
-            # Idle-trigger short-circuit — same rationale as the
-            # per-spec sink above (batch 0 stamps the output schema).
-            cnt = batch_df.count()
-            if cnt == 0 and batch_id > 0:
-                return
-            if 0 < cnt <= _SMALL_BATCH_ROWS:
-                # Small live batch: one collection, then append +
-                # per-spec attribution + upserts driver-side (the
-                # per-spec sink's motion; attribution joins each row
-                # to its run's snapshot-payload wf_spec_name).
-                tbl = batch_df.toArrow()
-                _append_output_arrow(tbl, output_dir)
-                _upsert_shared_arrow(tbl, serving_dirs)
-                return
-            batch_df.write.mode("append").parquet(output_dir)
-            run_spec = (
-                batch_df.where(F.col("kind") == "snapshot")
-                .select("wf_run_id",
-                        F.get_json_object("payload", "$.wf_spec_name")
-                        .alias("_spec"))
-                .distinct())
-            attributed = (batch_df
-                          .join(F.broadcast(run_spec), "wf_run_id", "left")
-                          .persist())
-            present = [r["_spec"] for r in
-                       attributed.select("_spec").distinct().collect()
-                       if r["_spec"] is not None]
-            for name in present:
-                sdir = serving_dirs.get(name)
-                if sdir is not None:
-                    upsert_serving_stores(
-                        attributed.where(F.col("_spec") == name)
-                        .drop("_spec"), sdir)
-        finally:
-            # A failed upsert re-enters on retry; the finally keeps
-            # each attempt from leaking two cached copies of the batch.
-            if attributed is not None:
-                attributed.unpersist()
-            batch_df.unpersist()
-
-    q = start_engine_query(
-        spark,
-        tagged.writeStream.foreachBatch(sink).outputMode("update")
-        .trigger(processingTime=f"{trigger_seconds} seconds"),
-        checkpoint_dir, state_partitions)
-    q._lh_capped_admission = max_files_per_trigger is not None
-    return q
 
 
 def await_read_your_writes(query, timeout: float = 60.0) -> None:
@@ -591,26 +541,14 @@ def await_read_your_writes(query, timeout: float = 60.0) -> None:
     the produce offset, 50 ms at a time
     (`APIStreamsContext.java:168-222`, poll at 200-203).  On a
     micro-batch engine the equivalent is: wait for a completed trigger
-    that *started* after this call and *listed the source fresh*.  An
-    UNCAPPED continuous query (the default) consumes every file
+    that *started* after this call and *listed the source fresh*.  The
+    live query's admission is uncapped, so it consumes every file
     visible at a trigger's start — including this call's write —
     whether it read zero rows (someone else's batch already drained
-    it) or many (it carried the write itself).
-
-    When the starter capped admission (`max_files_per_trigger`, the
-    coarse catch-up knob — stamped as `_lh_capped_admission`), a
-    post-write trigger may have taken only older backlog files, so
-    "started after the call" proves nothing.  The sufficient capped
-    condition is a post-write batch with ZERO input rows: under FIFO
-    file admission an empty batch means the source listing was empty,
-    i.e. every earlier file — this write included — was already
-    consumed.  That makes the barrier wait out the whole backlog,
-    which is exactly what a capped FIFO source means; deployments
-    that need idle-grade POST latency during catch-up should pace the
-    backlog through `streaming.admission.CatchUpAdmission` (spooled
-    events become barrier-visible only after release — call its
-    `drain()` first when barriering on a spooled key) and leave the
-    reader uncapped.
+    it) or many (it carried the write itself).  Events spooled by
+    `streaming.admission.CatchUpAdmission` become barrier-visible
+    only after release: call its `drain()` first when barriering on a
+    spooled key.
 
     Two progress entries must NOT satisfy the barrier:
 
@@ -633,15 +571,13 @@ def await_read_your_writes(query, timeout: float = 60.0) -> None:
       had no committed offsets at start): a fresh run cannot begin
       with a recovery replay, so the head batch is trusted like any
       other.  Without this, an engine that schedules batches only on
-      input (native_timers=False — the pump/replay deployments) would
-      starve the FIRST post-start barrier forever: the write's own
-      batch is the head, and no successor ever fires.
+      input would starve the FIRST post-start barrier forever: the
+      write's own batch is the head, and no successor ever fires.
     """
     import time as _time
     from datetime import datetime, timezone
 
     trust_head = getattr(query, "_lh_fresh_start", False)
-    capped = getattr(query, "_lh_capped_admission", False)
     t0 = datetime.now(timezone.utc)
     deadline = _time.monotonic() + timeout
     while _time.monotonic() < deadline:
@@ -651,10 +587,8 @@ def await_read_your_writes(query, timeout: float = 60.0) -> None:
             started = datetime.strptime(
                 p["timestamp"], "%Y-%m-%dT%H:%M:%S.%fZ"
             ).replace(tzinfo=timezone.utc)
-            if (started > t0
-                    and (trust_head
-                         or p["batchId"] > recent[0]["batchId"])
-                    and (not capped or p.get("numInputRows", 0) == 0)):
+            if started > t0 and (trust_head
+                                 or p["batchId"] > recent[0]["batchId"]):
                 return
         _time.sleep(0.05)  # the reference's 50 ms poll
     raise TimeoutError("read-your-writes barrier timed out")

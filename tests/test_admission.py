@@ -283,18 +283,19 @@ def test_engine_catchup_import_bounded_batches(spark):
     mid-drain folds without waiting out the whole backlog, and every
     backlog run completes.  Also validates the real on-disk
     `commits/` + `sources/0/` format the parser reads."""
+    from old_original_java_little_horse_spark.engine.fold import make_spec_registry
     from old_original_java_little_horse_spark.harness.cases import all_cases
     from old_original_java_little_horse_spark.harness.executor import execute
     from old_original_java_little_horse_spark.streaming.engine import (
-        await_read_your_writes, start_continuous_shared)
+        await_read_your_writes, start_continuous)
 
     spec = all_cases()["basic"].spec
     workdir = Path(tempfile.mkdtemp(prefix="adm-engine-"))
     ev_dir = workdir / "events"
     ev_dir.mkdir()
     ckpt = workdir / "ckpt"
-    q = start_continuous_shared(
-        spark, str(ev_dir) + "/*", [spec],
+    q = start_continuous(
+        spark, str(ev_dir) + "/*", make_spec_registry([spec]),
         checkpoint_dir=str(ckpt),
         output_dir=str(workdir / "out"),
         serving_dirs={spec["name"]: str(workdir / "serving")},

@@ -97,8 +97,11 @@ def test_cmd_process_checkpoints(spark, tmp_path, capsys):
 
     assert cli.main(process("w1", ckpt)) == 0  # fresh
     assert ROCKSDB_PROVIDER in (ckpt / "offsets" / "0").read_text()
+    assert "processed: 1 runs, 1 pending task schedules" in capsys.readouterr().out
     assert cli.main(process("w2", ckpt)) == 0  # resumes RocksDB
-    assert "processed: 2 snapshots" in capsys.readouterr().out
+    # Counts only what this invocation folded (wave 2's one run), not
+    # the snapshots dir wave 1 also appended to.
+    assert "processed: 1 runs, 1 pending task schedules" in capsys.readouterr().out
 
     stale = tmp_path / "stale"
     (spark.readStream.schema(WF_EVENT_SCHEMA).parquet(str(events) + "/*")

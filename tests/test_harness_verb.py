@@ -17,13 +17,5 @@ def test_harness_subset_passes(spark):
     assert rc == 0
 
 
-def test_harness_tws_engine(spark):
-    """One task-chain case alone through the embedded server, whose
-    engines run on transformWithStateInPandas (the full 15-case sweep
-    is the CLI's job)."""
-    rc = main(["test", "basic"])
-    assert rc == 0
-
-
 def test_unknown_case_rejected():
     assert main(["test", "not-a-case"]) == 2

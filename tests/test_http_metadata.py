@@ -649,8 +649,13 @@ def test_shared_engine_two_specs(spark):
     """SURVEY §7 consolidated ops profile: TWO specs deployed into ONE
     shared engine (`SparkEngineManager(shared=True)`) — a single
     streaming query + checkpoint serves both, with per-spec serving
-    stores, entirely through the HTTP deploy path.  Undeploying one
-    spec leaves the other's runs GETtable and foldable."""
+    stores, entirely through the HTTP deploy path.  The deploys run
+    under a caller's own scoped shuffle-partition conf, which the
+    engine's scoped start confs (RocksDB provider, state partitions)
+    must compose with.  Undeploying one spec leaves the other's runs
+    GETtable and foldable."""
+    from old_original_java_little_horse_spark.session import scoped_conf
+
     workdir = Path(tempfile.mkdtemp(prefix="http-shared-"))
     store = MetadataStore(str(workdir / "meta"))
     mgr = SparkEngineManager(spark, str(workdir / "engines"),
@@ -662,10 +667,14 @@ def test_shared_engine_two_specs(spark):
         port = srv.port
         _req(port, "POST", "/taskDef", {"name": "greet"})
         _req(port, "POST", "/taskDef", {"name": "double"})
-        st, _ = _req(port, "POST", "/wfSpec", _greet_spec())
-        assert st == 201
-        st, spec2 = _req(port, "POST", "/wfSpec", _double_spec())
-        assert st == 201
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
+            st, _ = _req(port, "POST", "/wfSpec", _greet_spec())
+            assert st == 201
+            st, spec2 = _req(port, "POST", "/wfSpec", _double_spec())
+            assert st == 201
+            # the engine's start restored the caller's scope, not the
+            # session default
+            assert spark.conf.get("spark.sql.shuffle.partitions") == "8"
 
         # ONE query object behind both handles; one shared events dir
         g, d = mgr.get("greeter"), mgr.get("doubler")
@@ -770,37 +779,6 @@ def test_spec_rename_undeploys_old_engine(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_http_deploy_on_tws_engine(spark):
-    """The full product stack: `SparkEngineManager` deploys the spec's
-    continuous query on `transformWithStateInPandas` (RocksDB state
-    store, per-timer callbacks) and the HTTP POST /wfrun → GET
-    round-trip completes."""
-    workdir = Path(tempfile.mkdtemp(prefix="http-tws-"))
-    store = MetadataStore(str(workdir / "meta"))
-    mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                             executor=_executor, trigger_seconds=0.2)
-    api = LittleHorseAPI(spark, metadata=store, engines=mgr)
-    srv = LittleHorseHTTPServer(api).start()
-    try:
-        port = srv.port
-        st, _ = _req(port, "POST", "/taskDef", {"name": "greet"})
-        assert st == 201
-        st, _ = _req(port, "POST", "/externalEventDef", {"name": "approval"})
-        assert st == 201
-        st, _ = _req(port, "POST", "/wfSpec", _greet_spec())
-        assert st == 201
-        st, r1 = _req(port, "POST", "/wfrun",
-                      {"wf_spec_name": "greeter", "variables": {"who": "tws"}})
-        assert st == 201
-        st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
-        assert st == 200 and doc["status"] == "COMPLETED", doc
-        assert doc["thread_runs"][0]["task_runs"][0]["stdout"] == "hi tws"
-    finally:
-        srv.stop()
-        mgr.stop_all()
-        shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_http_client_error_edges(spark):
     """Round-7 review: malformed client input must be 400s, path
     params must be percent-decoded, and stop() before start() must not
@@ -858,49 +836,6 @@ def test_run_engine_cache_is_bounded(spark):
     assert "r49" in api._run_engine and "r0" not in api._run_engine
 
 
-def test_shared_engine_with_tws(spark):
-    """The consolidated ops profile (`shared=True`) under a session
-    whose own shuffle-partition conf is scoped around the deploy: the
-    engine's scoped start confs (RocksDB provider, state partitions)
-    compose with it and serving rows still route per spec."""
-    from old_original_java_little_horse_spark.session import scoped_conf
-
-    workdir = Path(tempfile.mkdtemp(prefix="http-shared-tws-"))
-    store = MetadataStore(str(workdir / "meta"))
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "8"}):
-        mgr = SparkEngineManager(spark, str(workdir / "engines"),
-                                 executor=_executor, trigger_seconds=0.2,
-                                 shared=True)
-        api = LittleHorseAPI(spark, metadata=store, engines=mgr)
-        srv = LittleHorseHTTPServer(api).start()
-        try:
-            port = srv.port
-            _req(port, "POST", "/taskDef", {"name": "greet"})
-            _req(port, "POST", "/taskDef", {"name": "double"})
-            assert _req(port, "POST", "/wfSpec", _greet_spec())[0] == 201
-            assert _req(port, "POST", "/wfSpec", _double_spec())[0] == 201
-            assert mgr.get("greeter").query is mgr.get("doubler").query
-
-            st, r1 = _req(port, "POST", "/wfrun",
-                          {"wf_spec_name": "greeter",
-                           "variables": {"who": "ada"}})
-            assert st == 201
-            st, r2 = _req(port, "POST", "/wfrun",
-                          {"wf_spec_name": "doubler",
-                           "variables": {"x": 21}})
-            assert st == 201
-            st, doc = _req(port, "GET", f"/wfrun/{r1['id']}")
-            assert st == 200 and doc["status"] == "COMPLETED"
-            st, v = _req(port, "GET", f"/wfrun/{r2['id']}/variable/x")
-            assert st == 200 and v["value"] == 42
-            st, hits = _req(port, "GET", "/search/who/ada")
-            assert st == 200 and hits == [r1["id"]]
-        finally:
-            srv.stop()
-            mgr.stop_all()
-            shutil.rmtree(workdir, ignore_errors=True)
-
-
 def test_metadata_replay_skips_torn_trailing_line():
     """A crash mid-append leaves a torn final line WITHOUT its newline;
     that record was never acknowledged (post() fsyncs before
@@ -956,8 +891,8 @@ def test_concurrent_deploys_are_serialized(monkeypatch):
     Un-serialized, shared mode would start TWO streaming queries over
     the ONE shared checkpoint (forbidden by Structured Streaming).
     The manager's lock must keep (stop old → start new) atomic: at
-    most one start_continuous_shared in flight, and every spec's
-    handle points at the LAST started query."""
+    most one start_continuous in flight, and every spec's handle
+    points at the LAST started query."""
     import tempfile
     import threading
     import time as _time
@@ -971,7 +906,7 @@ def test_concurrent_deploys_are_serialized(monkeypatch):
         def stop(self):
             pass
 
-    def fake_start_shared(*a, **k):
+    def fake_start(*a, **k):
         with gate:
             active["n"] += 1
             active["starts"] += 1
@@ -981,7 +916,7 @@ def test_concurrent_deploys_are_serialized(monkeypatch):
             active["n"] -= 1
         return FakeQuery()
 
-    monkeypatch.setattr(se, "start_continuous_shared", fake_start_shared)
+    monkeypatch.setattr(se, "start_continuous", fake_start)
     with tempfile.TemporaryDirectory() as d:
         mgr = SparkEngineManager(spark=None, base_dir=d, shared=True)
         specs = [{"name": f"wf{i}", "entrypoint": "e",

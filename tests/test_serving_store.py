@@ -10,12 +10,13 @@ import shutil
 import tempfile
 from pathlib import Path
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
 from old_original_java_little_horse_spark.sinks.serving import (
-    read_all_snapshots, read_snapshot, search_aliases, snapshots_dir,
-    upsert_serving_stores,
+    _point_dir, read_all_snapshots, read_snapshot_rows, search_alias_ids,
+    snapshots_dir, upsert_serving_stores,
 )
 from old_original_java_little_horse_spark.streaming.engine import OUTPUT_SCHEMA
 
@@ -53,43 +54,73 @@ def test_latest_wins_across_batches(store):
     got = {r["wf_run_id"]: r["status"]
            for r in read_all_snapshots(spark, d).collect()}
     assert got == {"r1": "COMPLETED", "r2": "RUNNING"}
-    one = read_snapshot(spark, d, "r1").collect()
+    one = read_snapshot_rows(d, "r1")
     assert len(one) == 1 and json.loads(one[0]["state_json"])["seq"] == 5
 
 
 def test_point_read_scans_one_bucket_directory(store):
     """The 100 TB contract: a GET touches ONE immutable bucket
     directory — the manifest lookup IS the partition pruning, so the
-    scan's input files must all live under a single bucket=N dir (and
-    the driver-side bucket hash must agree with the write path's)."""
+    point read's directory is a single bucket=N dir holding the key
+    (and the driver-side bucket hash must agree with the write
+    path's)."""
     spark, d = store
     upsert_serving_stores(
         _batch(spark, [_snap(f"r{i}", 1) for i in range(40)]), d)
-    files = read_snapshot(spark, d, "r7").inputFiles()
-    assert files, "point read planned no input files"
-    dirs = {f.rsplit("/", 2)[-2] for f in files}
-    assert len(dirs) == 1 and next(iter(dirs)).startswith("bucket="), dirs
-    # and the other 15 buckets' files are NOT in the scan
+    path = _point_dir(snapshots_dir(d), "r7")
+    assert path is not None, "point read resolved no directory"
+    # and the other 15 buckets' directories are NOT read
     from old_original_java_little_horse_spark.sinks import serving
     n = serving._store_nbuckets(snapshots_dir(d))
     b = serving._bucket_of("r7", n)
-    assert dirs == {f"bucket={b}"}
+    assert Path(path).name == f"bucket={b}"
+    ids = set(pq.read_table(path, columns=["wf_run_id"])
+              .column("wf_run_id").to_pylist())
+    assert "r7" in ids and len(ids) < 40
+    assert [r["status"] for r in read_snapshot_rows(d, "r7")] == ["RUNNING"]
 
 
 def test_tombstoned_alias_not_resurrected_by_replay(store):
     spark, d = store
     upsert_serving_stores(
         _batch(spark, [_idx("r1", 1, "CREATE", "who", "ada")]), d)
-    assert [r["wf_run_id"] for r in
-            search_aliases(spark, d, "who", "ada").collect()] == ["r1"]
+    assert search_alias_ids(d, "who", "ada") == ["r1"]
     upsert_serving_stores(
         _batch(spark, [_idx("r1", 2, "DELETE", "who", "ada")]), d)
-    assert search_aliases(spark, d, "who", "ada").collect() == []
+    assert search_alias_ids(d, "who", "ada") == []
     # At-least-once replay of the OLD create (stale seq) — the DELETE
     # tombstone is retained in the store and still wins.
     upsert_serving_stores(
         _batch(spark, [_idx("r1", 1, "CREATE", "who", "ada")]), d)
-    assert search_aliases(spark, d, "who", "ada").collect() == []
+    assert search_alias_ids(d, "who", "ada") == []
+
+
+@pytest.mark.parametrize("entry", ["dataframe", "arrow"])
+def test_alias_store_commits_before_snapshot_store(store, monkeypatch, entry):
+    """Anything GETtable is already searchable: both upsert entries
+    commit the alias store first, so a failure before the snapshot
+    commit leaves the run found by `/search` but not yet GETtable —
+    never COMPLETED on GET while its search still returns []."""
+    from old_original_java_little_horse_spark.sinks import serving
+
+    spark, d = store
+    real_commit = serving._commit
+
+    def commit(store_dir, *a, **k):
+        if store_dir == snapshots_dir(d):
+            raise OSError("simulated crash before the snapshot commit")
+        return real_commit(store_dir, *a, **k)
+
+    monkeypatch.setattr(serving, "_commit", commit)
+    batch = _batch(spark, [_snap("r1", 1, "COMPLETED"),
+                           _idx("r1", 1, "CREATE", "who", "ada")])
+    with pytest.raises(OSError):
+        if entry == "arrow":
+            serving.upsert_serving_stores_arrow(batch.toArrow(), d)
+        else:
+            upsert_serving_stores(batch, d)
+    assert search_alias_ids(d, "who", "ada") == ["r1"]
+    assert read_snapshot_rows(d, "r1") == []
 
 
 def test_upsert_rewrites_only_touched_buckets(store):
@@ -117,8 +148,7 @@ def test_upsert_rewrites_only_touched_buckets(store):
     touched_old = set(before) - untouched
     for p in touched_old:
         assert p.exists(), "grace period violated: old gen deleted at commit"
-    assert json.loads(read_snapshot(spark, d, "r7")
-                      .collect()[0]["state_json"])["seq"] == 9
+    assert json.loads(read_snapshot_rows(d, "r7")[0]["state_json"])["seq"] == 9
 
 
 def test_nbuckets_pinned_at_creation(store, monkeypatch):
@@ -141,7 +171,7 @@ def test_nbuckets_pinned_at_creation(store, monkeypatch):
     assert {p.name for p in sd.glob("bucket=*")} <= {
         f"bucket={i}" for i in range(4)}
     for rid, want in [("r3", "COMPLETED"), ("r11", "RUNNING")]:
-        rows = read_snapshot(spark, d, rid).collect()
+        rows = read_snapshot_rows(d, rid)
         assert len(rows) == 1 and rows[0]["status"] == want
 
 
@@ -216,7 +246,7 @@ def test_premarker_store_stamped_with_legacy_fanout(store, monkeypatch):
     assert {p.name for p in sd.glob("bucket=*")} <= {
         f"bucket={i}" for i in range(16)}
     for rid, want in [("r3", "COMPLETED"), ("r11", "RUNNING")]:
-        rows = read_snapshot(spark, d, rid).collect()
+        rows = read_snapshot_rows(d, rid)
         assert len(rows) == 1 and rows[0]["status"] == want
 
 
@@ -281,7 +311,7 @@ def test_crash_before_manifest_commit_loses_nothing(store, monkeypatch):
     assert got == {f"r{i}": 1 for i in range(20)}
     # foreachBatch redelivery converges
     upsert_serving_stores(_batch(spark, [_snap("r7", 9, "COMPLETED")]), d)
-    rows = read_snapshot(spark, d, "r7").collect()
+    rows = read_snapshot_rows(d, "r7")
     assert len(rows) == 1 and rows[0]["status"] == "COMPLETED"
     got = {r["wf_run_id"]: json.loads(r["state_json"])["seq"]
            for r in read_all_snapshots(spark, d).collect()}
@@ -299,19 +329,16 @@ def test_reader_isolation_one_commit_grace(store, monkeypatch):
     monkeypatch.setattr(serving, "_GC_GRACE_S", 0.0)
     spark, d = store
     upsert_serving_stores(_batch(spark, [_snap("r1", 1)]), d)
-    stale = read_snapshot(spark, d, "r1")  # plans against gen 1
-    stale_files = stale.inputFiles()       # force planning NOW
+    stale = _point_dir(snapshots_dir(d), "r1")  # resolved against gen 1
     upsert_serving_stores(_batch(spark, [_snap("r1", 2, "COMPLETED")]), d)
-    # gen-1 files still on disk -> the stale plan still collects
-    assert json.loads(stale.collect()[0]["state_json"])["seq"] == 1
-    assert all(Path(f.replace("file:", "")).exists() for f in stale_files)
+    # gen-1 files still on disk -> the stale read still succeeds
+    assert json.loads(pq.read_table(stale).to_pylist()[0]["state_json"]
+                      )["seq"] == 1
     # a THIRD commit to the same bucket GCs gen 1
     upsert_serving_stores(_batch(spark, [_snap("r1", 3)]), d)
-    assert not all(Path(f.replace("file:", "")).exists()
-                   for f in stale_files), "superseded gen never GC'd"
+    assert not Path(stale).exists(), "superseded gen never GC'd"
     # fresh reads always see the latest commit
-    assert json.loads(read_snapshot(spark, d, "r1")
-                      .collect()[0]["state_json"])["seq"] == 3
+    assert json.loads(read_snapshot_rows(d, "r1")[0]["state_json"])["seq"] == 3
 
 
 def test_legacy_hive_store_migrates_in_place(store):
@@ -335,8 +362,7 @@ def test_legacy_hive_store_migrates_in_place(store):
     with open(_os.path.join(sd, ".nbuckets"), "w") as f:
         f.write("16")
     # no CURRENT manifest: reads fall back to the synthesized one
-    assert json.loads(read_snapshot(spark, d, "r3")
-                      .collect()[0]["state_json"])["seq"] == 1
+    assert json.loads(read_snapshot_rows(d, "r3")[0]["state_json"])["seq"] == 1
     # first post-upgrade upsert: touched bucket migrates, rest readable
     upsert_serving_stores(_batch(spark, [_snap("r3", 9, "COMPLETED")]), d)
     assert (Path(sd) / "CURRENT").exists()
@@ -392,7 +418,7 @@ def test_orphaned_first_commit_is_not_committed_state(store):
     (sd / ".nbuckets").write_text("16")  # marker lands before data
 
     assert serving.has_snapshots(d) is False
-    assert read_snapshot(spark, d, "rX").collect() == []
+    assert read_snapshot_rows(d, "rX") == []
     assert read_all_snapshots(spark, d).collect() == []
 
     # foreachBatch redelivery: the orphan generation is overwritten
@@ -424,8 +450,7 @@ def test_generation_shells_are_garbage_collected(store, monkeypatch):
     for g in sd.glob("data/g*"):
         assert any(c.name.startswith("bucket=") for c in g.iterdir()), (
             f"{g} is an empty generation shell")
-    assert json.loads(read_snapshot(spark, d, "r1")
-                      .collect()[0]["state_json"])["seq"] == 6
+    assert json.loads(read_snapshot_rows(d, "r1")[0]["state_json"])["seq"] == 6
 
 
 def test_gc_grace_protects_inflight_readers(store, monkeypatch):
@@ -459,8 +484,7 @@ def test_gc_grace_protects_inflight_readers(store, monkeypatch):
     upsert_serving_stores(_batch(spark, [_snap("r1", 9)]), d)
     gens = sorted(p.name for p in sd.glob("data/g*"))
     assert len(gens) <= 2, gens
-    assert json.loads(read_snapshot(spark, d, "r1")
-                      .collect()[0]["state_json"])["seq"] == 9
+    assert json.loads(read_snapshot_rows(d, "r1")[0]["state_json"])["seq"] == 9
 
 
 def test_current_without_marker_raises(store):

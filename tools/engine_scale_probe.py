@@ -3,8 +3,9 @@
 The 62-query analytic probe (`tools/scale_probe.py`) covers the
 DataFrame surface; this one measures the CONTINUOUS ENGINE's scaling
 in concurrent runs: N WF_RUN_STARTED commands bulk-produced into a
-shared-mode engine (`start_continuous_shared` — one checkpoint, one
-state store, per-spec serving), folded to COMPLETED through the real
+shared-mode engine (`start_continuous` over a one-spec
+`make_spec_registry`, with `serving_dirs` attribution: one checkpoint,
+one state store, per-spec serving), folded to COMPLETED through the real
 task-execute → task_result → fold loop.  Recorded per decade step
 (default N = 100 → 1000):
 
@@ -66,20 +67,21 @@ def _bulk_produce(events_dir: str, spec_name: str, n: int,
 
 def probe(spark, n: int, trigger_seconds: float = 0.5,
           state_partitions: int = 8) -> dict:
+    from old_original_java_little_horse_spark.engine.fold import make_spec_registry
     from old_original_java_little_horse_spark.harness.cases import all_cases
     from old_original_java_little_horse_spark.harness.executor import execute
     from old_original_java_little_horse_spark.sinks.serving import (
         read_snapshot_rows_page)
     from old_original_java_little_horse_spark.streaming.engine import (
-        await_read_your_writes, start_continuous_shared)
+        await_read_your_writes, start_continuous)
 
     spec = all_cases()["basic"].spec
     workdir = tempfile.mkdtemp(prefix=f"engine-scale-{n}-")
     events_dir = os.path.join(workdir, "events")
     serving_dir = os.path.join(workdir, "serving")
     os.makedirs(events_dir, exist_ok=True)
-    q = start_continuous_shared(
-        spark, events_dir + "/*", [spec],
+    q = start_continuous(
+        spark, events_dir + "/*", make_spec_registry([spec]),
         checkpoint_dir=os.path.join(workdir, "ckpt"),
         output_dir=os.path.join(workdir, "out"),
         serving_dirs={spec["name"]: serving_dir},
