@@ -7,7 +7,7 @@ capabilities Spark-first:
 
 - ``engine``     — the event-fold state machine (pure Python core,
                    executed via ``applyInPandas`` in batch and one
-                   ``transformWithStateInPandas`` processor in
+                   row-based ``transformWithState`` processor in
                    streaming).
 - ``sdk``        — workflow-as-code builder emitting WFSpec JSON
                    (port of the reference's Python SDK surface).

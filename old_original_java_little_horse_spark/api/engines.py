@@ -150,8 +150,9 @@ class SparkEngineManager:
     def deploy(self, spec: dict) -> EngineHandle:
         """Start (or restart, on spec update) the spec's engine.
         Raises `streaming.checkpoint.StaleCheckpointError` when the
-        checkpoint was left by the removed applyInPandasWithState
-        engine (shared mode too): it must be rebuilt by replay."""
+        checkpoint was left by a removed engine (applyInPandasWithState,
+        or the pandas-API processor; shared mode too): it must be
+        rebuilt by replay."""
         return self.deploy_many([spec])[0]
 
     def deploy_many(self, specs: list[dict]) -> list[EngineHandle]:

@@ -387,8 +387,9 @@ def cmd_process(args) -> int:
         mod_name, _, attr = args.executor.partition(":")
         executor = getattr(importlib.import_module(mod_name), attr)
 
-    # A checkpoint of the removed applyInPandasWithState engine is
-    # refused before the query starts (StaleCheckpointError).
+    # A checkpoint of a removed engine (applyInPandasWithState, or
+    # the pandas-API processor) is refused before the query starts
+    # (StaleCheckpointError).
     spark = _spark()
     out = Path(args.snapshots_dir)
     before = set(out.glob("*.parquet"))

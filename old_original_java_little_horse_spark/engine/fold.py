@@ -12,7 +12,7 @@ That purity is the point: the same function is
 - unit-tested without Spark (tests mirror the reference harness
   scenarios, `lhctl/lh_test_harness/tests/*`),
 - applied per-key in batch via ``applyInPandas`` (engine/batch.py),
-- applied per-key in streaming via ``transformWithStateInPandas``
+- applied per-key in streaming via row-based ``transformWithState``
   (streaming/tws.py, wired by streaming/engine.py),
 - usable as the batch oracle for the streaming engine.
 

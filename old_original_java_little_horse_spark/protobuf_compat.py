@@ -1,7 +1,7 @@
 """Feature-detect `google.protobuf`, falling back to a pure-Python
 runtime already present on the host.
 
-Spark 4's `transformWithStateInPandas` Python worker speaks a
+Spark 4's `transformWithState` Python worker speaks a
 protobuf state-server protocol (`pyspark/sql/streaming/proto/
 StateMessage_pb2.py`); without an importable `google.protobuf` the
 query dies at initialization

@@ -47,7 +47,7 @@ def _export_daemon_preload() -> bool:
 
 def get_spark(app_name: str = "old-original-java-little-horse-spark",
               extra_conf: dict | None = None) -> SparkSession:
-    # Resolve google.protobuf (needed by transformWithStateInPandas'
+    # Resolve google.protobuf (needed by transformWithState's
     # Python state server) BEFORE the JVM launches: workers inherit
     # the JVM's PYTHONPATH, which is frozen at session creation.
     from .protobuf_compat import ensure_protobuf

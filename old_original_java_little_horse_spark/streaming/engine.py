@@ -5,7 +5,7 @@ SURVEY.md §3.2 / §7 step 4 — the reference's Kafka Streams topology
 streaming query:
 
     events → groupBy(wf_run_id)
-           → transformWithStateInPandas(tws.WFRunFoldProcessor)
+           → transformWithState(tws.WFRunFoldProcessor)
            → tagged output rows → filter-split → sinks
 
 - Per-key state is the WFRun JSON document (the reference's RocksDB
@@ -24,9 +24,9 @@ streaming query:
   timers through one native processing-time timer per WFRunTimer — the
   reference's 1 s punctuator (`SchedulerProcessor.java:56-60`,
   `Constants.java:36`) without any satellite process; a SLEEP
-  completes with no further input.  Replay paths keep timers as
-  emitted `kind='timer'` rows + explicit TIMER_EVENTs (deterministic:
-  no wall-clock reads), served by the legacy `TimerPump` when needed.
+  completes with no further input.  Replay paths read no wall clock
+  (deterministic): their timers stay emitted `kind='timer'` rows, and
+  only a TIMER_EVENT in the replayed log fires one.
 - The live engine has ONE start, `start_continuous`, and one sink,
   for both deployment modes: a per-spec engine folds its spec and
   upserts one serving store; a shared engine folds a multi-spec
@@ -34,7 +34,7 @@ streaming query:
   and backfills run through `run_streaming_availablenow`.
 - Every engine query starts through `start_engine_query`, which sets
   the RocksDB state store the processor needs and refuses checkpoints
-  it cannot resume.
+  it cannot resume (`checkpoint.check_engine_checkpoint`).
 """
 
 from __future__ import annotations
@@ -42,7 +42,6 @@ from __future__ import annotations
 import json
 import os
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -94,21 +93,6 @@ def emit_ctx_rows(out_rows: list, wf_run_id: str, ctx, pending: list) -> None:
         })
 
 
-def _ival(x) -> int:
-    """None/NaN/garbage → 0, else int.  WF_EVENT_SCHEMA's offset and
-    timestamp are nullable LongType; ONE null in a batch makes
-    Arrow→pandas render the whole column float64 with NaN, and
-    ``nan or 0`` is nan (truthy) — which would poison the sort key,
-    make ``max()`` return nan, silently drop every later event at the
-    lateness gate, and write a float into the Long state column."""
-    try:
-        if x is None or x != x:  # NaN != NaN
-            return 0
-        return int(x)
-    except (TypeError, ValueError):
-        return 0
-
-
 def prepare_events(events: list[dict], max_offset: int, max_event_ts: int,
                    allowed_lateness_ms: int | None) -> tuple[list[dict], int, int]:
     """Order + bound a micro-batch group's events: sort by per-key offset (Structured Streaming
@@ -116,11 +100,11 @@ def prepare_events(events: list[dict], max_offset: int, max_event_ts: int,
     allowance, and advance the key's (max_offset, max_event_ts) —
     `seq` must STRICTLY increase whenever events fold, so an
     out-of-order event with a stale offset still bumps it.
-    Offsets/timestamps are normalized in place (None/NaN → 0) so the
-    fold downstream never sees a pandas-nullified float."""
+    WF_EVENT_SCHEMA's offset and timestamp are nullable longs; a null
+    is normalized in place to 0, so sorting and max() never meet None."""
     for e in events:
-        e["offset"] = _ival(e.get("offset"))
-        e["timestamp"] = _ival(e.get("timestamp"))
+        e["offset"] = e.get("offset") or 0
+        e["timestamp"] = e.get("timestamp") or 0
     events = sorted(events, key=lambda e: e["offset"])
     if allowed_lateness_ms is not None:
         max_seen = max_event_ts
@@ -128,13 +112,13 @@ def prepare_events(events: list[dict], max_offset: int, max_event_ts: int,
         for e in events:
             ts = e["timestamp"]
             max_seen = max(max_seen, ts)
-            # TIMER_EVENTs are engine-internal control flow, late BY
-            # CONSTRUCTION (their timestamp is the maturation time,
-            # and a delayed pump injects them after the key's
-            # event-time has moved on).  Dropping one would strand
-            # its SLEEP forever — the pump's fired-ledger never
-            # re-injects.  The lateness policy exists for EXTERNAL
-            # data, so control events bypass it.
+            # TIMER_EVENTs are control flow, late BY CONSTRUCTION
+            # (their timestamp is the maturation time, and a replayed
+            # log records them after the key's event-time has moved
+            # on).  Dropping one would strand its SLEEP forever:
+            # nothing fires a replay's timer again.  The lateness
+            # policy exists for EXTERNAL data, so control events
+            # bypass it.
             if (e.get("event_type") == "TIMER_EVENT"
                     or ts >= max_seen - allowed_lateness_ms):
                 kept.append(e)
@@ -181,7 +165,7 @@ def index_diff_rows(out_rows: list, wf_run_id: str, old_aliases: set,
 
 
 def _export_worker_pythonpath(spark) -> None:
-    """transformWithStateInPandas starts a LONG-LIVED state-server
+    """transformWithState starts a LONG-LIVED state-server
     Python process through `StreamingPythonRunner`, which (unlike
     task workers) does not consult the session's addPyFile includes —
     its import path comes from the PYTHONPATH in the Python
@@ -213,12 +197,11 @@ def streaming_engine(events: DataFrame, spec: dict,
                      watermark_delay: str | None = None,
                      allowed_lateness_ms: int | None = None,
                      native_timers: bool = False,
-                     evict_completed: bool = False,
-                     tombstone_ttl_ms: int | None = None) -> DataFrame:
+                     evict_completed: bool = False) -> DataFrame:
     """events (streaming DF, WF_EVENT_SCHEMA) → tagged output stream,
-    folded per run by `tws.WFRunFoldProcessor` under
-    `transformWithStateInPandas` (typed state variables + one native
-    timer per stored WFRunTimer).  Start the query through
+    folded per run by `tws.WFRunFoldProcessor` under row-based
+    `transformWithState` (typed state variables + one native timer per
+    stored WFRunTimer).  Start the query through
     `start_engine_query`: the processor's state needs the RocksDB
     state store.
 
@@ -234,8 +217,8 @@ def streaming_engine(events: DataFrame, spec: dict,
     completes with NO further input, the reference punctuator's
     guarantee).  Replay/parity paths leave this off: a deterministic
     replay wants an explicit TIMER_EVENT stream, not wall-clock reads.
-    `evict_completed` tombstones COMPLETED runs and `tombstone_ttl_ms`
-    (native mode) later drops the marker — see `WFRunFoldProcessor`.
+    `evict_completed` tombstones COMPLETED runs — see
+    `WFRunFoldProcessor`.
     """
     from ..protobuf_compat import ensure_protobuf, ship_protobuf
     from ..session import ship_package
@@ -243,7 +226,7 @@ def streaming_engine(events: DataFrame, spec: dict,
 
     if not ensure_protobuf():
         raise RuntimeError(
-            "the streaming engine (transformWithStateInPandas) needs the "
+            "the streaming engine (transformWithState) needs the "
             "protobuf package (google.protobuf) for its Python state "
             "server, and protobuf_compat found no runtime to resolve; "
             "install protobuf")
@@ -257,9 +240,8 @@ def streaming_engine(events: DataFrame, spec: dict,
         ).withWatermark("event_time", watermark_delay)
     processor = WFRunFoldProcessor(
         spec, executor, allowed_lateness_ms=allowed_lateness_ms,
-        native_timers=native_timers, evict_completed=evict_completed,
-        tombstone_ttl_ms=tombstone_ttl_ms)
-    return events.groupBy("wf_run_id").transformWithStateInPandas(
+        native_timers=native_timers, evict_completed=evict_completed)
+    return events.groupBy("wf_run_id").transformWithState(
         statefulProcessor=processor,
         outputStructType=OUTPUT_SCHEMA,
         outputMode="Update",
@@ -330,23 +312,21 @@ def _upsert_shared_arrow(tbl, serving_dirs: dict[str, str]) -> None:
     index rows, so every serving-relevant run has one in-batch); rows
     of a spec with no store here are dropped."""
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     from ..sinks.serving import upsert_serving_stores_arrow
 
-    # ArrowDtype keeps nullable int64 columns (seq is null on
-    # task_schedule/timer rows) from degrading to float64, which
-    # would write DOUBLE seq into an int64 store.
-    pdf = tbl.to_pandas(types_mapper=pd.ArrowDtype)
-    snaps = pdf[pdf["kind"] == "snapshot"]
+    ids = tbl.column("wf_run_id").to_pylist()
     run_spec = {r: json.loads(p).get("wf_spec_name")
-                for r, p in zip(snaps["wf_run_id"], snaps["payload"])}
-    specs = pdf["wf_run_id"].map(run_spec.get)
-    for name in sorted({s for s in specs if s is not None}):
+                for r, k, p in zip(ids, tbl.column("kind").to_pylist(),
+                                   tbl.column("payload").to_pylist())
+                if k == "snapshot"}
+    specs = pa.array([run_spec.get(r) for r in ids], pa.string())
+    for name in sorted({s for s in run_spec.values() if s is not None}):
         sdir = serving_dirs.get(name)
         if sdir is not None:
             upsert_serving_stores_arrow(
-                pa.Table.from_pandas(pdf[specs == name],
-                                     preserve_index=False), sdir)
+                tbl.filter(pc.equal(specs, name)), sdir)
 
 
 def _upsert_shared(batch_df: DataFrame, serving_dirs: dict[str, str]) -> None:
@@ -381,7 +361,7 @@ def start_engine_query(spark: SparkSession, writer, checkpoint_dir: str,
     """Start a streaming query over the engine's tagged output — the
     ONE place every engine query start goes through.
 
-    `transformWithStateInPandas` needs a state store that supports
+    `transformWithState` needs a state store that supports
     multiple column families (one per typed state variable / timer
     store): Spark's RocksDB provider, not the default HDFS-backed one.
     Fitting: RocksDB is exactly what the reference's stores run on
@@ -435,8 +415,8 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     trigger ~ the reference's 1 s punctuator cadence, Constants.java:36)
     and return the StreamingQuery handle.
 
-    Timers are self-contained (a SLEEP completes with no external pump
-    and no further input: Spark keeps scheduling micro-batches while
+    Timers are self-contained (a SLEEP completes with no re-injected
+    TIMER_EVENT and no further input: Spark keeps scheduling micro-batches while
     processing-time timers are registered) and COMPLETED runs are
     tombstoned.
 

@@ -1,4 +1,4 @@
-"""Streaming-engine parity query: the transformWithStateInPandas
+"""Streaming-engine parity query: the transformWithState
 engine run end-to-end (availableNow) and hash-checked against the same SQL
 oracle as the batch fold — streaming == batch == closed form.
 """

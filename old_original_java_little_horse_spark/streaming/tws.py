@@ -1,7 +1,9 @@
-"""The engine's per-run processor on `transformWithStateInPandas`
+"""The engine's per-run processor on row-based `transformWithState`
 (Spark 4's arbitrary-stateful-processing API): the pure fold
 (`engine/fold.py`) with typed state variables and per-timer native
-callbacks.  `engine.streaming_engine` wires it into a query.
+callbacks.  `engine.streaming_engine` wires it into a query.  Input
+and output are plain `Row`s: the fold works on dicts, so no per-key
+DataFrame is built on either side.
 
 Why this API maps cleanly to the reference (SURVEY §3.2):
 
@@ -27,7 +29,7 @@ from __future__ import annotations
 import json
 from typing import Iterator
 
-import pandas as pd
+from pyspark.sql import Row
 from pyspark.sql.streaming.stateful_processor import (
     ExpiredTimerInfo, StatefulProcessor, StatefulProcessorHandle, TimerValues,
 )
@@ -52,6 +54,13 @@ _RUN_STATE_SCHEMA = ("state_json string, max_offset long, "
 _TIMER_STATE_SCHEMA = "payload string"
 
 _COLS = [f.name for f in OUTPUT_SCHEMA.fields]
+_OutRow = Row(*_COLS)
+
+
+def _as_rows(out_rows: list[dict]) -> Iterator[Row]:
+    """The processor's output dicts as Rows in OUTPUT_SCHEMA order."""
+    for r in out_rows:
+        yield _OutRow(*(r[c] for c in _COLS))
 
 
 class WFRunFoldProcessor(StatefulProcessor):
@@ -62,22 +71,19 @@ class WFRunFoldProcessor(StatefulProcessor):
     snapshot is emitted, replace the state document with a tombstone.
     Late/duplicate deliveries for the run are dropped (exactly-once
     preserved) but the store no longer grows with run *history* —
-    only with run *count*, and `tombstone_ttl_ms` (native timers)
-    removes even the marker once the redelivery horizon passes.
-    HALTED runs are NOT evicted: WF_RUN_RESUME_REQUEST must find
-    their full document (fold.py resume semantics)."""
+    only with run *count*: the marker itself is permanent.  HALTED
+    runs are NOT evicted: WF_RUN_RESUME_REQUEST must find their full
+    document (fold.py resume semantics)."""
 
     def __init__(self, spec: dict, executor: TaskExecutor | None = None,
                  allowed_lateness_ms: int | None = None,
                  native_timers: bool = False,
-                 evict_completed: bool = False,
-                 tombstone_ttl_ms: int | None = None):
+                 evict_completed: bool = False):
         self.spec = spec
         self.executor = executor
         self.allowed_lateness_ms = allowed_lateness_ms
         self.native_timers = native_timers
         self.evict_completed = evict_completed
-        self.tombstone_ttl_ms = tombstone_ttl_ms
 
     # -- state plumbing ----------------------------------------------------
 
@@ -121,23 +127,16 @@ class WFRunFoldProcessor(StatefulProcessor):
             # guards no-op a timer against a terminal run), so drop
             # them rather than block eviction — in replay mode (no
             # timer callbacks) an unmatured task-timeout timer would
-            # otherwise pin the full document forever.  CRITICALLY,
-            # also delete every REGISTERED native timer: this API
-            # keeps each registered expiry alive, and a leftover
-            # task-timeout firing on the tombstoned key
-            # would look exactly like the TTL expiry — wiping the
-            # dedupe marker early (with ttl=None: a PERMANENT marker)
-            # and re-opening the run to redelivered events.
+            # otherwise pin the full document forever.  Also delete
+            # every REGISTERED native timer: this API keeps each
+            # registered expiry alive, so a dead task-timeout would
+            # stay in the timer store and call back on the tombstoned
+            # key for nothing.
             self._run.update(("", max_offset, max_event_ts, 1))
             self._timers.clear()
             if self.native_timers:
                 for ts in self.handle.listTimers():
                     self.handle.deleteTimer(ts)
-                if self.tombstone_ttl_ms is not None:
-                    import time as _time
-
-                    self.handle.registerTimer(
-                        int(_time.time() * 1000) + self.tombstone_ttl_ms)
             return
         self._run.update((json.dumps(state, separators=(",", ":")),
                           max_offset, max_event_ts, 0))
@@ -168,11 +167,11 @@ class WFRunFoldProcessor(StatefulProcessor):
                 break
             # Maturation order FIRST (thread/task ids only break ties):
             # the reference punctuator range-scans [0, now] by
-            # maturation time (SchedulerProcessor), and the TimerPump
-            # replay path injects events whose offsets are the
-            # µs-scaled maturation timestamps — firing here in any
-            # other order could diverge from both when one timer's
-            # fold halts a thread whose own timer matured earlier.
+            # maturation time (SchedulerProcessor), and TIMER_EVENTs in
+            # a replayed log carry their maturation timestamp on the
+            # µs offset scale — firing here in any other order could
+            # diverge from both when one timer's fold halts a thread
+            # whose own timer matured earlier.
             for t in sorted(matured,
                             key=lambda t: (t["maturation_timestamp"],
                                            t["thread_run_id"],
@@ -193,30 +192,29 @@ class WFRunFoldProcessor(StatefulProcessor):
 
     # -- input path --------------------------------------------------------
 
-    def handleInputRows(self, key, rows: Iterator[pd.DataFrame],
-                        timerValues: TimerValues) -> Iterator[pd.DataFrame]:
+    def handleInputRows(self, key, rows: Iterator[Row],
+                        timerValues: TimerValues) -> Iterator[Row]:
         import time as _time
 
         (wf_run_id,) = key
         state, max_offset, max_event_ts, tomb, pending = self._load()
         if tomb:
             # Evicted terminal run: duplicates/late events are dropped.
-            yield pd.DataFrame([], columns=_COLS)
             return
         from ..operators.run_index import doc_aliases
 
         old_aliases = doc_aliases(state)
 
-        events: list[dict] = []
-        for pdf in rows:
-            events.extend(pdf.to_dict("records"))
         events, max_offset, max_event_ts = prepare_events(
-            events, max_offset, max_event_ts, self.allowed_lateness_ms)
+            [r.asDict() for r in rows], max_offset, max_event_ts,
+            self.allowed_lateness_ms)
 
         out_rows: list = []
         for ev in events:
             if ev.get("event_type") == "TIMER_EVENT":
-                # Externally-injected firing (TimerPump replay path).
+                # A firing carried by the input (TIMER_EVENT is an
+                # input event type, FIXTURES.md §1: a replayed event
+                # log can hold them): it consumes the stored timer.
                 try:
                     fired_key = _timer_key(json.loads(ev.get("content") or "{}"))
                     pending = [t for t in pending
@@ -237,27 +235,23 @@ class WFRunFoldProcessor(StatefulProcessor):
         if state is not None:
             self._save(state, max_offset, max_event_ts, pending,
                        out_rows, wf_run_id, old_aliases)
-        yield pd.DataFrame(out_rows, columns=_COLS)
+        yield from _as_rows(out_rows)
 
     # -- timer path (per-timer callback) -----------------------------------
 
     def handleExpiredTimer(self, key, timerValues: TimerValues,
                            expiredTimerInfo: ExpiredTimerInfo,
-                           ) -> Iterator[pd.DataFrame]:
+                           ) -> Iterator[Row]:
         (wf_run_id,) = key
         expiry_ms = expiredTimerInfo.getExpiryTimeInMs()
         state, max_offset, max_event_ts, tomb, pending = self._load()
         if tomb:
-            # Only a configured TTL may drop the marker.  _save
-            # deletes all other registered timers at tombstone time,
-            # so an expiry here IS the TTL timer — but pre-fix stores
-            # (or a ttl=None config, where the marker is PERMANENT)
-            # can still see a stale task-timeout fire on this key, and
-            # clearing for one of those would break exactly-once.
-            if self.tombstone_ttl_ms is not None:
-                self._run.clear()
-                self._timers.clear()
-            yield pd.DataFrame([], columns=_COLS)
+            # The dedupe marker is permanent.  _save deletes the
+            # registered timers at tombstone time, but an expiry can
+            # still reach a tombstoned key (a second timer of the same
+            # expiry scan, fetched before the first one's fold
+            # tombstoned the run); clearing the marker for it would
+            # re-open the run to redelivered events.
             return
         from ..operators.run_index import doc_aliases
 
@@ -271,4 +265,4 @@ class WFRunFoldProcessor(StatefulProcessor):
         # Not fired (early/stale callback): stored timers and their
         # still-registered native timers are untouched — nothing to
         # re-arm.
-        yield pd.DataFrame(out_rows, columns=_COLS)
+        yield from _as_rows(out_rows)

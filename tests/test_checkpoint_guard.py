@@ -1,15 +1,18 @@
 """Checkpoints the engine cannot resume fail fast (`streaming/checkpoint.py`).
 
-Spark restores the state-store provider from a checkpoint on every
-restart, and the engine's processor needs RocksDB.  A checkpoint left
-by the removed applyInPandasWithState engine (HDFS-backed provider) is
-refused with a rebuild-by-replay message before any query starts, on
-every start path: `SparkEngineManager.deploy` (per-spec and shared)
-and `cli process`.  Fresh and RocksDB checkpoints start."""
+Spark restores the state-store provider and the stateful operator
+from a checkpoint on every restart; the engine's processor needs
+RocksDB and runs as the row-based transformWithState operator.  A
+checkpoint left by the removed applyInPandasWithState engine
+(HDFS-backed provider) or by the removed pandas-API processor is
+refused with one rebuild-by-replay message before any query starts,
+on every start path: `SparkEngineManager.deploy` (per-spec and
+shared) and `cli process`.  Fresh and RocksDB checkpoints start."""
 from __future__ import annotations
 
 import argparse
 import json
+import shutil
 from pathlib import Path
 
 import pytest
@@ -18,7 +21,8 @@ from old_original_java_little_horse_spark.api.engines import SparkEngineManager
 from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
 from old_original_java_little_horse_spark.sdk.builder import Workflow
 from old_original_java_little_horse_spark.streaming.checkpoint import (
-    ROCKSDB_PROVIDER, StaleCheckpointError, check_engine_checkpoint,
+    PANDAS_OPERATOR, ROCKSDB_PROVIDER, StaleCheckpointError,
+    check_engine_checkpoint,
 )
 
 _HDFS_OFFSETS = (
@@ -33,6 +37,13 @@ _REBUILD = "replaying the event log into a fresh checkpoint"
 def _mk_offsets(ckpt: Path, txt: str) -> None:
     (ckpt / "offsets").mkdir(parents=True)
     (ckpt / "offsets" / "0").write_text(txt)
+
+
+def _mk_operator_metadata(ckpt: Path, operator: str) -> None:
+    meta = ckpt / "state" / "0" / "_metadata" / "v2"
+    meta.mkdir(parents=True)
+    (meta / "0").write_text(
+        'v2\n{"operatorInfo":{"operatorId":0,"operatorName":"%s"}}' % operator)
 
 
 def _spec() -> dict:
@@ -58,6 +69,15 @@ def test_checkpoint_provider_detection(tmp_path):
     with pytest.raises(StaleCheckpointError, match=_REBUILD) as e:
         check_engine_checkpoint(str(hdfs))
     assert "HDFSBackedStateStoreProvider" in str(e.value)
+    # RocksDB offsets, stateful operator read from the state metadata
+    _mk_operator_metadata(rocks, "transformWithStateInPySparkExec")
+    check_engine_checkpoint(str(rocks))
+    pandas_api = tmp_path / "pandas-api"
+    _mk_offsets(pandas_api, _ROCKSDB_OFFSETS)
+    _mk_operator_metadata(pandas_api, PANDAS_OPERATOR)
+    with pytest.raises(StaleCheckpointError, match=_REBUILD) as e:
+        check_engine_checkpoint(str(pandas_api))
+    assert PANDAS_OPERATOR in str(e.value)
 
 
 @pytest.mark.parametrize("shared", [False, True], ids=["per-spec", "shared"])
@@ -117,3 +137,72 @@ def test_cmd_process_checkpoints(spark, tmp_path, capsys):
             checkpoint_dir=argv[7], executor=None))
     assert cli.main(argv) == 2
     assert _REBUILD in capsys.readouterr().err
+
+
+def test_pandas_api_checkpoint_refused_on_every_start_path(spark, tmp_path,
+                                                           capsys):
+    """A real checkpoint of a pandas-API transformWithState query on
+    RocksDB (what the removed processor left: the provider check
+    passes, the recorded operator does not) is refused by `deploy`
+    per-spec and shared and by `cli process`, before any query
+    starts."""
+    import pandas as pd
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
+
+    from old_original_java_little_horse_spark import cli
+    from old_original_java_little_horse_spark.streaming.engine import (
+        _export_worker_pythonpath, start_engine_query,
+    )
+
+    class CountProcessor(StatefulProcessor):
+        def init(self, handle):
+            self.n = handle.getValueState("n", "n long")
+
+        def handleInputRows(self, key, rows, timerValues):
+            n = (self.n.get() or (0,))[0] + sum(len(pdf) for pdf in rows)
+            self.n.update((n,))
+            yield pd.DataFrame({"wf_run_id": [key[0]], "n": [n]})
+
+        def close(self):
+            pass
+
+    events = tmp_path / "events"
+    row = ("r1", "greeter", "greeter", "WF_RUN_STARTED", 0, 1000, 0,
+           json.dumps({"variables": {}}))
+    spark.createDataFrame([row], schema=WF_EVENT_SCHEMA) \
+         .coalesce(1).write.parquet(str(events / "w1"))
+    _export_worker_pythonpath(spark)
+    stale = tmp_path / "stale"
+    q = start_engine_query(
+        spark,
+        spark.readStream.schema(WF_EVENT_SCHEMA).parquet(str(events) + "/*")
+        .groupBy("wf_run_id").transformWithStateInPandas(
+            statefulProcessor=CountProcessor(),
+            outputStructType="wf_run_id string, n long",
+            outputMode="Update", timeMode="None")
+        .writeStream.foreachBatch(lambda df, _bid: df.count())
+        .trigger(availableNow=True), str(stale), state_partitions=1)
+    q.awaitTermination(120)
+    assert ROCKSDB_PROVIDER in (stale / "offsets" / "0").read_text()
+
+    for shared in (False, True):
+        root = tmp_path / f"engines-{shared}"
+        shutil.copytree(stale, root / ("_shared" if shared else "greeter")
+                        / "ckpt")
+        mgr = SparkEngineManager(spark, str(root), shared=shared)
+        try:
+            with pytest.raises(StaleCheckpointError, match=PANDAS_OPERATOR):
+                mgr.deploy(_spec())
+            assert mgr.handles() == []  # no query was started
+        finally:
+            mgr.stop_all()
+
+    spec_file = tmp_path / "spec.json"
+    spec_file.write_text(json.dumps(_spec()))
+    snaps = tmp_path / "snaps"
+    argv = ["process", str(spec_file), "--events-dir", str(events),
+            "--snapshots-dir", str(snaps), "--checkpoint-dir", str(stale)]
+    assert cli.main(argv) == 2
+    err = capsys.readouterr().err
+    assert _REBUILD in err and PANDAS_OPERATOR in err
+    assert not snaps.exists()  # nothing folded

@@ -1,6 +1,6 @@
 """Failure-edge hardening of the streaming processor (round-7 review
-findings): poison-pill TIMER_EVENT content, pandas-nullified (NaN)
-offset/timestamp columns, and eviction of COMPLETED runs whose dead
+findings): poison-pill TIMER_EVENT content, null offset/timestamp
+columns, and eviction of COMPLETED runs whose dead
 task-timeout timers would otherwise pin state forever in replay mode.
 All pure-Python (a fake StatefulProcessorHandle) — no SparkSession
 needed."""
@@ -9,18 +9,15 @@ from __future__ import annotations
 
 import json
 
-import pandas as pd
-
 from old_original_java_little_horse_spark.sdk.builder import Workflow, lit
 from old_original_java_little_horse_spark.streaming.engine import (
-    _ival,
     prepare_events,
 )
 from old_original_java_little_horse_spark.streaming.tws import (
     WFRunFoldProcessor,
 )
 
-from .test_tws_engine import FakeHandle
+from .test_tws_engine import FakeHandle, _drive as _drive_key
 
 
 def _spec(timeout: int | None = None):
@@ -63,11 +60,7 @@ def _processor(spec, **kw):
 
 
 def _drive(proc, events):
-    rows = []
-    for res in proc.handleInputRows(("r1",), iter([pd.DataFrame(events)]),
-                                    None):
-        rows.extend(res.to_dict("records"))
-    return rows
+    return _drive_key(proc, "r1", events)
 
 
 def test_poison_timer_event_content_is_tolerated():
@@ -114,25 +107,21 @@ def test_out_of_range_timer_ids_are_tolerated():
     assert json.loads(snap["payload"])["status"] == "COMPLETED"
 
 
-def test_prepare_events_normalizes_nan_offsets_and_timestamps():
-    """One null in a LongType column makes pandas deliver the WHOLE
-    column as float64 with NaN; nan is truthy so `or 0` passes it
-    through, poisoning sort order, max(), and the lateness gate."""
-    nan = float("nan")
+def test_prepare_events_normalizes_null_offsets_and_timestamps():
+    """WF_EVENT_SCHEMA's offset and timestamp are nullable longs: a
+    null reads as 0, so it cannot break the sort, max() or the
+    lateness gate."""
     events = [
-        {"offset": nan, "timestamp": nan, "event_type": "A"},
-        {"offset": 2.0, "timestamp": 2000.0, "event_type": "B"},
-        {"offset": 1.0, "timestamp": nan, "event_type": "C"},
+        {"offset": None, "timestamp": None, "event_type": "A"},
+        {"offset": 2, "timestamp": 2000, "event_type": "B"},
+        {"offset": 1, "timestamp": None, "event_type": "C"},
     ]
     out, max_offset, max_ts = prepare_events(events, 0, 0,
                                              allowed_lateness_ms=10_000)
     assert [e["event_type"] for e in out] == ["A", "C", "B"]
-    assert all(isinstance(e["offset"], int) for e in out)
-    assert all(isinstance(e["timestamp"], int) for e in out)
+    assert [(e["offset"], e["timestamp"]) for e in out] == \
+        [(0, 0), (1, 0), (2, 2000)]
     assert max_offset == 2 and max_ts == 2000
-    # the helper itself
-    assert _ival(nan) == 0 and _ival(None) == 0 and _ival("x") == 0
-    assert _ival(7.0) == 7 and _ival(7) == 7
 
 
 def test_evict_completed_drops_dead_task_timeout_timers():

@@ -9,8 +9,7 @@
   position) are poison-skipped like the timer handler's policy, not
   run-halting IndexErrors;
 - the tws engine deletes REGISTERED native timers when it tombstones
-  a run, and a tombstone with ttl=None is permanent even if a stale
-  pre-fix timer fires.
+  a run, and a tombstone is permanent even if a stale timer fires.
 """
 
 from __future__ import annotations
@@ -24,6 +23,7 @@ from old_original_java_little_horse_spark.engine import fold as E
 from old_original_java_little_horse_spark.sdk.builder import Workflow, var
 
 from .test_fold import start_ev
+from .test_tws_engine import FakeHandle
 
 
 def _timeout_spec():
@@ -145,53 +145,7 @@ def test_poison_interrupt_event_skips():
 # -- tws native-timer tombstone hygiene ----------------------------------
 
 
-class _FakeValueState:
-    def __init__(self):
-        self.val = None
-
-    def get(self):
-        return self.val
-
-    def update(self, v):
-        self.val = v
-
-    def clear(self):
-        self.val = None
-
-
-class _FakeListState(_FakeValueState):
-    def get(self):
-        return list(self.val or [])
-
-    def put(self, rows):
-        self.val = list(rows)
-
-    def clear(self):
-        self.val = []
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-        self.timers: set[int] = set()
-
-    def getValueState(self, name, schema):
-        return self.states.setdefault(name, _FakeValueState())
-
-    def getListState(self, name, schema):
-        return self.states.setdefault(name, _FakeListState())
-
-    def registerTimer(self, ts):
-        self.timers.add(ts)
-
-    def deleteTimer(self, ts):
-        self.timers.discard(ts)
-
-    def listTimers(self):
-        return list(self.timers)
-
-
-def _tws_processor(ttl=None):
+def _tws_processor():
     from old_original_java_little_horse_spark.streaming.tws import (
         WFRunFoldProcessor)
 
@@ -199,16 +153,16 @@ def _tws_processor(ttl=None):
     t = wf.thread("entrypoint")
     t.execute("echo", x="hi")
     p = WFRunFoldProcessor(wf.build(), executor=None, native_timers=True,
-                           evict_completed=True, tombstone_ttl_ms=ttl)
-    p.init(_FakeHandle())
+                           evict_completed=True)
+    p.init(FakeHandle())
     return p
 
 
 def test_tws_tombstone_deletes_registered_timers():
     """Tombstoning must delete every registered native timer: a
-    leftover task-timeout firing on the tombstoned key would look
-    exactly like the TTL expiry and wipe the dedupe marker early."""
-    p = _tws_processor(ttl=None)
+    leftover task-timeout would otherwise stay in the timer store and
+    call back on the tombstoned key."""
+    p = _tws_processor()
     p.handle.registerTimer(111)  # stale task-timeout, armed earlier
     p._save({"status": "COMPLETED", "thread_runs": []},
             5, 5, [{"maturation_timestamp": 111, "thread_run_id": 0,
@@ -216,19 +170,11 @@ def test_tws_tombstone_deletes_registered_timers():
     assert p.handle.timers == set(), "stale native timer survived tombstone"
     assert p._run.get()[3] == 1  # tombstoned
 
-    # With a TTL configured, exactly the TTL timer remains.
-    p2 = _tws_processor(ttl=60_000)
-    p2.handle.registerTimer(111)
-    p2._save({"status": "COMPLETED", "thread_runs": []},
-             5, 5, [], [], "r1", None)
-    assert len(p2.handle.timers) == 1
-    assert 111 not in p2.handle.timers
-
 
 def test_tws_permanent_tombstone_survives_stale_expiry():
-    """ttl=None = permanent marker: even a stale (pre-fix) timer
-    firing on the tombstoned key must NOT clear it."""
-    p = _tws_processor(ttl=None)
+    """The tombstone is a permanent marker: even a stale timer firing
+    on the tombstoned key must NOT clear it, and emits nothing."""
+    p = _tws_processor()
     p._run.update(("", 5, 5, 1))  # already tombstoned
 
     class _Exp:
@@ -238,10 +184,4 @@ def test_tws_permanent_tombstone_survives_stale_expiry():
     out = list(p.handleExpiredTimer(("r1",), None, _Exp()))
     assert p._run.get() is not None and p._run.get()[3] == 1, (
         "stale expiry cleared a permanent tombstone")
-    assert len(out) == 1 and out[0].empty
-
-    # With a TTL, the expiry drops the marker (the TTL semantics).
-    p2 = _tws_processor(ttl=60_000)
-    p2._run.update(("", 5, 5, 1))
-    list(p2.handleExpiredTimer(("r1",), None, _Exp()))
-    assert p2._run.get() is None
+    assert out == []

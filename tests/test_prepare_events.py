@@ -37,10 +37,9 @@ def test_prepare_events_invariants(events, max_offset, max_event_ts, lateness):
     if lateness is not None:
         # No kept DATA event trails the RUNNING max seen at its
         # arrival by more than the allowance (arrival = input order).
-        # TIMER_EVENTs are engine-internal control flow (late by
-        # construction — a delayed pump injects them after event-time
-        # moved on) and must NEVER be dropped: the pump's
-        # fired-ledger would strand the SLEEP forever.
+        # TIMER_EVENTs are control flow (late by construction — a
+        # replayed log records them after event-time moved on) and
+        # must NEVER be dropped: nothing would fire the SLEEP again.
         running = max_event_ts
         kept = set(map(id, out))
         for e in sorted(events, key=lambda e: e.get("offset") or 0):

@@ -1,5 +1,5 @@
 """Streaming engine integration tests: the same fold under
-transformWithStateInPandas must agree with the batch engine, including
+row-based transformWithState must agree with the batch engine, including
 state persisted across micro-batches."""
 
 from __future__ import annotations
@@ -20,6 +20,25 @@ from old_original_java_little_horse_spark.streaming.engine import (
 )
 
 from .conftest import SF_SMOKE
+
+
+def _write_timer_events(spark, out_dir: str, events_dir: Path, now_ms: int,
+                        name: str) -> int:
+    """Write a TIMER_EVENT into the events dir for every `kind='timer'`
+    row the engine emitted that has matured by `now_ms` — what a
+    replayed reference log carries — and return how many.  The offset
+    is the maturation time in µs, the command producer's scale
+    (`cli._write_event`: produce-time µs): on a ms scale every timer
+    would sort BEFORE the µs-scale command that created it."""
+    timers = [json.loads(r["payload"]) for r in spark.read.parquet(out_dir)
+              .where((F.col("kind") == "timer")
+                     & (F.col("maturation_timestamp") <= now_ms)).collect()]
+    rows = [(t["wf_run_id"], None, None, "TIMER_EVENT", t["thread_run_id"],
+             t["maturation_timestamp"], t["maturation_timestamp"] * 1000,
+             json.dumps(t)) for t in timers]
+    spark.createDataFrame(rows, schema=WF_EVENT_SCHEMA) \
+         .coalesce(1).write.parquet(str(events_dir / name))
+    return len(rows)
 
 
 def test_streaming_matches_batch(spark):
@@ -251,19 +270,19 @@ def test_watermark_drops_late_events(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_timer_pump_completes_sleep_workflow(spark):
-    """ST2 end-to-end: a SLEEP workflow completes with no manual timer
-    injection — the pump punctuates, re-injects matured timers, and a
-    second engine pass folds them.  Duplicate ticks are harmless."""
+def test_replayed_timer_event_completes_sleep_workflow(spark):
+    """ST2 on the replay path: a replay emits the SLEEP's timer as a
+    `kind='timer'` row and fires nothing itself; a TIMER_EVENT for it
+    in the events dir completes the run on the next pass, and a
+    duplicate of that event is harmless."""
     from old_original_java_little_horse_spark.sdk.builder import Workflow
-    from old_original_java_little_horse_spark.streaming.timers import TimerPump
 
     wf = Workflow("sleepy")
     t = wf.thread("entrypoint")
     t.sleep_for(1)
     spec = wf.build()
 
-    workdir = Path(tempfile.mkdtemp(prefix="stream-pump-"))
+    workdir = Path(tempfile.mkdtemp(prefix="stream-timer-"))
     try:
         events_dir = workdir / "events"
         events_dir.mkdir()
@@ -276,10 +295,11 @@ def test_timer_pump_completes_sleep_workflow(spark):
             spark, str(events_dir) + "/*", spec,
             checkpoint_dir=str(workdir / "ckpt"), output_dir=out_dir)
 
-        pump = TimerPump(spark, out_dir, str(events_dir), str(workdir / "ledger"))
-        fired = pump.tick(now_ms=10_000)   # sleep matured (1000+1000ms <= 10s)
-        assert fired == 1
-        assert pump.tick(now_ms=10_000) == 0  # idempotent: already fired
+        # sleep matured (1000+1000ms <= 10s); delivered twice
+        assert _write_timer_events(spark, out_dir, events_dir, 10_000,
+                                   "timers-a") == 1
+        assert _write_timer_events(spark, out_dir, events_dir, 10_000,
+                                   "timers-b") == 1
 
         tagged = run_streaming_availablenow(
             spark, str(events_dir) + "/*", spec,
@@ -288,6 +308,7 @@ def test_timer_pump_completes_sleep_workflow(spark):
                  if r["kind"] == "snapshot"]
         assert snaps and snaps[-1]["status"] == "COMPLETED"
         assert snaps[-1]["thread_runs"][0]["task_runs"][0]["status"] == "COMPLETED"
+        assert len(snaps[-1]["thread_runs"][0]["task_runs"]) == 1
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
 
@@ -330,8 +351,8 @@ def test_multi_spec_engine_one_stream(spark):
 
 def test_native_timers_complete_sleep_self_contained(spark):
     """ST2, no satellite: with `native_timers` the engine itself fires
-    the stored SLEEP timer via group-state ProcessingTimeTimeout — the
-    run completes with NO further input and NO TimerPump re-injection
+    the stored SLEEP timer through a native processing-time timer — the
+    run completes with NO further input and NO re-injected TIMER_EVENT
     (reference punctuator semantics: a timer fires even if no events
     arrive, SchedulerProcessor.java:56-60, 88-126)."""
     import time
@@ -375,7 +396,7 @@ def test_native_timers_complete_sleep_self_contained(spark):
                 final = snaps[-1]
                 break
             time.sleep(0.3)
-        assert final is not None, "sleep never completed without a pump"
+        assert final is not None, "sleep never completed without further input"
         state = json.loads(final["payload"])
         assert state["thread_runs"][0]["task_runs"][0]["status"] == "COMPLETED"
         # The timer row was emitted (observability), but nothing ever
@@ -443,14 +464,13 @@ def test_completed_run_state_evicted_to_tombstone(spark):
 
 
 def test_timer_replay_from_scratch_preserves_order(spark):
-    """Regression: pump-injected TIMER_EVENT offsets are on the same
-    µs scale as CLI/HTTP command offsets, so a from-scratch replay of
-    the whole events dir (fresh checkpoint, one batch) folds the start
+    """Regression: TIMER_EVENT offsets in the log are on the same µs
+    scale as CLI/HTTP command offsets, so a from-scratch replay of the
+    whole events dir (fresh checkpoint, one batch) folds the start
     command BEFORE its timer.  With ms-scale timer offsets the timer
     sorted first, folded against empty state, and the run stayed
-    RUNNING forever (the ledger never re-fires)."""
+    RUNNING forever (nothing fires a replay's timer again)."""
     from old_original_java_little_horse_spark.sdk.builder import Workflow
-    from old_original_java_little_horse_spark.streaming.timers import TimerPump
 
     wf = Workflow("sleepy-replay")
     t = wf.thread("entrypoint")
@@ -471,9 +491,8 @@ def test_timer_replay_from_scratch_preserves_order(spark):
         run_streaming_availablenow(
             spark, str(events_dir) + "/*", spec,
             checkpoint_dir=str(workdir / "ckpt"), output_dir=str(workdir / "out"))
-        pump = TimerPump(spark, str(workdir / "out"), str(events_dir),
-                         str(workdir / "ledger"))
-        assert pump.tick(now_ms=t0_ms + 10_000) == 1
+        assert _write_timer_events(spark, str(workdir / "out"), events_dir,
+                                   t0_ms + 10_000, "timers") == 1
 
         # From-scratch replay: fresh checkpoint — BOTH files land in
         # one availableNow pass and the update fn sorts by offset.

@@ -1,4 +1,4 @@
-"""The engine's transformWithStateInPandas processor (`streaming/tws.py`).
+"""The engine's row-based transformWithState processor (`streaming/tws.py`).
 
 The live streaming tests run the real runtime (the TWS Python worker
 needs `google.protobuf`; `protobuf_compat.ensure_protobuf` resolves a
@@ -16,7 +16,7 @@ import shutil
 import tempfile
 from pathlib import Path
 
-import pandas as pd
+from pyspark.sql import Row
 
 from old_original_java_little_horse_spark.engine.batch import WF_EVENT_SCHEMA
 from old_original_java_little_horse_spark.engine.batch_queries import (
@@ -94,13 +94,26 @@ class FakeExpiredTimerInfo:
         return self._ts
 
 
+_EVENT_COLS = [f.name for f in WF_EVENT_SCHEMA.fields]
+_EventRow = Row(*_EVENT_COLS)
+
+
+def _rows(events: list[dict]) -> list[Row]:
+    """Events as the runtime delivers them: Rows in WF_EVENT_SCHEMA
+    order, a missing column null."""
+    return [_EventRow(*(e.get(c) for c in _EVENT_COLS)) for e in events]
+
+
 def _drive(proc: WFRunFoldProcessor, key: str, events: list[dict]) -> list[dict]:
     """Push one micro-batch group of events; return the output rows."""
-    pdf = pd.DataFrame(events)
-    out = []
-    for res in proc.handleInputRows((key,), iter([pdf]), None):
-        out.extend(res.to_dict("records"))
-    return out
+    return [r.asDict()
+            for r in proc.handleInputRows((key,), iter(_rows(events)), None)]
+
+
+def _expire(proc: WFRunFoldProcessor, key: str, ts: int) -> list[dict]:
+    """Fire one native timer callback; return the output rows."""
+    return [r.asDict() for r in proc.handleExpiredTimer(
+        (key,), None, FakeExpiredTimerInfo(ts))]
 
 
 def _start_event(run_id: str, variables: dict, offset: int = 0,
@@ -155,10 +168,7 @@ def test_per_timer_native_callbacks():
     assert handle.timers == {maturation}  # one native timer per WFRunTimer
     assert [r["status"] for r in rows if r["kind"] == "snapshot"] == ["RUNNING"]
 
-    out = []
-    for res in proc.handleExpiredTimer(("r1",), None,
-                                       FakeExpiredTimerInfo(maturation)):
-        out.extend(res.to_dict("records"))
+    out = _expire(proc, "r1", maturation)
     snaps = [r for r in out if r["kind"] == "snapshot"]
     assert snaps and snaps[-1]["status"] == "COMPLETED"
     state = json.loads(snaps[-1]["payload"])
@@ -167,30 +177,22 @@ def test_per_timer_native_callbacks():
     assert list(handle.states["timers"].get()) == []
 
 
-def test_tombstone_eviction_and_ttl_removal():
-    """evict_completed: terminal run → tombstone (duplicates dropped);
-    the TTL timer callback removes even the marker."""
+def test_tombstone_eviction_drops_duplicates():
+    """evict_completed: terminal run → tombstone, no timer left
+    registered, and a redelivered duplicate is dropped."""
     handle = FakeHandle()
     proc = WFRunFoldProcessor(pipeline_spec(), executor=pipeline_executor,
-                              native_timers=True, evict_completed=True,
-                              tombstone_ttl_ms=60_000)
+                              native_timers=True, evict_completed=True)
     proc.init(handle)
     rows = _drive(proc, "r1", [_start_event("r1", {"n_purch": 1, "n_click": 1})])
     assert [r["status"] for r in rows if r["kind"] == "snapshot"] == ["COMPLETED"]
     assert handle.states["run"].get()[3] == 1  # tomb marker
-    assert len(handle.timers) == 1             # the TTL timer
+    assert handle.timers == set()
 
     # Redelivered duplicate start → swallowed, no output, no restart.
     dup = _drive(proc, "r1", [_start_event("r1", {"n_purch": 1, "n_click": 1})])
     assert dup == []
-
-    # TTL fires → the key's state is fully removed.
-    (ttl_ts,) = handle.timers
-    out = []
-    for res in proc.handleExpiredTimer(("r1",), None, FakeExpiredTimerInfo(ttl_ts)):
-        out.extend(res.to_dict("records"))
-    assert out == []
-    assert handle.states["run"].get() is None
+    assert handle.states["run"].get()[3] == 1
 
 
 def test_stale_timer_callback_is_noop():
@@ -210,15 +212,12 @@ def test_stale_timer_callback_is_noop():
                                      + 600_000)])
     before = handle.states["run"].get()
     assert list(handle.states["timers"].get())  # the sleep is pending
-    out = []
-    for res in proc.handleExpiredTimer(("r1",), None, FakeExpiredTimerInfo(1)):
-        out.extend(res.to_dict("records"))
-    assert out == []
+    assert _expire(proc, "r1", 1) == []
     assert handle.states["run"].get() == before
 
 
 def test_tws_streaming_twin_matches_batch(spark):
-    """Full Structured Streaming run under transformWithStateInPandas
+    """Full Structured Streaming run under row-based transformWithState
     equals the workflow's closed form."""
     from old_original_java_little_horse_spark.streaming.engine import (
         run_streaming_availablenow,
@@ -292,7 +291,7 @@ def test_tws_native_timer_fires_live(spark):
                 final = snaps[-1]
                 break
             time.sleep(0.3)
-        assert final is not None, "sleep never completed without a pump"
+        assert final is not None, "sleep never completed without further input"
         state = json.loads(final["payload"])
         assert state["thread_runs"][0]["task_runs"][0]["status"] == "COMPLETED"
         # Nothing re-injected events: the input dir still has only cmd1.
@@ -305,10 +304,6 @@ def test_tws_native_timer_fires_live(spark):
 # ---------------------------------------------------------------------------
 # Processor vs pure fold: ANY interleaving, ANY micro-batch slicing
 # ---------------------------------------------------------------------------
-
-_EVENT_COLS = ["wf_run_id", "wf_spec_id", "wf_spec_name", "event_type",
-               "thread_id", "timestamp", "offset", "content"]
-
 
 def test_processor_matches_pure_fold_on_random_interleavings_and_batchings():
     """For any event interleaving AND any micro-batch slicing of it,
@@ -331,11 +326,6 @@ def test_processor_matches_pure_fold_on_random_interleavings_and_batchings():
         emit_ctx_rows,
     )
     from .test_fold_properties import SPEC, event_pool
-
-    def norm(rows):
-        # pandas NaN (float cols) != NaN under dict equality
-        return [{k: (None if isinstance(v, float) and v != v else v)
-                 for k, v in r.items()} for r in rows]
 
     @settings(max_examples=75, deadline=None)
     @given(st.data())
@@ -364,9 +354,7 @@ def test_processor_matches_pure_fold_on_random_interleavings_and_batchings():
         proc.init(FakeHandle())
         got: list[dict] = []
         for batch in batches:
-            for res in proc.handleInputRows(
-                    ("r1",), iter([pd.DataFrame(batch)]), None):
-                got.extend(norm(res.to_dict("records")))
+            got.extend(_drive(proc, "r1", batch))
 
         state, want_emitted, runs_after = None, [], []
         for batch in batches:
@@ -376,7 +364,7 @@ def test_processor_matches_pure_fold_on_random_interleavings_and_batchings():
             runs_after.append(state is not None)
 
         emitted = [r for r in got if r["kind"] in ("task_schedule", "timer")]
-        assert emitted == norm(want_emitted)
+        assert emitted == want_emitted
         snaps = [r for r in got if r["kind"] == "snapshot"]
         assert len(snaps) == sum(runs_after)
         seqs = [r["seq"] for r in snaps]
