@@ -365,7 +365,12 @@ for line in sys.stdin:
         try:
             t0 = time.perf_counter()
             df = specs[name].fn(spark, req["sf_dir"])
-            df.collect() if req.get("collect") else df.count()
+            if req.get("collect"):
+                df.collect()
+            elif req.get("noop"):
+                df.write.format("noop").mode("overwrite").save()
+            else:
+                df.count()
             emit({"type": "timing", "query": name,
                   "sec": time.perf_counter() - t0})
         except Exception as e:
@@ -550,9 +555,11 @@ class ReplayPeer:
             self._recv("warmed", timeout=900)
             self._warm_pending = False
 
-    def time_query(self, name: str) -> float | None:
+    def time_query(self, name: str, noop: bool = False) -> float | None:
         """One timed execution of `name` in the snapshot tree; None on
         any failure (missing query, dead peer, per-query timeout).
+        `noop=True` consumes every column through Spark's no-op sink
+        instead of counting rows (see tools/ab_movers.py).
 
         A per-query TIMEOUT does not kill the peer (ADVICE r10): one
         host stall inside one replay query used to degrade the whole
@@ -571,7 +578,8 @@ class ReplayPeer:
             return None
         if not self._send({"cmd": "time", "query": name,
                            "sf_dir": self.sf_dir,
-                           "collect": name == "q1_pricing_summary"}):
+                           "collect": name == "q1_pricing_summary",
+                           "noop": noop}):
             return None
         timeout = float(os.environ.get("SPARK_GRAFT_REPLAY_QUERY_TIMEOUT", "300"))
         deadline = time.monotonic() + timeout

@@ -6,7 +6,7 @@ state machine + indexed query store).  This package re-expresses those
 capabilities Spark-first:
 
 - ``engine``     — the event-fold state machine (pure Python core,
-                   executed via ``applyInPandas`` in batch and one
+                   executed via ``mapInPandas`` in batch and one
                    row-based ``transformWithState`` processor in
                    streaming).
 - ``sdk``        — workflow-as-code builder emitting WFSpec JSON

@@ -1,15 +1,17 @@
-"""Batch engine: the pure fold applied per-run via ``applyInPandas``.
+"""Batch engine: the pure fold applied to every run of a partition
+in one ``mapInPandas`` call.
 
-SURVEY.md §7 step 3: `wf_events` grouped by `wf_run_id` → one
-Arrow-batched Python call per run folds its (offset-ordered) events
-and emits a snapshot row.  The shuffle key is the state key — the
-same partitioning the streaming engine uses, so this is both the
-backfill/replay path and the oracle for streaming results.
+SURVEY.md §7 step 3: `wf_events` hash-repartitioned by `wf_run_id`
+→ one Arrow-batched Python call per partition groups its rows by run,
+folds each run's (offset-ordered) events and emits one snapshot row
+per run.  The shuffle key is the state key — the same partitioning
+the streaming engine uses, so this is both the backfill/replay path
+and the oracle for streaming results.
 
-Scale notes: groupBy(wf_run_id).applyInPandas shuffles each run's
-events to one task; state never leaves the executor; output is one
-row per run.  Skewed runs (many events) are bounded by
-`maxRecordsPerBatch` Arrow chunking inside the group.
+Scale notes: `repartition(wf_run_id)` co-locates each run's events in
+one task; state never leaves the executor; output is one row per run.
+A partition's events are concatenated before grouping, so the
+partition count bounds per-task memory (see `run_events_batch`).
 """
 
 from __future__ import annotations

@@ -11,7 +11,7 @@ The workflow exercises: TASK nodes, if/else edge conditions with NOP
 merge, variable mutations (ASSIGN via jsonpath, ADD), SPAWN_THREAD /
 WAIT_FOR_THREAD with cross-thread variable scoping, and the status
 rollup — i.e. the engine's §2.3/§2.8/§2.9 core, end to end, on Spark
-via applyInPandas.
+via mapInPandas.
 """
 
 from __future__ import annotations

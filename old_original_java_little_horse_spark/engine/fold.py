@@ -11,7 +11,8 @@ That purity is the point: the same function is
 
 - unit-tested without Spark (tests mirror the reference harness
   scenarios, `lhctl/lh_test_harness/tests/*`),
-- applied per-key in batch via ``applyInPandas`` (engine/batch.py),
+- applied per-key in batch, every run of a partition in one
+  ``mapInPandas`` call (engine/batch.py),
 - applied per-key in streaming via row-based ``transformWithState``
   (streaming/tws.py, wired by streaming/engine.py),
 - usable as the batch oracle for the streaming engine.

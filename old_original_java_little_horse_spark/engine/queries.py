@@ -1,7 +1,7 @@
 """Engine-fold parity queries (registered once the fold lands).
 
 See `engine/fold.py` for the state machine and `engine/batch.py` for
-the applyInPandas driver.  Queries are added by importing those
+the mapInPandas driver.  Queries are added by importing those
 modules' registrations.
 """
 

@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import query
 from ..sources.parquet import load_table
-from .dedup import _MINHASH_ORACLE_SIGS, d_minhash_lsh_pairs, normalized_text
+from .dedup import _MINHASH_ORACLE_SIGS, d_minhash_lsh_pairs
+from .text import normalized_text
 
 MAX_CC_ROUNDS = 25  # backstop only; dedup graphs converge in 2-4
 

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from ..registry import query
 from ..sources.parquet import load_table
-from .text import shingles_col, words_col
+from .text import kgram_rows, words_col
 
 # Redaction patterns — deliberately simple, identical under Java regex
 # (Spark) and RE2 (DuckDB): no lookaround, no backreferences.
@@ -206,10 +206,7 @@ def t_top_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     survive the final exchange; ties break on the bigram itself for
     a total, engine-independent order."""
     d = load_table(spark, sf_dir, "documents")
-    b = d.select(
-        "lang",
-        F.explode(shingles_col(words_col(F.col("text")), 2)).alias("bigram"),
-    )
+    b = kgram_rows(d, ["lang"], words_col(F.col("text")), 2, "bigram")
     c = b.groupBy("lang", "bigram").agg(F.count(F.lit(1)).alias("cnt"))
     w = Window.partitionBy("lang").orderBy(F.desc("cnt"), "bigram")
     return (c.withColumn("rn", F.row_number().over(w))
@@ -389,12 +386,7 @@ def t_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan an n-gram LM trainer runs.
     """
     d = load_table(spark, sf_dir, "documents")
-    from .text import shingles_col, words_col
-
-    bg = d.select(
-        "doc_id",
-        F.explode(shingles_col(words_col(F.col("text")), 2)).alias("bigram"),
-    )
+    bg = kgram_rows(d, ["doc_id"], words_col(F.col("text")), 2, "bigram")
     cb = bg.groupBy("bigram").agg(F.count(F.lit(1)).alias("cb"))
     cp = (bg.select(F.substring_index("bigram", " ", 1).alias("prefix"))
           .groupBy("prefix").agg(F.count(F.lit(1)).alias("cp")))
@@ -486,11 +478,8 @@ def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     target set rides the same scan behind a filter (in production the
     target is a separate small table — same plan, broadcast model)."""
     d = load_table(spark, sf_dir, "documents")
-    from .text import shingles_col, words_col
-
-    bg = d.select(
-        "doc_id", "lang",
-        F.explode(shingles_col(words_col(F.col("text")), 2)).alias("bigram"))
+    bg = kgram_rows(d, ["doc_id", "lang"], words_col(F.col("text")), 2,
+                    "bigram")
 
     def model_of(src: DataFrame, p_name: str) -> DataFrame:
         # P(w2|w1) ×1e6 with exact integer division (`div` == the
@@ -661,8 +650,6 @@ def t_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     UTF-16 code units while DuckDB splits into codepoints, so CJK
     text would desync the symbol alphabet (a real implementation
     operates on bytes, as GPT-2's does)."""
-    from .text import shingles_col
-
     d = load_table(spark, sf_dir, "documents")
     # ONE corpus scan builds the word-frequency base; persist it so
     # each round's collect() replays the (growing) replace chain from
@@ -677,8 +664,7 @@ def t_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     merges = []
     for rnd in range(1, BPE_ROUNDS + 1):
-        top = (wf.select("n", F.explode(
-                    shingles_col(F.split("seq", " "), 2)).alias("pair"))
+        top = (kgram_rows(wf, ["n"], F.split("seq", " "), 2, "pair")
                .groupBy("pair").agg(F.sum("n").alias("cnt"))
                .orderBy(F.col("cnt").desc(), "pair")
                .limit(1).collect()[0])                # ONE row: the merge
@@ -790,8 +776,6 @@ def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces left-to-right non-overlapping, so the encoding — and
     therefore every count — is deterministic.  Docs with no
     ^[a-z]+$ word drop out (inner join), same as the oracle."""
-    from .text import shingles_col
-
     d = load_table(spark, sf_dir, "documents")
     words = d.select(
         "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("word"))
@@ -807,8 +791,7 @@ def t_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
             .persist())
     vocab = base
     for _ in range(BPE_ENC_ROUNDS):
-        top = (vocab.select("n", F.explode(
-                    shingles_col(F.split("seq", " "), 2)).alias("pair"))
+        top = (kgram_rows(vocab, ["n"], F.split("seq", " "), 2, "pair")
                .groupBy("pair").agg(F.sum("n").alias("cnt"))
                .orderBy(F.col("cnt").desc(), "pair")
                .limit(1).collect()[0])
@@ -901,10 +884,7 @@ def t_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import shingle_rows_df
 
     d = load_table(spark, sf_dir, "documents")
-    # distinct=False: the (source, s) distinct right here subsumes the
-    # per-doc one — shingles flow from the explode straight into THIS
-    # distinct's map-side partial agg, one exchange instead of two.
-    ss = (shingle_rows_df(d, _OVERLAP_K, distinct=False)
+    ss = (shingle_rows_df(d, _OVERLAP_K)
           .select("source", "s").distinct())
     c = ss.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     a, b = ss.alias("a"), ss.alias("b")

@@ -37,8 +37,9 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from ..registry import query
 from ..sources.parquet import load_table
 from .corpus import CHUNK_SIZE, CHUNK_STRIDE, SPLIT_TRAIN
-from .dedup import SHINGLE_K, normalized_text, shingle_rows_df
-from .text import QUALITY_STOPWORDS
+from .dedup import SHINGLE_K, shingle_rows_df
+from .text import (QUALITY_STOPWORDS, kgram_text, kgrams, normalized_text,
+                   normalized_words)
 
 N_SHARDS = 16       # dataloader shards of the global shuffle
 PACK_TOKENS = 256   # token budget per training pack
@@ -96,9 +97,9 @@ def t_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     contaminated-shingle fraction (exact-integer ppm).
 
     The check every pretraining pipeline runs against its eval sets
-    before training.  Scale shape: distinct per-doc shingles (one
-    doc_id-partitioned window, reused from the dedup family) split by
-    the deterministic md5 bucket; the train side hash-joins the
+    before training.  Scale shape: the dedup family's shingle rows,
+    split by the deterministic md5 bucket, distinct per train doc (the
+    oracle's `list_distinct`); the train side hash-joins the
     DISTINCT eval shingle set on the shingle string — key cardinality
     grows with data (no fixed-width blocking), the eval side is the
     small split by construction, and both groupBys partial-aggregate
@@ -108,10 +109,13 @@ def t_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Split BEFORE shingling: the md5-bucket predicate evaluates on
     # doc_id at the scan, so each branch shingles only its own split
     # (train 80% / eval 20%) instead of shingling the full corpus
-    # twice and filtering after the explode+window.
+    # twice and filtering after the explode.
     bucket = _md5_bucket(F.col("doc_id"), 100)
+    # Per-doc distinct before dropping `source` (doc_id fixes it): the
+    # same set, but the wider aggregate's size estimate keeps n_hits,
+    # not the per-train-doc totals, as the final join's broadcast side.
     train = (shingle_rows_df(d.where(bucket < SPLIT_TRAIN), SHINGLE_K)
-             .select("doc_id", "s"))
+             .distinct().select("doc_id", "s"))
     ev = (shingle_rows_df(d.where(bucket >= SPLIT_TRAIN), SHINGLE_K)
           .select("s").distinct())
     n = train.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
@@ -212,26 +216,17 @@ def t_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     subexpression elimination — the r9 formulation re-evaluated the
     split inside every reference and the trigram array twice, and the
     r10 decade probe clocked it at 115 s/sf1, the most expensive row
-    in the registry.  Three fixes, same results: the projection is
-    LAYERED so each non-cheap alias (`w`, then `tri`) is produced
-    once per row (CollapseProject keeps multi-referenced non-cheap
-    aliases in their own projection), `n_trigrams` comes from
-    arithmetic (n_words - 2, floored at 0) instead of materializing
-    the array a second time, and the trigram strings build by
-    zip_with over three array slices (three O(n) passes) rather than
-    an indexed transform of per-element `slice()` gathers."""
+    in the registry.  So the projection is LAYERED (each non-cheap
+    alias, `w` then `tri`, is produced once per row: CollapseProject
+    keeps multi-referenced non-cheap aliases in their own projection),
+    `n_trigrams` is arithmetic (n_words - 2, floored at 0), and the
+    trigram strings are one `transform` lambda per element over
+    `kgrams`.  Distinct trigrams are counted on those strings, not on
+    the `kgrams` structs: Spark's `array_distinct` has no hash-set
+    path for struct elements (measured 1.16x on this query)."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(normalized_text(F.col("text")), " ")
-    s1 = d.select("doc_id", words.alias("w"))
-    tri = F.when(
-        F.size("w") >= 3,
-        F.zip_with(
-            F.zip_with(F.slice("w", 1, F.size("w") - 2),
-                       F.expr("slice(w, 2, size(w) - 2)"),
-                       lambda x, y: F.concat_ws(" ", x, y)),
-            F.expr("slice(w, 3, size(w) - 2)"),
-            lambda xy, z: F.concat_ws(" ", xy, z)),
-    ).otherwise(F.array().cast("array<string>"))
+    s1 = d.select("doc_id", normalized_words(F.col("text")).alias("w"))
+    tri = F.transform(kgrams(F.col("w"), 3), lambda t: kgram_text(t, 3))
     s2 = s1.select(
         "doc_id",
         F.size("w").cast("long").alias("n_words"),
@@ -242,7 +237,9 @@ def t_repetition_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "n_words", "nd_words",
         F.greatest(F.col("n_words") - 2, F.lit(0).cast("long"))
         .alias("n_trigrams"),
-        F.size(F.array_distinct("tri")).cast("long").alias("nd_trigrams"),
+        # A NULL text has no trigram array; the oracle counts 0.
+        F.coalesce(F.size(F.array_distinct("tri")), F.lit(0))
+        .cast("long").alias("nd_trigrams"),
     ).withColumn(
         "rep_x1m",
         F.when(F.col("n_trigrams") == 0, F.lit(0).cast("long"))
@@ -548,7 +545,7 @@ def t_decontaminate_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
                 _bloom_pos(F.col("s"), i) for i in range(BLOOM_K)
             ])).alias("p")).distinct())
     tr = (shingle_rows_df(d.where(bucket < SPLIT_TRAIN), SHINGLE_K)
-          .select("doc_id", "s"))
+          .distinct().select("doc_id", "s"))
     probe = tr.select(
         "doc_id", *[_bloom_pos(F.col("s"), i).alias(f"p{i}")
                     for i in range(BLOOM_K)])

@@ -21,6 +21,8 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from ..registry import query
 from ..sources.parquet import load_table
+from .text import (kgram_rows, kgram_text, kgrams, normalized_text,
+                   normalized_words)
 
 N_BANDS = 8
 SHINGLE_K = 5  # 5-word shingles: the corpus vocabulary is tiny, so
@@ -116,66 +118,20 @@ def grid_self_pairs(sigs: DataFrame, bucket_cols: list[str],
     return out.dropDuplicates(["id_a", "id_b"]) if dedup else out
 
 
-def normalized_text(c: Column) -> Column:
-    """Dedup normalization: lowercase, collapse whitespace, trim."""
-    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+def shingle_rows_df(d: DataFrame, k: int) -> DataFrame:
+    """(doc_id, source, s): one row per k-word shingle of each doc's
+    `normalized_words`, duplicates kept — the dedup family's ONE
+    shingle source (`kgram_rows` over `kgrams`).
 
-
-def shingle_rows_df(d: DataFrame, k: int, distinct: bool = True) -> DataFrame:
-    """Distinct (doc_id, source, s) k-word shingle rows.
-
-    ``distinct=False`` skips the (doc_id, source, s) dedup — and with
-    it the subtree's ONLY exchange, which carries k-word STRINGS (~k×
-    the text bytes, §2.3).  Correct whenever the consumer's own
-    aggregate is duplicate-insensitive: `sigs_from_md5` (min),
-    `sets_from_md5` (collect_set), a downstream coarser `.distinct()`
-    (t_source_overlap).  Those paths become explode → project →
-    partial-agg with zero shuffle before their own exchange.
-
-    Built PER ROW — `arrays_zip` of the k shifted `slice`s of the
-    word array, exploded and `concat_ws`-joined — so tokenization
-    never leaves the scan task: the first (and only) exchange of the
-    subtree is the distinct's, carrying already-map-side-deduped
-    shingles.  Two rejected shapes, both measured:
-
-    - `transform(sequence, i -> concat_ws(slice(...)))` (r9):
-      higher-order functions evaluate interpreted with a lambda per
-      shingle — ~25x slower.
-    - posexplode(words) + window `lead` (r10-r12): codegen-fast, but
-      the window hash-partitions and sorts the EXPLODED TOKEN STREAM
-      (several times the text bytes, §2.3) — a full-corpus shuffle
-      per shingle subtree that exists only to see each word's k-1
-      successors, which are row-local to begin with.  r13 parity vs
-      this form: byte-identical output, local wall parity, one
-      Exchange + one Sort gone from every consumer (§2.4).
-
-    The word array is materialized in its own projection BEFORE the
-    generator: inlining it would re-evaluate split+regexp once per
-    slice reference (11x per row at k=5 — measured 2.4x slower).
-    Non-lambda collection expressions (slice/arrays_zip/concat_ws)
-    stay inside whole-stage codegen.
-    """
-    base = d.select(
-        "doc_id", "source",
-        F.split(normalized_text(F.col("text")), " ").alias("_wa"),
-    )
-    w = F.col("_wa")
-    # All k slices share one length so position i zips words
-    # i..i+k-1; docs shorter than k words yield no complete shingle
-    # (L=0 -> empty zip -> explode drops the doc, matching the old
-    # `_tail IS NOT NULL` filter and the oracles' len(w) >= k guard).
-    length = F.greatest(F.size(w) - F.lit(k - 1), F.lit(0))
-    zipped = F.arrays_zip(*[F.slice(w, j + 1, length) for j in range(k)])
-    out = (
-        base.select("doc_id", "source", F.explode(zipped).alias("_t"))
-        .select(
-            "doc_id", "source",
-            F.concat_ws(
-                " ", *[F.col("_t").getField(str(j)) for j in range(k)]
-            ).alias("s"),
-        )
-    )
-    return out.distinct() if distinct else out
+    Never deduplicated here: every consumer dedups at its own grain —
+    `sigs_from_md5` takes a min, `sets_from_md5` a collect_set,
+    t_source_overlap a (source, s) distinct, the decontamination eval
+    sides an `s` distinct, and the train sides that count per-doc
+    distinct shingles write their own `.distinct()`.  So rows flow
+    from the explode straight into each consumer's map-side partial
+    aggregate; tokenization never leaves the scan task."""
+    return kgram_rows(d, ["doc_id", "source"],
+                      normalized_words(F.col("text")), k, "s")
 
 
 def _hashed_shingle_sets(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
@@ -201,14 +157,10 @@ def shingle_md5_rows_df(docs: DataFrame, k: int) -> DataFrame:
     verification shingle sets (8 hex chars).  A consumer that needs
     both (the streaming incremental index) computes this once,
     persists it, and derives each, instead of re-shingling the corpus
-    twice.
-
-    NOT string-distinct (r13): both derivations dedup after hashing —
-    `sigs_from_md5` takes a min, `sets_from_md5` a collect_set — so
-    rows here flow straight from the explode into each consumer's
-    map-side partial aggregate; a string-level distinct would add a
-    full shingle-string exchange that buys nothing."""
-    return (shingle_rows_df(docs, k, distinct=False)
+    twice.  Both derivations dedup after hashing, so a string-level
+    distinct would add a full shingle-string exchange that buys
+    nothing."""
+    return (shingle_rows_df(docs, k)
             .withColumn("h", F.md5("s")).drop("s"))
 
 
@@ -447,7 +399,7 @@ def d_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dropped the row entirely (ADVICE r10).
     toks = d.select(
         "doc_id",
-        F.explode_outer(F.split(normalized_text(F.col("text")), " ")).alias("tok"))
+        F.explode_outer(normalized_words(F.col("text"))).alias("tok"))
     hashed = toks.select("doc_id", F.md5("tok").alias("hh"))
     ints = hashed.select(
         "doc_id",
@@ -594,7 +546,7 @@ def simhash64_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     w = d.select(
         "doc_id",
-        F.explode(F.split(normalized_text(F.col("text")), " ")).alias("w"),
+        F.explode(normalized_words(F.col("text"))).alias("w"),
     ).select(
         "doc_id",
         F.md5("w").alias("h1"),
@@ -925,20 +877,15 @@ def winnow_live_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprint); postings wider than WINNOW_MAX_DF are dropped."""
     d = load_table(spark, sf_dir, "documents")
     k, w = WINNOW_K, WINNOW_W
-    words = F.split(
-        F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-    doc = d.select("doc_id", words.alias("w"))
-    hs = F.expr(
-        f"CASE WHEN size(w) >= {k} THEN "
-        f"transform(sequence(1, size(w) - {k - 1}), "
-        f"i -> cast(conv(substring(md5(array_join(slice(w, i, {k}), ' ')), "
-        f"1, 14), 16, 10) AS bigint)) ELSE array() END")
-    fp = F.expr(
-        f"array_distinct(CASE WHEN size(hs) >= {w} THEN "
-        f"transform(sequence(1, size(hs) - {w - 1}), "
-        f"i -> array_min(slice(hs, i, {w}))) ELSE array() END)")
-    posting = (doc.withColumn("hs", hs)
-               .select("doc_id", F.explode(fp).alias("h")))
+    doc = d.select("doc_id", normalized_words(F.col("text")).alias("w"))
+    hashed = doc.select("doc_id", F.transform(
+        kgrams(F.col("w"), k),
+        lambda t: F.conv(F.substring(F.md5(kgram_text(t, k)), 1, 14), 16, 10)
+                   .cast("bigint")).alias("hs"))
+    fp = F.array_distinct(F.transform(
+        kgrams(F.col("hs"), w),
+        lambda t: F.least(*[t.getField(str(j)) for j in range(w)])))
+    posting = hashed.select("doc_id", F.explode(fp).alias("h"))
     return (posting
             .withColumn("_df", F.count(F.lit(1)).over(
                 Window.partitionBy("h")))
@@ -956,14 +903,16 @@ def d_winnow_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     with their overlap count.
 
     Spark-first shape: the per-doc pipeline (k-grams → hashes →
-    window minima → distinct) is ALL JVM-side higher-order array
-    functions (`transform`/`slice`/`array_min`/`array_distinct`) —
-    zero explode until the final fingerprint table, so tokenization
-    never shuffles.  The posting join then exchanges ONCE on the
-    fingerprint value; a window count caps posting-list length at
-    {df} first (stop-fingerprint rule — boilerplate grams would
-    otherwise emit O(df²) pairs at 100 TB), reusing the same hash
-    partitioning, and the pair rollup is the one remaining exchange.
+    window minima → distinct) is ALL JVM-side array expressions — the
+    k-grams and the hash windows are both `kgrams`, each mapped by one
+    `transform` lambda (md5 of the joined words; `least` of the
+    window's hashes) — zero explode until the final fingerprint
+    table, so tokenization never shuffles.  The posting join then
+    exchanges ONCE on the fingerprint value; a window count caps
+    posting-list length at {df} first (stop-fingerprint rule —
+    boilerplate grams would otherwise emit O(df²) pairs at 100 TB),
+    reusing the same hash partitioning, and the pair rollup is the
+    one remaining exchange.
     """
     live = winnow_live_postings(spark, sf_dir)
     a, b = live.alias("a"), live.alias("b")

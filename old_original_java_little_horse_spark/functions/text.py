@@ -1,11 +1,15 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
 Language ID (n-gram/stopword heuristic), quality scoring, token
-counting, and document fingerprinting over the `documents` table.
-Everything is JVM-side Catalyst expressions (split / higher-order
-array functions / md5) — no Python UDFs — so at 100 TB these run
-inside whole-stage codegen directly on the parquet scan, shuffle-free
-(they are all per-row maps followed by nothing).
+counting, and document fingerprinting over the `documents` table,
+plus the tokenizers and the one k-gram builder (`kgrams`) that every
+shingle, n-gram and stride-1 window in the registry is made from
+(strided chunk windows explode a `sequence` of start offsets instead).
+Everything is JVM-side Catalyst expressions (split / slice /
+arrays_zip / md5, with a higher-order function only where a per-
+element map or filter has no built-in form) — no Python UDFs — so at
+100 TB these run on the parquet scan, shuffle-free (they are all
+per-row maps followed by nothing).
 
 Determinism: word tokenization is a plain single-space split on both
 engines; scores are rounded before output.
@@ -34,6 +38,60 @@ QUALITY_STOPWORDS = ("the", "a", "of", "and", "to", "is", "in", "it")
 
 def words_col(text: Column) -> Column:
     return F.split(text, " ")
+
+
+def normalized_text(c: Column) -> Column:
+    """Dedup normalization: lowercase, collapse whitespace, trim."""
+    return F.trim(F.regexp_replace(F.lower(c), r"\s+", " "))
+
+
+def normalized_words(text: Column) -> Column:
+    """The dedup family's tokenizer: `normalized_text` split on spaces."""
+    return words_col(normalized_text(text))
+
+
+def kgrams(arr: Column, k: int) -> Column:
+    """Every run of k consecutive elements of `arr`, in order, as
+    `array<struct<0, .., k-1>>`: `arrays_zip` of the k aligned slices
+    `arr[1..]`, `arr[2..]`, .., all cut to one length so position i
+    zips elements i..i+k-1.  Empty when `arr` has fewer than k
+    elements, NULL when `arr` is NULL.  No lambda: slice and
+    arrays_zip stay inside whole-stage codegen.
+
+    Rejected shapes, all measured:
+
+    - `transform(sequence(1, n-k+1), i -> concat_ws(slice(w, i, k)))`
+      (r9): a higher-order function runs interpreted with one lambda
+      and one slice gather per window — ~25x slower.
+    - posexplode(words) + window `lead` (r10-r12): codegen-fast, but
+      the window hash-partitions and sorts the EXPLODED TOKEN STREAM
+      (several times the text bytes) — a full-corpus shuffle that
+      exists only to see each word's k-1 successors, which are
+      row-local to begin with.  The per-row form here gives byte-
+      identical output with one Exchange + one Sort fewer per
+      consumer.
+    - `arr` inlined as an expression (e.g. `kgrams(split(..), k)`
+      under an explode): it is re-evaluated once per slice reference
+      (11x per row at k=5 — measured 2.4x slower).  Pass a column
+      materialized by an earlier projection, as `kgram_rows` does.
+    """
+    n = F.greatest(F.size(arr) - F.lit(k - 1), F.lit(0))
+    return F.arrays_zip(*[F.slice(arr, j + 1, n) for j in range(k)])
+
+
+def kgram_text(t: Column, k: int) -> Column:
+    """One `kgrams` element's k words joined by single spaces."""
+    return F.concat_ws(" ", *[t.getField(str(j)) for j in range(k)])
+
+
+def kgram_rows(d: DataFrame, keep: list[str], words: Column, k: int,
+               name: str) -> DataFrame:
+    """One row per k-gram of `words` (duplicates kept), carrying the
+    `keep` columns, with the k-gram's text as `name`.  The word array
+    gets its own projection before the explode (see `kgrams`)."""
+    base = d.select(*keep, words.alias("_w"))
+    return (base.select(*keep, F.explode(kgrams(F.col("_w"), k)).alias("_t"))
+            .select(*keep, kgram_text(F.col("_t"), k).alias(name)))
 
 
 def _count_in(words: Column, vocab: tuple[str, ...]) -> Column:
@@ -150,24 +208,6 @@ def t_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Document fingerprinting: content hash + min-shingle rolling fingerprint
 # --------------------------------------------------------------------------
 
-def shingles_col(words: Column, k: int = 3) -> Column:
-    """k-word shingles as strings; empty array when the doc is shorter
-    than k words (guarded — Spark's sequence(1,0) would descend).
-
-    Built by folding k aligned array slices with zip_with (k-1 linear
-    passes) instead of an indexed transform of per-element slice()
-    gathers: higher-order functions run interpreted (off whole-stage
-    codegen), so per-element work dominates — the gather version was
-    the hot spot the r10 decade probe flagged on t_repetition_score
-    (115 s/sf1 before, ~5 s after this family of fixes)."""
-    n = F.size(words)
-    sh = F.slice(words, 1, n - (k - 1))
-    for j in range(2, k + 1):
-        sh = F.zip_with(sh, F.slice(words, j, n - (k - 1)),
-                        lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
-
-
 @query(
     "t_fingerprint",
     oracle="""
@@ -192,22 +232,29 @@ def t_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content md5 + rolling min-hash fingerprint over 3-word shingles
     (the 1-permutation MinHash used by the dedup family).
 
-    Layered projection: the shingle array is interpreted-HOF work and
-    is referenced twice below, so it gets its own select — CollapseProject
-    keeps multi-referenced non-cheap aliases materialized, evaluating
-    the split and the shingle build once per row instead of once per
-    reference (see t_repetition_score for the measured cost)."""
+    Layered projection: the shingle array is interpreted-HOF work (one
+    `transform` lambda per shingle over `kgrams`) and is referenced
+    twice below, so it gets its own select — CollapseProject keeps
+    multi-referenced non-cheap aliases materialized, evaluating the
+    split and the shingle build once per row instead of once per
+    reference (see t_repetition_score for the measured cost).
+    Distinct shingles are counted on the joined strings, not on the
+    `kgrams` structs: Spark's `array_distinct` has no hash-set path
+    for struct elements (measured 2.18x on this query)."""
     d = load_table(spark, sf_dir, "documents")
     s1 = d.select("doc_id", "text", words_col(F.col("text")).alias("w"))
     s2 = s1.select(
         "doc_id",
         F.md5("text").alias("content_md5"),
-        shingles_col(F.col("w")).alias("sh"),
+        F.transform(kgrams(F.col("w"), 3), lambda t: kgram_text(t, 3))
+         .alias("sh"),
     )
     return s2.select(
         "doc_id", "content_md5",
         F.array_min(F.transform("sh", F.md5)).alias("min_shingle_hash"),
-        F.size(F.array_distinct("sh")).alias("n_distinct_shingles"),
+        # A NULL text has no shingle array; the oracle counts 0.
+        F.coalesce(F.size(F.array_distinct("sh")), F.lit(0))
+         .alias("n_distinct_shingles"),
     )
 
 

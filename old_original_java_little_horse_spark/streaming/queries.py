@@ -17,8 +17,9 @@ from ..engine.batch_queries import (
 )
 from ..functions.dedup import (
     EXACT_DEDUP_ORACLE, MINHASH_PAIRS_ORACLE, SHINGLE_K,
-    normalized_text, sets_from_md5, shingle_md5_rows_df, sigs_from_md5,
+    sets_from_md5, shingle_md5_rows_df, sigs_from_md5,
 )
+from ..functions.text import normalized_text
 from ..registry import query
 from ..session import scoped_conf
 from ..sources.parquet import load_table, timed_events

@@ -31,7 +31,7 @@ from .conftest import SF_SMOKE
 
 
 def _normalize(text: str) -> str:
-    # mirror functions.dedup.normalized_text + the 64-char prefix
+    # mirror functions.text.normalized_text + the 64-char prefix
     return re.sub(r"\s+", " ", text.lower()).strip()[:_EDIT_PREFIX]
 
 

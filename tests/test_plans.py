@@ -145,6 +145,19 @@ def test_topk_queries_use_window_group_limit(spark):
         assert "WindowGroupLimit" in ops, (name, ops)
 
 
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_bigram_explodes_have_no_lambda(spark):
+    """The bigram explodes build on `kgrams` (arrays_zip of slices),
+    which stays in whole-stage codegen: no higher-order-function
+    lambda anywhere in the optimized plan."""
+    for name in ("t_top_ngrams", "t_lm_score", "t_dsir_weights"):
+        plan = _optimized_plan(Q[name].fn(spark, SF_SMOKE))
+        assert "lambdafunction" not in plan, (name, plan)
+
+
 def test_centroids_partial_aggregation(spark):
     """The (label, pos) rollup partial-aggregates before its exchange,
     so shuffle volume is |labels|·dims per partition, not corpus-sized."""
@@ -323,6 +336,9 @@ def test_winnow_no_cartesian_and_capped_posting(spark):
     assert "BroadcastNestedLoop" not in " ".join(ops), ops
     txt = explain_str(df)
     assert "transform(" in txt or "Generate" in txt  # array pipeline
+    # k-grams and hash windows come from `kgrams`, not per-window
+    # `transform(sequence(..), i -> slice(..))` gathers.
+    assert "sequence(" not in _optimized_plan(df)
 
 
 def test_tfidf_topk_broadcast_and_takeordered(spark):

@@ -12,6 +12,13 @@ within every (pass, query) cell HEAD and the peer run back-to-back with
 alternating order, so host weather cancels in the per-query ratio
 exactly like the round bench.
 
+Each timed run consumes every output column through Spark's no-op
+sink, where the round bench counts rows: under `.count()` Catalyst
+prunes a per-row projection or a left-joined column away (t_lm_score,
+t_dsir_weights, t_fingerprint and t_repetition_score reduce to a
+document-count scan), and the A/B would time a plan neither side's
+change touched.
+
 Usage:
   python tools/ab_movers.py --commit ad2b7a7^ \
       --queries sim_semantic_decontaminate,sim_topk_bruteforce \
@@ -76,10 +83,12 @@ def main() -> None:
         try:
             t0 = time.perf_counter()
             df = specs[name].fn(spark, args.sf_dir)
-            # Mirror ReplayPeer.time_query exactly: the peer collects
-            # q1 (bench.py parity), so HEAD must too — counting on one
-            # side only skews that query's ratio by the collect cost.
-            df.collect() if name == "q1_pricing_summary" else df.count()
+            # Mirror ReplayPeer.time_query(noop=True) exactly: the peer
+            # collects q1 (bench.py parity), so HEAD must too.
+            if name == "q1_pricing_summary":
+                df.collect()
+            else:
+                df.write.format("noop").mode("overwrite").save()
             return time.perf_counter() - t0
         except Exception as e:  # noqa: BLE001
             errors.setdefault(name, f"{type(e).__name__}: {e}"[:200])
@@ -88,9 +97,9 @@ def main() -> None:
     for pass_no in range(args.passes):
         for name in names:
             if pass_no % 2 == 0:
-                h, r = time_head(name), peer.time_query(name)
+                h, r = time_head(name), peer.time_query(name, noop=True)
             else:
-                r, h = peer.time_query(name), time_head(name)
+                r, h = peer.time_query(name, noop=True), time_head(name)
             if h is not None:
                 head[name].append(h)
             if r is not None:
