@@ -35,7 +35,8 @@ judge-side re-runs:
   (``BENCH_LASTRUN_c{N}.json``) so a scaling re-run at another core
   count cannot clobber the committed window.
 
-Timing counts full execution (collect) but not session startup.
+Timing counts full execution (every output column consumed through
+Spark's no-op sink, see `consume`) but not session startup.
 """
 
 from __future__ import annotations
@@ -130,6 +131,15 @@ N_TIMED_RUNS = 3  # median-of-3: one timed run was observed to mis-read
                   # the three and the median holds.
 
 
+def consume(df) -> None:
+    """Execute `df` in full: every output column through Spark's no-op
+    sink.  Under `.count()` Catalyst prunes a per-row projection or a
+    left-joined column away (t_lm_score, t_dsir_weights, t_fingerprint
+    and t_repetition_score reduce to a document-count scan), so a
+    counted query times a plan the query's own work is not in."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -157,7 +167,7 @@ def main() -> None:
     peer.send_warm(names)
     for name in names:
         try:
-            specs[name].fn(spark, "/root/testdata/sf0.001").count()
+            consume(specs[name].fn(spark, "/root/testdata/sf0.001"))
         except Exception:
             pass  # a query that only works at larger SF still times below
     peer.wait_warm()
@@ -169,8 +179,7 @@ def main() -> None:
         query must cost its own row, never the whole artifact."""
         try:
             t0 = time.perf_counter()
-            df = specs[name].fn(spark, sf_dir)
-            df.collect() if name == "q1_pricing_summary" else df.count()
+            consume(specs[name].fn(spark, sf_dir))
             return time.perf_counter() - t0
         except Exception as e:  # noqa: BLE001
             head_errors.setdefault(name, f"{type(e).__name__}: {e}"[:200])
@@ -351,7 +360,8 @@ for line in sys.stdin:
             if name not in specs:
                 continue
             try:
-                specs[name].fn(spark, req["sf_dir"]).count()
+                specs[name].fn(spark, req["sf_dir"]).write.format(
+                    "noop").mode("overwrite").save()
                 n += 1
             except Exception:
                 pass
@@ -364,13 +374,8 @@ for line in sys.stdin:
             continue
         try:
             t0 = time.perf_counter()
-            df = specs[name].fn(spark, req["sf_dir"])
-            if req.get("collect"):
-                df.collect()
-            elif req.get("noop"):
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
+            specs[name].fn(spark, req["sf_dir"]).write.format(
+                "noop").mode("overwrite").save()  # bench.consume
             emit({"type": "timing", "query": name,
                   "sec": time.perf_counter() - t0})
         except Exception as e:
@@ -555,11 +560,10 @@ class ReplayPeer:
             self._recv("warmed", timeout=900)
             self._warm_pending = False
 
-    def time_query(self, name: str, noop: bool = False) -> float | None:
-        """One timed execution of `name` in the snapshot tree; None on
-        any failure (missing query, dead peer, per-query timeout).
-        `noop=True` consumes every column through Spark's no-op sink
-        instead of counting rows (see tools/ab_movers.py).
+    def time_query(self, name: str) -> float | None:
+        """One timed execution of `name` in the snapshot tree, consumed
+        as `consume` does; None on any failure (missing query, dead
+        peer, per-query timeout).
 
         A per-query TIMEOUT does not kill the peer (ADVICE r10): one
         host stall inside one replay query used to degrade the whole
@@ -577,9 +581,7 @@ class ReplayPeer:
         if self._proc is None or name not in self.have:
             return None
         if not self._send({"cmd": "time", "query": name,
-                           "sf_dir": self.sf_dir,
-                           "collect": name == "q1_pricing_summary",
-                           "noop": noop}):
+                           "sf_dir": self.sf_dir}):
             return None
         timeout = float(os.environ.get("SPARK_GRAFT_REPLAY_QUERY_TIMEOUT", "300"))
         deadline = time.monotonic() + timeout

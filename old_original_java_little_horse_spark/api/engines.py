@@ -32,6 +32,7 @@ class EngineHandle:
     events_dir: str
     output_dir: str
     serving_dir: str
+    checkpoint_dir: str
     query: object  # StreamingQuery
 
 
@@ -75,10 +76,10 @@ class SparkEngineManager:
         self.shared = shared
         # Engine state-store fanout (see start_continuous docstring):
         # every state partition costs a store commit + an Arrow
-        # round-trip per micro-batch even idle, and that batch
-        # duration floors command latency through the read-your-writes
-        # barrier.  Default 4 is the measured serving optimum
-        # (tools/latency_sweep.py, r9: p50 1.51-1.60 s at 4 vs
+        # round-trip per micro-batch, and the duration of the batch
+        # that carries a command floors its latency through the
+        # read-your-writes barrier.  Default 4 is the measured serving
+        # optimum (tools/latency_sweep.py, r9: p50 1.51-1.60 s at 4 vs
         # 1.69-1.75 s at 8 and 2.0-2.4 s at 32 across triggers
         # 100-500 ms; barrier p50 1.45 s vs 1.85/2.02 s in
         # tools/engine_scale_probe.py).  Raise it for backfill-heavy
@@ -144,6 +145,7 @@ class SparkEngineManager:
                 events_dir=str(root / "events"),
                 output_dir=str(root / "out"),
                 serving_dir=serving_dirs[name],
+                checkpoint_dir=str(root / "ckpt"),
                 query=query,
             )
 

@@ -7,8 +7,8 @@ The reference boots Javalin and splits verbs across
 
 - **POST** verbs append command events to the engine's events dir
   (Kafka topic in production) — the same produce path as `cli.py` —
-  then run the read-your-writes barrier against the live streaming
-  query before responding, so a client's immediate GET sees its own
+  then run the read-your-writes barrier against the live engine's
+  checkpoint before responding, so a client's immediate GET sees its own
   write (`APIStreamsContext.java:168-222` semantics).
 - **GET** verbs read the engine's snapshot output through the same
   latest-`seq`-wins selection the CLI uses, plus the alias index for
@@ -71,7 +71,7 @@ class LittleHorseAPI:
     """Command/query facade over one or many engine instances.
 
     Single-engine mode (`events_dir`/`snapshots_dir`, optional
-    `query`): POSTs produce to the one events dir and block on the
+    `checkpoint_dir` of the engine folding `events_dir`): POSTs produce to the one events dir and block on the
     read-your-writes barrier (P6); GETs re-window `snapshots_dir`
     unless `serving_dir` points at the compacted store.
 
@@ -83,13 +83,14 @@ class LittleHorseAPI:
 
     def __init__(self, spark, events_dir: str | None = None,
                  snapshots_dir: str | None = None,
-                 query=None, barrier_timeout: float = 60.0,
+                 checkpoint_dir: str | None = None,
+                 barrier_timeout: float = 60.0,
                  serving_dir: str | None = None,
                  metadata=None, engines=None, task_deployer=None):
         self.spark = spark
         self.events_dir = events_dir
         self.snapshots_dir = snapshots_dir
-        self.query = query
+        self.checkpoint_dir = checkpoint_dir
         self.barrier_timeout = barrier_timeout
         self.serving_dir = serving_dir
         self.metadata = metadata
@@ -234,14 +235,16 @@ class LittleHorseAPI:
 
     # -- command path (POSTApi.java:40-58) --------------------------------
 
-    def _produce_to(self, events_dir: str, query, row: dict) -> None:
+    def _produce_to(self, events_dir: str, checkpoint_dir: str | None,
+                    row: dict) -> None:
         from ..cli import _write_event
 
-        _write_event(self.spark, events_dir, row)
-        if query is not None:
+        path = _write_event(self.spark, events_dir, row)
+        if checkpoint_dir is not None:
             from ..streaming.engine import await_read_your_writes
 
-            await_read_your_writes(query, timeout=self.barrier_timeout)
+            await_read_your_writes(checkpoint_dir, path,
+                                   timeout=self.barrier_timeout)
 
     # Bound on the run->engine cache: completed runs are never evicted
     # by the engine-replacement hook, so a long-lived server would
@@ -273,8 +276,9 @@ class LittleHorseAPI:
         if handle is not None:
             # A spec re-POST (deploy() replaces the handle and stops
             # the old query) or DELETE leaves this cache entry pointing
-            # at a dead query whose read-your-writes barrier would hang
-            # for the full timeout.  Only trust the cache if it is
+            # at a stopped engine: no query may fold its events dir,
+            # and the read-your-writes barrier would wait out its full
+            # timeout.  Only trust the cache if it is
             # still the current handle for its spec.
             name = (handle.spec or {}).get("name")
             if self.engines.get(name) is handle:
@@ -298,9 +302,9 @@ class LittleHorseAPI:
     def _produce(self, row: dict, run_id: str | None = None) -> None:
         if self.engines is not None:
             handle = self._engine_for_run(run_id or row["wf_run_id"])
-            self._produce_to(handle.events_dir, handle.query, row)
+            self._produce_to(handle.events_dir, handle.checkpoint_dir, row)
         else:
-            self._produce_to(self.events_dir, self.query, row)
+            self._produce_to(self.events_dir, self.checkpoint_dir, row)
 
     def post_wfrun(self, body: dict) -> dict:
         run_id = body.get("run_id") or uuid.uuid4().hex
@@ -326,9 +330,9 @@ class LittleHorseAPI:
             if handle is None:
                 raise ApiError(404, f"WFSpec {name!r} is not deployed")
             self._cache_run_engine(run_id, handle)
-            self._produce_to(handle.events_dir, handle.query, row)
+            self._produce_to(handle.events_dir, handle.checkpoint_dir, row)
         else:
-            self._produce_to(self.events_dir, self.query, row)
+            self._produce_to(self.events_dir, self.checkpoint_dir, row)
         return {"id": run_id}
 
     def post_stop_resume(self, run_id: str, verb: str, thread_id: int) -> dict:

@@ -31,7 +31,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import os
 import sys
 import time
 import uuid
@@ -60,8 +59,9 @@ def _api_call(api: str, method: str, path: str, body=None):
         return e.code, json.loads(e.read())
 
 
-def _write_event(spark, events_dir: str, row: dict) -> None:
-    """Append one command event as its own parquet file.
+def _write_event(spark, events_dir: str, row: dict) -> Path:
+    """Append one command event as its own parquet file and return its
+    `cmd-*` directory (what `await_read_your_writes` waits for).
 
     This is the file-backed stand-in for a Kafka produce, and a
     produce is a ~1 ms client write — so the event is written
@@ -71,7 +71,9 @@ def _write_event(spark, events_dir: str, row: dict) -> None:
     path in front of the read-your-writes barrier).  The engine's
     stream source reads with an explicit schema, so writer parity is
     just type parity, pinned by tests/test_streaming.py
-    (test_driver_side_event_write_matches_engine_schema).
+    (test_driver_side_event_write_matches_engine_schema).  The write
+    is the durable write-then-rename of
+    `streaming.admission.write_event_file`.
 
     Offset = produce-time µs: the engine folds events in per-key
     offset order and snapshots version by max offset (`seq`), so the
@@ -79,51 +81,9 @@ def _write_event(spark, events_dir: str, row: dict) -> None:
     a Kafka partition would — offset 0 for every command would leave
     later commands' snapshots tied with (not superseding) earlier
     ones in latest-wins selection."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    from .streaming.admission import event_table, write_event_file
 
-    tid = row.get("thread_id", 0)
-    tbl = pa.table({
-        "wf_run_id": pa.array([row["wf_run_id"]], pa.string()),
-        "wf_spec_id": pa.array([row.get("wf_spec_id")], pa.string()),
-        "wf_spec_name": pa.array([row.get("wf_spec_name")], pa.string()),
-        "event_type": pa.array([row["event_type"]], pa.string()),
-        "thread_id": pa.array([0 if tid is None else int(tid)], pa.int32()),
-        "timestamp": pa.array(
-            [row.get("timestamp") or int(time.time() * 1000)], pa.int64()),
-        "offset": pa.array(
-            [row.get("offset") or time.time_ns() // 1000], pa.int64()),
-        "content": pa.array([row["content"]], pa.string()),
-    })
-    d = Path(events_dir) / f"cmd-{uuid.uuid4().hex[:12]}"
-    d.mkdir(parents=True, exist_ok=True)
-    # Write-then-rename: the stream source lists the directory between
-    # triggers, and a half-written file would poison the batch.  fsync
-    # data BEFORE the rename (and the dir after): a power loss keeping
-    # the rename but dropping buffered contents would leave a truncated
-    # parquet under its final name that permanently poisons the
-    # explicit-schema stream source — the same torn-final-name mode
-    # closed for the engine changelog (streaming/engine.py, ADVICE r8).
-    tmp = d / ".part-00000.parquet.tmp"
-    pq.write_table(tbl, tmp)
-    fd = os.open(tmp, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-    os.replace(tmp, d / "part-00000.parquet")
-    # Two dirent fsyncs complete the durability chain (ADVICE r9):
-    # the cmd-* dir for the renamed part file's entry, and the PARENT
-    # events_dir for the cmd-* dir's own entry — without the second, a
-    # power loss can drop the whole freshly-created directory while a
-    # later-fsynced worker ledger "done" record survives, marking the
-    # attempt done though the engine never sees its events.
-    for p in (d, d.parent):
-        dfd = os.open(p, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
+    return write_event_file(events_dir, event_table(row)).parent
 
 
 def _snapshots(spark, snapshots_dir: str):

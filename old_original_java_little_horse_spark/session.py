@@ -78,6 +78,17 @@ def get_spark(app_name: str = "old-original-java-little-horse-spark",
         # type — read as long and convert in the loader (sources/parquet.py).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        # List many paths on the driver, not through a Spark job.  The
+        # live engine's file source lists `events/*` (one directory per
+        # command) on every trigger, and above this many paths
+        # (default 32) Spark lists them with a distributed job; with no
+        # batch between triggers, that job every 200 ms kept 2.5 of 4
+        # cores busy on an idle engine with 40 command directories,
+        # against 0.09 listed on the driver.  The file source reads
+        # this from the session at each listing, so it cannot be
+        # scoped to the query's start.
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
+                str(2**31 - 1))
     )
     if preload:
         # Fork Python workers from a daemon that has numpy / pandas /

@@ -24,9 +24,12 @@ operator):
 - A pacer thread releases segments into the events dir (atomic
   rename, same move the durable single-event writer uses) only while
   the released-but-not-yet-folded row count stays under
-  `max_rows_per_trigger` — folded rows are read from the engine
-  query's OWN progress stream, so a slow engine throttles the
-  release instead of accumulating an ever-larger visible backlog.
+  `max_rows_per_trigger` — folded rows are read from the engine's
+  OWN checkpoint (`checkpoint.listing_log_batches` /
+  `folded_log_batch`, the record the read-your-writes barrier reads),
+  so a slow engine throttles the release instead of accumulating an
+  ever-larger visible backlog, and the importer needs no query
+  handle (`cli import` runs as a separate process).
   Every micro-batch therefore folds at most ~`max_rows_per_trigger`
   backlog rows plus whatever live commands arrived — bounded batch
   time, so the read-your-writes barrier a new run waits on releases
@@ -40,12 +43,12 @@ operator):
   provides), and new runs are new keys, so the fast path is the
   common one.
 - After a fast-path live admit the pacer YIELDS — it holds further
-  backlog release until a batch newer than the write completes — so
-  the batch carrying the live command is near idle size rather than
-  cap size.  A fresh run during catch-up then costs roughly (half
-  the in-flight capped batch) + (one idle-grade batch), instead of
-  riding a full cap batch on top of that.  Starvation-bounded under
-  continuous live traffic.
+  backlog release for `live_yield_seconds` — so the batch carrying
+  the live command is near idle size rather than cap size.  A fresh
+  run during catch-up then costs roughly (half the in-flight capped
+  batch) + (one idle-grade batch), instead of riding a full cap
+  batch on top of that.  Starvation-bounded under continuous live
+  traffic.
 
 Ordering safety: the global offset sort at spool time puts any one
 key's rows in ascending-offset segment order, FIFO release keeps
@@ -54,11 +57,9 @@ the spooled rows it must follow.  A backlog run's own task results
 cannot overtake its RUN_STARTED either: tasks only execute after the
 fold admits the start.
 
-The folded-row feedback counts ALL input rows (live commands
-included — per-file attribution does not exist in the progress
-stream), which can only UNDER-estimate outstanding backlog and
-release slightly early; the clamp at zero bounds the error at one
-live batch's rows.
+A released segment counts as folded once the file-source log batch
+that listed it is covered by a committed micro-batch: exact, per
+segment.
 """
 from __future__ import annotations
 
@@ -78,21 +79,47 @@ _ARROW_FIELDS = [
 ]
 
 
-def _event_arrow_schema():
+def event_arrow_schema():
     import pyarrow as pa
 
     return pa.schema([(n, getattr(pa, t)()) for n, t in _ARROW_FIELDS])
 
 
+def event_table(row: dict):
+    """One command event as a one-row table of the engine's event
+    schema.  A missing or None thread id is 0; a missing timestamp or
+    offset is the produce time (ms, and µs — see `cli._write_event`)."""
+    import pyarrow as pa
+
+    tid = row.get("thread_id", 0)
+    return pa.table({
+        "wf_run_id": [row["wf_run_id"]],
+        "wf_spec_id": [row.get("wf_spec_id")],
+        "wf_spec_name": [row.get("wf_spec_name")],
+        "event_type": [row["event_type"]],
+        "thread_id": [0 if tid is None else int(tid)],
+        "timestamp": [row.get("timestamp") or int(time.time() * 1000)],
+        "offset": [row.get("offset") or time.time_ns() // 1000],
+        "content": [row["content"]],
+    }, schema=event_arrow_schema())
+
+
 def write_event_file(target_dir: str | Path, tbl) -> Path:
     """Durably publish one event file under `target_dir` as its own
-    `cmd-*/part-00000.parquet` — the same fsync'd write-then-rename
-    chain as `cli._write_event` (a torn final-name parquet would
-    permanently poison the explicit-schema stream source)."""
+    `cmd-*/part-00000.parquet` and return the file's path: the one
+    writer of single event files — command events (`cli._write_event`),
+    fast-path live admits and the engine's zero-row timer wakes."""
     import pyarrow.parquet as pq
 
     d = Path(target_dir) / f"cmd-{uuid.uuid4().hex[:12]}"
     d.mkdir(parents=True, exist_ok=True)
+    # Write-then-rename: the stream source lists the directory between
+    # triggers, and a half-written file would poison the batch.  fsync
+    # data BEFORE the rename: a power loss keeping the rename but
+    # dropping buffered contents would leave a truncated parquet under
+    # its final name that permanently poisons the explicit-schema
+    # stream source — the same torn-final-name mode closed for the
+    # engine changelog (streaming/engine.py, ADVICE r8).
     tmp = d / ".part-00000.parquet.tmp"
     pq.write_table(tbl, tmp)
     fd = os.open(tmp, os.O_RDONLY)
@@ -102,6 +129,12 @@ def write_event_file(target_dir: str | Path, tbl) -> Path:
         os.close(fd)
     final = d / "part-00000.parquet"
     os.replace(tmp, final)
+    # Two dirent fsyncs complete the durability chain (ADVICE r9):
+    # the cmd-* dir for the renamed part file's entry, and the PARENT
+    # events dir for the cmd-* dir's own entry — without the second, a
+    # power loss can drop the whole freshly-created directory while a
+    # later-fsynced worker ledger "done" record survives, marking the
+    # attempt done though the engine never sees its events.
     for p in (d, Path(target_dir)):
         dfd = os.open(p, os.O_RDONLY)
         try:
@@ -115,13 +148,14 @@ class CatchUpAdmission:
     """Paced release of a spooled event backlog into a live engine's
     events directory.  See module docstring for the design.
 
-    `query`: the running StreamingQuery whose progress paces the
-    release; pass `folded_rows_fn` instead to inject feedback (tests).
-    `spool_dir` must share a filesystem with `events_dir` (defaults
-    to a sibling, which guarantees it) — release is an atomic rename.
+    `checkpoint_dir`: the engine's checkpoint, whose committed batches
+    pace the release; pass `folded_rows_fn` instead to inject feedback
+    (tests), or neither to release freely.  `spool_dir` must share a
+    filesystem with `events_dir` (defaults to a sibling, which
+    guarantees it) — release is an atomic rename.
     """
 
-    def __init__(self, events_dir: str, query=None,
+    def __init__(self, events_dir: str,
                  spool_dir: str | None = None,
                  max_rows_per_trigger: int = 20_000,
                  segment_rows: int | None = None,
@@ -144,38 +178,27 @@ class CatchUpAdmission:
                                 or max(1, self.max_rows_per_trigger // 2))
         self.poll_seconds = poll_seconds
         # Yield-on-live: after a fast-path live admit, hold backlog
-        # release until a batch that consumed the live file completes
-        # (progress timestamps are batch-START times and post at
-        # completion, so "an entry newer than the write" proves both)
-        # — the other half of the reference's new-work-first property:
-        # the cap bounds the wait for the IN-FLIGHT batch, the yield
-        # keeps the NEXT batch, the one carrying the live command,
-        # near idle size instead of cap size.  Without progress
-        # feedback (no query) only the `live_yield_seconds` wall
-        # window applies.  Starvation-bounded: under continuous live
-        # traffic the hold is ignored once the pacer has been held
-        # `live_yield_starvation_s` straight.
+        # release for `live_yield_seconds` — the other half of the
+        # reference's new-work-first property: the cap bounds the
+        # wait for the IN-FLIGHT batch, the yield keeps the NEXT
+        # batch, the one carrying the live command, near idle size
+        # instead of cap size.  Starvation-bounded: under continuous
+        # live traffic the hold is ignored once the pacer has been
+        # held `live_yield_starvation_s` straight.
         self.live_yield_seconds = live_yield_seconds
         self.live_yield_starvation_s = live_yield_starvation_s
         self._last_live = 0.0
-        self._last_live_utc = None
         self._hold_started: float | None = None
-        self._query = query
-        # Cross-process feedback: a separate importer process has no
-        # StreamingQuery handle, but the engine's checkpoint is on
-        # disk — `commits/<bid>` marks completed batches and
-        # `sources/0/<bid>` lists the files each batch admitted, so
-        # released-segment consumption can be read from the engine's
-        # OWN write-ahead record.
-        self.checkpoint_dir = (Path(checkpoint_dir)
-                               if checkpoint_dir else None)
+        self.checkpoint_dir = checkpoint_dir
         self._released_paths: dict[str, int] = {}  # final name -> rows
+        # Released segment -> the file-source log batch that listed it
+        # (log entries never change, so each is looked up once).
+        self._listed: dict[str, int] = {}
         self._folded_rows_fn = folded_rows_fn
         self._lock = threading.Lock()
         self._segments: deque[dict] = deque()
         self._pending_keys: dict[str, int] = {}
         self._released_rows = 0
-        self._seen_batches: dict[int, int] = {}
         self._seq = 0
         self._stop = threading.Event()
         self._wake = threading.Event()
@@ -191,7 +214,7 @@ class CatchUpAdmission:
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        tbl = tbl.cast(_event_arrow_schema())
+        tbl = tbl.cast(event_arrow_schema())
         tbl = tbl.take(pc.sort_indices(tbl, sort_keys=[("offset",
                                                         "ascending")]))
         n_segments = 0
@@ -203,41 +226,27 @@ class CatchUpAdmission:
         self._wake.set()
         return n_segments
 
-    def submit_live(self, row: dict) -> None:
+    def submit_live(self, row: dict) -> Path | None:
         """Admit one live command: straight into the events dir when
         its key has nothing spooled (the common, new-run case — the
         event is visible to the very next trigger), else appended at
-        the spool tail to preserve per-key offset order."""
+        the spool tail to preserve per-key offset order.  Returns the
+        event's directory on the fast path (for
+        `await_read_your_writes`), None when spooled."""
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        tid = row.get("thread_id", 0)
-        tbl = pa.table({
-            "wf_run_id": [row["wf_run_id"]],
-            "wf_spec_id": [row.get("wf_spec_id")],
-            "wf_spec_name": [row.get("wf_spec_name")],
-            "event_type": [row["event_type"]],
-            "thread_id": pa.array([0 if tid is None else int(tid)],
-                                  pa.int32()),
-            "timestamp": pa.array(
-                [row.get("timestamp") or int(time.time() * 1000)],
-                pa.int64()),
-            "offset": pa.array(
-                [row.get("offset") or time.time_ns() // 1000], pa.int64()),
-            "content": [row["content"]],
-        }).cast(_event_arrow_schema())
+        tbl = event_table(row)
         with self._lock:
             queued = row["wf_run_id"] in self._pending_keys
         if queued:
             self._spool_segment(tbl, pa, pq)
             self._ensure_thread()
             self._wake.set()
-        else:
-            from datetime import datetime, timezone
-
-            write_event_file(self.events_dir, tbl)
-            self._last_live = time.monotonic()
-            self._last_live_utc = datetime.now(timezone.utc)
+            return None
+        path = write_event_file(self.events_dir, tbl).parent
+        self._last_live = time.monotonic()
+        return path
 
     # -- introspection ---------------------------------------------------
 
@@ -249,8 +258,6 @@ class CatchUpAdmission:
         """Released-but-not-yet-in-a-completed-batch rows (≥ 0)."""
         if self._folded_rows_fn:
             folded = self._folded_rows_fn()
-        elif self._query is not None:
-            folded = self._folded_from_progress()
         else:
             folded = self._folded_from_checkpoint()
         with self._lock:
@@ -306,114 +313,31 @@ class CatchUpAdmission:
                 self._thread.start()
 
     def _folded_from_checkpoint(self) -> int:
-        """Backlog rows consumed by COMPLETED batches, read from the
-        engine checkpoint (cross-process feedback — no query handle).
-        A released segment counts once its dir name appears in a
-        `sources/0/<bid>` file-admission record whose `commits/<bid>`
-        exists."""
-        import json as _json
+        """Released rows consumed by COMMITTED batches, read from the
+        engine checkpoint (cross-process feedback — no query handle)."""
+        from .checkpoint import folded_log_batch, listing_log_batches
 
-        ckpt = self.checkpoint_dir
-        if ckpt is None:
+        if self.checkpoint_dir is None:
             return self._released_rows  # no feedback at all: free-run
-        try:
-            committed = {int(p.name) for p in (ckpt / "commits").iterdir()
-                         if p.name.isdigit()}
-        except OSError:
-            return 0
-        folded = 0
-        seen: set[str] = set()
-        src = ckpt / "sources" / "0"
-        try:
-            batch_files = [p for p in src.iterdir()
-                           if p.name.isdigit() and int(p.name) in committed]
-        except OSError:
-            return 0
-        for bf in batch_files:
-            try:
-                lines = bf.read_text().splitlines()
-            except OSError:
-                continue
-            for line in lines:
-                if not line.startswith("{"):
-                    continue
-                try:
-                    path = _json.loads(line).get("path", "")
-                except ValueError:
-                    continue
-                # match on the released segment's (uuid-suffixed)
-                # directory name, robust to file:/ URI prefixes
-                seg_name = Path(path).parent.name
-                if seg_name in self._released_paths and seg_name not in seen:
-                    seen.add(seg_name)
-                    folded += self._released_paths[seg_name]
-        return folded
-
-    def _folded_from_progress(self) -> int:
-        q = self._query
-        if q is None:
-            return self._released_rows  # no feedback: free-run
-        try:
-            entries = list(q.recentProgress or [])
-            last = q.lastProgress
-            if last:
-                entries.append(last)
-        except Exception:
-            return self._released_rows
-        for p in entries:
-            if not p:
-                continue
-            bid = p.get("batchId")
-            if bid is not None:
-                self._seen_batches[bid] = int(p.get("numInputRows") or 0)
-        return sum(self._seen_batches.values())
-
-    def _latest_batch_start(self):
-        from datetime import datetime, timezone
-
-        latest = None
-        q = self._query
-        if q is None:
-            return None
-        try:
-            entries = list(q.recentProgress or [])
-            last = q.lastProgress
-            if last:
-                entries.append(last)
-        except Exception:
-            return None
-        for p in entries:
-            ts = (p or {}).get("timestamp")
-            if not ts:
-                continue
-            try:
-                t = datetime.strptime(
-                    ts, "%Y-%m-%dT%H:%M:%S.%fZ").replace(
-                        tzinfo=timezone.utc)
-            except ValueError:
-                continue
-            if latest is None or t > latest:
-                latest = t
-        return latest
+        with self._lock:
+            released = dict(self._released_paths)
+        unlisted = released.keys() - self._listed.keys()
+        if unlisted:
+            self._listed.update(
+                listing_log_batches(self.checkpoint_dir, unlisted))
+        folded = folded_log_batch(self.checkpoint_dir)
+        return sum(rows for name, rows in released.items()
+                   if self._listed.get(name, folded + 1) <= folded)
 
     def _yielding_to_live(self) -> bool:
-        if self.live_yield_seconds <= 0:
-            return False
         now = time.monotonic()
-        recently = now - self._last_live < self.live_yield_seconds
-        awaiting_batch = False
-        if (self._last_live_utc is not None
-                and self._query is not None):
-            latest = self._latest_batch_start()
-            awaiting_batch = latest is None or latest <= self._last_live_utc
-        if not (recently or (self._last_live and awaiting_batch)):
+        if now - self._last_live >= self.live_yield_seconds:
             self._hold_started = None
             return False
         if self._hold_started is None:
             self._hold_started = now
-        if now - self._hold_started >= self.live_yield_starvation_s:
-            return False  # continuous live traffic: stop starving
-        return True
+        # Continuous live traffic: stop starving the backlog.
+        return now - self._hold_started < self.live_yield_starvation_s
 
     def _pace(self) -> None:
         while not self._stop.is_set():

@@ -23,8 +23,10 @@ streaming query:
 - Timers: the live path (`start_continuous`) fires its own stored
   timers through one native processing-time timer per WFRunTimer — the
   reference's 1 s punctuator (`SchedulerProcessor.java:56-60`,
-  `Constants.java:36`) without any satellite process; a SLEEP
-  completes with no further input.  Replay paths read no wall clock
+  `Constants.java:36`) without any satellite process.  The live query
+  runs a batch only when input arrives; a driver-side wake writes a
+  zero-row event file when a timer is due, so a SLEEP completes with
+  no further input.  Replay paths read no wall clock
   (deterministic): their timers stay emitted `kind='timer'` rows, and
   only a TIMER_EVENT in the replayed log fires one.
 - The live engine has ONE start, `start_continuous`, and one sink,
@@ -39,8 +41,11 @@ streaming query:
 
 from __future__ import annotations
 
+import heapq
 import json
 import os
+import threading
+import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -357,7 +362,8 @@ def _upsert_shared(batch_df: DataFrame, serving_dirs: dict[str, str]) -> None:
 
 
 def start_engine_query(spark: SparkSession, writer, checkpoint_dir: str,
-                       state_partitions: int | None = None):
+                       state_partitions: int | None = None,
+                       confs: dict[str, str] | None = None):
     """Start a streaming query over the engine's tagged output — the
     ONE place every engine query start goes through.
 
@@ -365,29 +371,23 @@ def start_engine_query(spark: SparkSession, writer, checkpoint_dir: str,
     multiple column families (one per typed state variable / timer
     store): Spark's RocksDB provider, not the default HDFS-backed one.
     Fitting: RocksDB is exactly what the reference's stores run on
-    (SURVEY §2.1 S6).  The provider and `state_partitions` (the
+    (SURVEY §2.1 S6).  The provider, `state_partitions` (the
     state-store fanout, `spark.sql.shuffle.partitions` at FIRST start;
-    an existing checkpoint keeps its own) are read at query start, so
-    they are scoped around `.start()` and never set session-wide: the
-    other streaming replays keep the default store.
-
-    Stamps `_lh_fresh_start` on the returned query (see
-    await_read_your_writes)."""
+    an existing checkpoint keeps its own) and the caller's `confs` are
+    read at query start, so they are scoped around `.start()` and
+    never set session-wide: the other streaming replays keep the
+    default store."""
     from ..session import scoped_conf
     from .checkpoint import (
         PROVIDER_CONF, ROCKSDB_PROVIDER, check_engine_checkpoint,
-        fresh_checkpoint,
     )
 
     check_engine_checkpoint(checkpoint_dir)
-    confs = {PROVIDER_CONF: ROCKSDB_PROVIDER}
+    scoped = {PROVIDER_CONF: ROCKSDB_PROVIDER, **(confs or {})}
     if state_partitions is not None:
-        confs["spark.sql.shuffle.partitions"] = str(state_partitions)
-    fresh = fresh_checkpoint(checkpoint_dir)
-    with scoped_conf(spark, confs):
-        q = writer.option("checkpointLocation", checkpoint_dir).start()
-    q._lh_fresh_start = fresh
-    return q
+        scoped["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with scoped_conf(spark, scoped):
+        return writer.option("checkpointLocation", checkpoint_dir).start()
 
 
 def _event_stream(spark: SparkSession, events_dir: str,
@@ -404,6 +404,92 @@ def _event_stream(spark: SparkSession, events_dir: str,
     return reader.parquet(events_dir)
 
 
+# Run a micro-batch only when the events directory has a new file:
+# otherwise a processing-time `transformWithState` query runs a no-data
+# batch on EVERY trigger, armed timer or not (measured on 4 cores:
+# 3.2-3.4 cores busy on an idle engine).  Due timers get their batch
+# from `_TimerWake` instead.  Scoped to the live query's start, and
+# not pinned in the checkpoint's offset metadata, so an existing
+# checkpoint resumes under it unchanged.
+_EVENT_DRIVEN = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
+
+# How long the wake thread sleeps at most before it checks that its
+# query is still active.
+_WAKE_POLL_SECONDS = 1.0
+
+
+class _TimerWake:
+    """Driver-side wake for the live query's processing-time timers.
+
+    An event-driven query has no batch in which a timer can fire
+    unless some input arrives.  The sink hands every emitted
+    `kind='timer'` row's maturation time to `arm`; one thread per
+    query writes a ZERO-ROW event file into the events directory once
+    the earliest armed time is due, and the batch that file triggers
+    fires every timer due by then: the reference punctuator's
+    guarantee that a SLEEP completes with no further input
+    (`SchedulerProcessor.java:56-60`).  A zero-row file changes no
+    fold input and no replay.  A wake for a timer that is gone (its
+    run was tombstoned first) costs one batch that folds nothing.
+    The thread ends within `_WAKE_POLL_SECONDS` of its query
+    stopping."""
+
+    def __init__(self, events_dir: str):
+        self.events_dir = events_dir
+        self._due: list[int] = []  # heap of maturation times, ms
+        self._cond = threading.Condition()
+
+    def arm(self, maturation_ms) -> None:
+        with self._cond:
+            for ts in maturation_ms:
+                if ts is not None:
+                    heapq.heappush(self._due, int(ts))
+            self._cond.notify()
+
+    def start(self, query) -> None:
+        threading.Thread(target=self._run, args=(query,), daemon=True,
+                         name=f"engine-wake-{query.id}").start()
+
+    def _run(self, query) -> None:
+        from .admission import event_arrow_schema, write_event_file
+
+        while True:
+            with self._cond:
+                wait = (_WAKE_POLL_SECONDS if not self._due else
+                        (self._due[0] - time.time() * 1000) / 1000)
+                if wait > 0:
+                    self._cond.wait(min(wait, _WAKE_POLL_SECONDS))
+                    due = False
+                else:
+                    now_ms = time.time() * 1000
+                    while self._due and self._due[0] <= now_ms:
+                        heapq.heappop(self._due)
+                    due = True
+            try:
+                if not query.isActive:
+                    return
+            except Exception:  # the session is gone
+                return
+            if due:
+                try:
+                    write_event_file(self.events_dir,
+                                     event_arrow_schema().empty_table())
+                except OSError:  # retry in a second, not never
+                    self.arm([time.time() * 1000 + 1000])
+
+
+def _registered_timers(spark: SparkSession, checkpoint_dir: str) -> list[int]:
+    """Distinct expiry times of every timer registered in the
+    checkpoint's state, read before the query starts on it."""
+    # The state reader needs the driver's state-store coordinator,
+    # which the session's query manager registers when first used.
+    spark.streams.active
+    return [r[0] for r in spark.read.format("statestore")
+            .option("path", checkpoint_dir)
+            .option("readRegisteredTimers", "true").load()
+            .select("expiration_timestamp_ms").distinct().collect()]
+
+
 def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                      checkpoint_dir: str, output_dir: str,
                      executor: TaskExecutor | None = None,
@@ -413,11 +499,15 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                      state_partitions: int | None = None):
     """Start the engine as a continuously-running query (ProcessingTime
     trigger ~ the reference's 1 s punctuator cadence, Constants.java:36)
-    and return the StreamingQuery handle.
+    and return the StreamingQuery handle.  `events_dir` is the
+    directory of `cmd-*` event directories followed by `/*`.
 
-    Timers are self-contained (a SLEEP completes with no re-injected
-    TIMER_EVENT and no further input: Spark keeps scheduling micro-batches while
-    processing-time timers are registered) and COMPLETED runs are
+    The query is event-driven: a trigger runs a micro-batch only when
+    the events directory has a new file.  Timers stay self-contained
+    (a SLEEP completes with no re-injected TIMER_EVENT and no further
+    input): `_TimerWake` writes a zero-row event file when the
+    earliest emitted timer is due, seeded on a restart from the
+    timers registered in the checkpoint's state.  COMPLETED runs are
     tombstoned.
 
     `spec` is what the fold receives: one WFSpec for a per-spec engine,
@@ -446,10 +536,10 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     (fixed at FIRST query start from `spark.sql.shuffle.partitions`;
     an existing checkpoint keeps its own).  Every state partition
     costs one store commit + one Arrow Python round-trip PER
-    MICRO-BATCH even when idle — at the session's analytic default
-    (32) an idle batch measured ~1.1 s, at 8 it is ~3x cheaper, which
-    directly bounds command latency (the read-your-writes barrier
-    waits out in-flight batches).  Size to the deployment's run-rate:
+    MICRO-BATCH — at the session's analytic default (32) a batch
+    with no input measured ~1.1 s, at 8 it is ~3x cheaper, which
+    bounds command latency (the read-your-writes barrier waits for the
+    batch that carries the write).  Size to the deployment's run-rate:
     a keyspace of thousands of concurrent runs wants the default
     analytic fanout or more; a serving-latency deployment wants few.
     Scoped to this query's start — the session default is restored.
@@ -457,21 +547,25 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
     Admission is uncapped: every file visible at a trigger's start is
     folded (see await_read_your_writes).  Pace a bulk import through
     `streaming.admission.CatchUpAdmission` instead (source-side)."""
+    from .checkpoint import check_engine_checkpoint, fresh_checkpoint
+
     events = _event_stream(spark, events_dir, None)
     tagged = streaming_engine(events, spec, executor=executor,
                               native_timers=True, evict_completed=True)
+    wake = _TimerWake(events_dir.removesuffix("/*"))
+    if not fresh_checkpoint(checkpoint_dir):
+        # Refuse a stale checkpoint before reading its state.
+        check_engine_checkpoint(checkpoint_dir)
+        wake.arm(_registered_timers(spark, checkpoint_dir))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
         # ONE count materializes the batch into the cache and gates
-        # everything: with native timers armed, Spark triggers
-        # continuously even while idle, and the previous
-        # unconditional write + upsert probes cost ~3 empty jobs
-        # (~1 s) per idle trigger — which floors command latency,
-        # since the read-your-writes barrier waits out in-flight
-        # batches.  Batch 0 always writes so the output dir carries a
-        # readable schema from deploy time (downstream
-        # spark.read.parquet of an empty-but-created dir would fail
-        # schema inference).
+        # everything: a batch that emits nothing (a wake whose timer
+        # was deleted, input all dropped as duplicates) skips the
+        # write + upsert probes, ~3 empty jobs (~1 s).  Batch 0
+        # always writes so the output dir carries a readable schema
+        # from deploy time (downstream spark.read.parquet of an
+        # empty-but-created dir would fail schema inference).
         batch_df.persist()
         try:
             cnt = batch_df.count()
@@ -492,6 +586,10 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                     from ..sinks.serving import upsert_serving_stores_arrow
 
                     upsert_serving_stores_arrow(tbl, serving_dir)
+                import pyarrow.compute as pc
+
+                wake.arm(tbl.filter(pc.equal(tbl.column("kind"), "timer"))
+                         .column("maturation_timestamp").to_pylist())
                 return
             batch_df.write.mode("append").parquet(output_dir)
             if serving_dirs is not None:
@@ -500,77 +598,55 @@ def start_continuous(spark: SparkSession, events_dir: str, spec: dict,
                 from ..sinks.serving import upsert_serving_stores
 
                 upsert_serving_stores(batch_df, serving_dir)
+            wake.arm(r[0] for r in batch_df.where(F.col("kind") == "timer")
+                     .select("maturation_timestamp").distinct().collect())
         finally:
             # foreachBatch retries re-enter this function; without
             # the finally, a failed upsert would leak one cached
             # copy per attempt into executor storage memory.
             batch_df.unpersist()
 
-    return start_engine_query(
+    q = start_engine_query(
         spark,
         tagged.writeStream.foreachBatch(sink).outputMode("update")
         .trigger(processingTime=f"{trigger_seconds} seconds"),
-        checkpoint_dir, state_partitions)
+        checkpoint_dir, state_partitions, confs=_EVENT_DRIVEN)
+    wake.start(q)
+    return q
 
 
-def await_read_your_writes(query, timeout: float = 60.0) -> None:
-    """Read-your-writes barrier: block until the engine has folded
-    everything produced before this call.
+def await_read_your_writes(checkpoint_dir: str, path,
+                           timeout: float = 60.0) -> None:
+    """Read-your-writes barrier: block until the engine whose
+    checkpoint is `checkpoint_dir` has folded the event directory
+    `path` (what `cli._write_event` returns).
 
     The reference polls the consumer's stored offset until it passes
     the produce offset, 50 ms at a time
-    (`APIStreamsContext.java:168-222`, poll at 200-203).  On a
-    micro-batch engine the equivalent is: wait for a completed trigger
-    that *started* after this call and *listed the source fresh*.  The
-    live query's admission is uncapped, so it consumes every file
-    visible at a trigger's start — including this call's write —
-    whether it read zero rows (someone else's batch already drained
-    it) or many (it carried the write itself).  Events spooled by
-    `streaming.admission.CatchUpAdmission` become barrier-visible
-    only after release: call its `drain()` first when barriering on a
-    spooled key.
+    (`APIStreamsContext.java:168-222`, poll at 200-203).  Here the
+    produce offset is the file-source log batch that listed `path`,
+    and the consumer's stored offset is the newest log batch a
+    committed micro-batch covers — both read from the checkpoint
+    (`checkpoint.listing_log_batches`, `checkpoint.folded_log_batch`),
+    the engine's own durable record.  So the barrier is exact: it
+    releases only once the batch that listed the write has committed
+    (its sink upserts serving stores before the commit), whenever that
+    batch started and whether or not it is a recovery batch re-run
+    after a restart, and it needs no later batch.  Events spooled by
+    `streaming.admission.CatchUpAdmission` reach the events directory
+    only on release: call its `drain()` first when barriering on a
+    spooled key."""
+    from .checkpoint import folded_log_batch, listing_log_batches
 
-    Two progress entries must NOT satisfy the barrier:
-
-    - a batch that began BEFORE the write and finished after the call
-      (its listing predates the file) — excluded by `started > t0`;
-    - the FIRST batch of a query run, which may be a WAL-recovery
-      replay: on restart Structured Streaming re-executes the last
-      planned-but-uncommitted batch with the file list it WROTE TO
-      THE OFFSET LOG before the restart, so its progress timestamp is
-      post-restart while its contents predate this write.  (Observed
-      deterministically: POST against a just-restarted engine saw the
-      recovery batch report 0 rows 30 ms after the write and served a
-      404 for a run whose event hadn't been folded.)  Excluded by
-      requiring `batchId > the first batchId this run reported` —
-      each StreamingQuery object's progress buffer belongs to its own
-      run, so the buffer's head is at or before the recovery batch,
-      and only the recovery batch can carry a stale listing.
-
-      EXCEPT when the starter stamped `_lh_fresh_start` (checkpoint
-      had no committed offsets at start): a fresh run cannot begin
-      with a recovery replay, so the head batch is trusted like any
-      other.  Without this, an engine that schedules batches only on
-      input would starve the FIRST post-start barrier forever: the
-      write's own batch is the head, and no successor ever fires.
-    """
-    import time as _time
-    from datetime import datetime, timezone
-
-    trust_head = getattr(query, "_lh_fresh_start", False)
-    t0 = datetime.now(timezone.utc)
-    deadline = _time.monotonic() + timeout
-    while _time.monotonic() < deadline:
-        recent = query.recentProgress
-        p = recent[-1] if recent else None
-        if p:
-            started = datetime.strptime(
-                p["timestamp"], "%Y-%m-%dT%H:%M:%S.%fZ"
-            ).replace(tzinfo=timezone.utc)
-            if started > t0 and (trust_head
-                                 or p["batchId"] > recent[0]["batchId"]):
-                return
-        _time.sleep(0.05)  # the reference's 50 ms poll
+    name = os.path.basename(os.path.normpath(str(path)))
+    deadline = time.monotonic() + timeout
+    listed = None
+    while time.monotonic() < deadline:
+        if listed is None:
+            listed = listing_log_batches(checkpoint_dir, [name]).get(name)
+        if listed is not None and folded_log_batch(checkpoint_dir) >= listed:
+            return
+        time.sleep(0.05)  # the reference's 50 ms poll
     raise TimeoutError("read-your-writes barrier timed out")
 
 

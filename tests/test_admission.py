@@ -163,52 +163,28 @@ def test_unsorted_bulk_is_offset_sorted_at_spool_time(dirs):
         adm.close()
 
 
-class _FakeQuery:
-    """Progress feed with controllable batch-start timestamps."""
-
-    def __init__(self):
-        self.entries: list[dict] = []
-
-    @property
-    def recentProgress(self):
-        return self.entries
-
-    @property
-    def lastProgress(self):
-        return self.entries[-1] if self.entries else None
-
-    def post_batch(self, batch_id: int, rows: int = 0):
-        from datetime import datetime, timezone
-
-        self.entries.append({
-            "batchId": batch_id,
-            "numInputRows": rows,
-            "timestamp": datetime.now(timezone.utc).strftime(
-                "%Y-%m-%dT%H:%M:%S.%fZ")[:-4] + "Z",
-        })
-
-
-def test_pacer_yields_to_live_until_a_newer_batch_completes(dirs):
-    """Yield-on-live: after a fast-path admit, backlog release must
-    hold until the query posts a batch newer than the write — the
-    batch carrying the live command stays near idle size."""
-    q = _FakeQuery()
-    q.post_batch(0)
-    adm = CatchUpAdmission(str(dirs), query=q,
-                           max_rows_per_trigger=10, segment_rows=10,
-                           poll_seconds=0.02,
+def test_pacer_yields_to_live_for_the_wall_window(dirs):
+    """Yield-on-live: after a fast-path admit, backlog release holds
+    for `live_yield_seconds` — the batch carrying the live command
+    stays near idle size — and resumes after it."""
+    adm = CatchUpAdmission(str(dirs), max_rows_per_trigger=10,
+                           segment_rows=10, poll_seconds=0.02,
+                           live_yield_seconds=1.0,
                            folded_rows_fn=lambda: 10**9)
     try:
-        adm.submit_live({"wf_run_id": "fresh", "wf_spec_name": "basic",
-                         "event_type": "WF_RUN_STARTED", "content": "{}"})
-        time.sleep(1.1)  # outlive the wall window: the hold must
-        adm.spool_bulk(_bulk(30))  # ...come from the progress feed
-        time.sleep(0.3)
+        live = adm.submit_live({"wf_run_id": "fresh",
+                                "wf_spec_name": "basic",
+                                "event_type": "WF_RUN_STARTED",
+                                "content": "{}"})
+        assert live is not None and live.parent == dirs
+        t0 = time.monotonic()
+        adm.spool_bulk(_bulk(30))
+        time.sleep(0.5)
         backlog_released = [d for d in _released_files(dirs)
                             if d.name.startswith("seg-")]
         assert backlog_released == [], "released during live yield"
-        q.post_batch(1, rows=1)  # the live event's batch completes
         assert _wait(lambda: adm.pending_rows() == 0)
+        assert time.monotonic() - t0 >= 0.9
     finally:
         adm.close()
 
@@ -229,7 +205,9 @@ def test_checkpoint_feedback_paces_a_separate_process_import(tmp_path):
     """Cross-process feedback: an importer with no StreamingQuery
     handle paces against the engine checkpoint's own write-ahead
     record — a released segment counts as folded once a COMMITTED
-    batch's `sources/0/<bid>` file-admission log lists it."""
+    batch's offset covers the file-source log batch
+    (`sources/0/<log id>`) that lists it.  Query and log batch ids
+    differ: a batch with no new file advances only the query's."""
     import json
 
     ev = tmp_path / "events"
@@ -247,29 +225,42 @@ def test_checkpoint_feedback_paces_a_separate_process_import(tmp_path):
         assert len(_released_files(ev)) == 2  # capped, no feedback yet
         released = _released_files(ev)
 
-        def admit(batch_id, seg_dirs, committed=True):
+        (ckpt / "offsets").mkdir()
+        query_batch = {"n": 0}
+
+        def commit(log_offset):
+            n = query_batch["n"]
+            (ckpt / "offsets" / str(n)).write_text(
+                "v1\n{}\n" + json.dumps({"logOffset": log_offset}))
+            (ckpt / "commits" / str(n)).write_text("v1\n{}")
+            query_batch["n"] += 1
+
+        def admit(log_batch, seg_dirs):
             lines = ["v1"] + [
                 json.dumps({"path": f"file://{d}/part-00000.parquet",
-                            "timestamp": 1, "batchId": batch_id})
+                            "timestamp": 1, "batchId": log_batch})
                 for d in seg_dirs]
-            (ckpt / "sources" / "0" / str(batch_id)).write_text(
+            (ckpt / "sources" / "0" / str(log_batch)).write_text(
                 "\n".join(lines))
-            if committed:
-                (ckpt / "commits" / str(batch_id)).write_text("v1\n{}")
 
-        # Batch 0 admits both released segments but is NOT committed:
-        # planned-not-completed must not count as folded.
-        admit(0, released, committed=False)
+        # Query batches 0-2 admit no file (they cover log batch -1),
+        # so commits/0 exists before log batch 0 is even folded.
+        for _ in range(3):
+            commit(-1)
+        # Log batch 0 lists both released segments but no batch
+        # covering it has committed: listed is not folded.
+        admit(0, released)
         time.sleep(0.2)
         assert len(_released_files(ev)) == 2
         # Commit it: the pacer tops back up.
-        (ckpt / "commits" / "0").write_text("v1\n{}")
+        commit(0)
         assert _wait(lambda: len(_released_files(ev)) == 4)
         # Drain the rest batch by batch.
-        batch = 1
+        log_batch = 1
         while adm.pending_rows() > 0 or adm.outstanding_rows() > 0:
-            admit(batch, _released_files(ev))
-            batch += 1
+            admit(log_batch, _released_files(ev))
+            commit(log_batch)
+            log_batch += 1
             time.sleep(0.05)
         assert len(_rows_in(ev)) == 300
     finally:
@@ -306,21 +297,22 @@ def test_engine_catchup_import_bounded_batches(spark):
                            max_rows_per_trigger=100, poll_seconds=0.1)
     try:
         # Warm up so batch 0's codegen doesn't count.
-        adm.submit_live({"wf_run_id": "warm", "wf_spec_name": spec["name"],
-                         "event_type": "WF_RUN_STARTED",
-                         "content": json.dumps({"variables": {}})})
-        await_read_your_writes(q, timeout=120)
+        warm = adm.submit_live({"wf_run_id": "warm",
+                                "wf_spec_name": spec["name"],
+                                "event_type": "WF_RUN_STARTED",
+                                "content": json.dumps({"variables": {}})})
+        await_read_your_writes(ckpt, warm, timeout=120)
         base_batch = (q.lastProgress or {}).get("batchId", -1)
 
         adm.spool_bulk(_bulk(400, base_offset=time.time_ns() // 1000,
                             spec_name=spec["name"]))
         time.sleep(1.0)
         # Fresh run mid-drain: must fold without draining the backlog.
-        adm.submit_live({"wf_run_id": "fresh-1",
-                         "wf_spec_name": spec["name"],
-                         "event_type": "WF_RUN_STARTED",
-                         "content": json.dumps({"variables": {}})})
-        await_read_your_writes(q, timeout=120)
+        fresh = adm.submit_live({"wf_run_id": "fresh-1",
+                                 "wf_spec_name": spec["name"],
+                                 "event_type": "WF_RUN_STARTED",
+                                 "content": json.dumps({"variables": {}})})
+        await_read_your_writes(ckpt, fresh, timeout=120)
         assert adm.pending_rows() > 0, (
             "fresh run's barrier released only after the whole backlog "
             "drained — admission control added no latency benefit")

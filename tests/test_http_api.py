@@ -62,7 +62,8 @@ def test_http_roundtrip_full_lifecycle(spark):
     # GETs are served from the compacted bucket-partitioned stores
     # (sinks/serving.py), never by re-windowing the raw changelog.
     srv = LittleHorseHTTPServer(
-        LittleHorseAPI(spark, str(events_dir), out_dir, query=q,
+        LittleHorseAPI(spark, str(events_dir), out_dir,
+                       checkpoint_dir=str(workdir / "ckpt"),
                        serving_dir=serving_dir)).start()
     try:
         port = srv.port

@@ -41,6 +41,16 @@ def _write_timer_events(spark, out_dir: str, events_dir: Path, now_ms: int,
     return len(rows)
 
 
+def _event_rows(events_dir: Path) -> list[tuple]:
+    """(wf_run_id, event_type) of every row in the events directory,
+    sorted."""
+    import pyarrow.parquet as pq
+
+    return sorted((r["wf_run_id"], r["event_type"])
+                  for f in events_dir.glob("*/*.parquet")
+                  for r in pq.read_table(f).to_pylist())
+
+
 def test_streaming_matches_batch(spark):
     """Streaming fold over the per-user pipeline == batch closed form."""
     workdir = Path(tempfile.mkdtemp(prefix="stream-test-"))
@@ -192,7 +202,8 @@ def test_continuous_read_your_writes(spark):
         spark.createDataFrame(start, schema=WF_EVENT_SCHEMA) \
              .coalesce(1).write.parquet(str(events_dir / "cmd1"))
 
-        await_read_your_writes(q, timeout=90)
+        await_read_your_writes(str(workdir / "ckpt"), events_dir / "cmd1",
+                               timeout=90)
 
         # "GET /WFRun/rX": the snapshot must be visible and final.
         snaps = [r for r in spark.read.parquet(str(out_dir)).collect()
@@ -400,9 +411,10 @@ def test_native_timers_complete_sleep_self_contained(spark):
         state = json.loads(final["payload"])
         assert state["thread_runs"][0]["task_runs"][0]["status"] == "COMPLETED"
         # The timer row was emitted (observability), but nothing ever
-        # re-injected events: the input dir still has only our command.
+        # re-injected events: the input dir holds only our command's
+        # one row (a timer wake is a zero-row file).
         assert any(r["kind"] == "timer" for r in rows)
-        assert {p.name for p in events_dir.iterdir()} == {"cmd1"}
+        assert _event_rows(events_dir) == [("r1", "WF_RUN_STARTED")]
     finally:
         q.stop()
         shutil.rmtree(workdir, ignore_errors=True)
@@ -892,100 +904,100 @@ def test_driver_side_event_write_matches_engine_schema(spark):
         shutil.rmtree(workdir, ignore_errors=True)
 
 
-def test_barrier_ignores_wal_recovery_batch():
-    """The read-your-writes barrier must not trust the FIRST batch a
-    query run reports: on restart it can be a WAL-recovery replay
-    whose file list was committed to the offset log before the
-    restart (observed: post-restart POST served 404 for a run whose
-    event had not been folded).  Any LATER batch that started after
-    the call releases it."""
+def _fake_batch(ckpt: Path, batch_id: int, log_offset: int,
+                committed: bool = True) -> None:
+    """Record query batch `batch_id` as Spark does: its offsets (up to
+    file-source log batch `log_offset`), then its commit."""
+    for d in ("offsets", "commits"):
+        (ckpt / d).mkdir(parents=True, exist_ok=True)
+    (ckpt / "offsets" / str(batch_id)).write_text(
+        'v1\n{"batchWatermarkMs":0,"batchTimestampMs":0,"conf":{}}\n'
+        + json.dumps({"logOffset": log_offset}))
+    if committed:
+        (ckpt / "commits" / str(batch_id)).write_text("v1\n{}")
+
+
+def _fake_listing(ckpt: Path, log_batch: int, dirs: list[str]) -> None:
+    """Record file-source log batch `log_batch` listing one file in
+    each of `dirs`."""
+    src = ckpt / "sources" / "0"
+    src.mkdir(parents=True, exist_ok=True)
+    (src / str(log_batch)).write_text("\n".join(
+        ["v1"] + [json.dumps({"path": f"file:///ev/{d}/part-00000.parquet",
+                              "timestamp": 1, "batchId": log_batch})
+                  for d in dirs]))
+
+
+def test_barrier_ignores_wal_recovery_batch(tmp_path):
+    """The read-your-writes barrier keys on the write itself: it
+    releases once a COMMITTED batch covers the file-source log batch
+    that listed the written directory, whatever the batch's timing.
+    A WAL-recovery batch (re-run after a restart with the file list it
+    planned before) releases a write it listed, and not one it did
+    not; no batch releases a write before it commits."""
     import threading
     import time as _time
-    from datetime import datetime, timezone
 
     import pytest as _pytest
 
     from old_original_java_little_horse_spark.streaming.engine import (
         await_read_your_writes)
 
-    def stamp(dt):
-        return dt.strftime("%Y-%m-%dT%H:%M:%S.%f")[:-3] + "Z"
+    ckpt = tmp_path / "ckpt"
+    ev = tmp_path / "events"
 
-    class FakeQuery:
-        def __init__(self, entries):
-            self.recentProgress = entries
+    def barrier_in_thread(d: str):
+        done = threading.Event()
+        t = threading.Thread(target=lambda: (
+            await_read_your_writes(ckpt, ev / d, timeout=10.0),
+            done.set()))
+        t.start()
+        return t, done
 
-    # Case 1: only the run's first batch, published AFTER the call
-    # with a post-call timestamp and 0 rows (the exact recovery
-    # shape: the replayed offset-log batch completes post-restart, so
-    # `started > t0` HOLDS and only the batchId > head check can
-    # reject it) → must time out, never release.
-    q1 = FakeQuery([])
+    # Folded by a batch that started AND committed before the call:
+    # returns at once, with no later batch needed.  Query batches 0-2
+    # carry no new file (their ids run ahead of the log's).
+    _fake_listing(ckpt, 0, ["cmd-a"])
+    for b in range(3):
+        _fake_batch(ckpt, b, 0)
+    t0 = _time.monotonic()
+    await_read_your_writes(ckpt, ev / "cmd-a", timeout=5.0)
+    assert _time.monotonic() - t0 < 1.0
 
-    def publish_first_batch():
-        _time.sleep(0.2)
-        q1.recentProgress = [
-            {"batchId": 7, "numInputRows": 0,
-             "timestamp": stamp(datetime.now(timezone.utc))}]
+    # Listed in log batch 1 by planned batch 3, which never commits
+    # before a restart: the barrier waits.
+    _fake_listing(ckpt, 1, ["cmd-b"])
+    _fake_batch(ckpt, 3, 1, committed=False)
+    tb, b_done = barrier_in_thread("cmd-b")
+    # A write the recovery batch did NOT list (log batch 2, not yet
+    # planned) is not released by it either.
+    _fake_listing(ckpt, 2, ["cmd-c"])
+    tc, c_done = barrier_in_thread("cmd-c")
+    _time.sleep(0.4)
+    assert not b_done.is_set() and not c_done.is_set(), (
+        "released before the batch that lists the file committed")
+    # The restart re-runs batch 3 and commits it: it listed cmd-b.
+    _fake_batch(ckpt, 3, 1)
+    assert b_done.wait(5.0), "recovery batch that listed the file ignored"
+    _time.sleep(0.4)
+    assert not c_done.is_set()
+    # Batch 4 lists cmd-c: planned, then committed.
+    _fake_batch(ckpt, 4, 2, committed=False)
+    _time.sleep(0.4)
+    assert not c_done.is_set()
+    _fake_batch(ckpt, 4, 2)
+    assert c_done.wait(5.0)
+    tb.join()
+    tc.join()
 
-    t1 = threading.Thread(target=publish_first_batch)
-    t1.start()
-    try:
-        with _pytest.raises(TimeoutError):
-            await_read_your_writes(q1, timeout=1.0)
-    finally:
-        t1.join()
-
-    # Case 2: a later batch of the same run, started post-call →
-    # releases regardless of row count.
-    q = FakeQuery([])
-    done = {}
-
-    def run():
-        await_read_your_writes(q, timeout=10.0)
-        done["ok"] = True
-
-    t = threading.Thread(target=run)
-    t.start()
-    _time.sleep(0.3)
-    now = datetime.now(timezone.utc)
-    q.recentProgress = [
-        {"batchId": 7, "numInputRows": 0, "timestamp": stamp(now)},
-        {"batchId": 8, "numInputRows": 3, "timestamp": stamp(now)},
-    ]
-    t.join(5.0)
-    assert done.get("ok"), "barrier did not release on a later batch"
-
-    # Case 3: latest batch started BEFORE the call → not sufficient.
-    past = stamp(datetime.now(timezone.utc))
-    _time.sleep(0.05)
-    q3 = FakeQuery([{"batchId": 1, "numInputRows": 0, "timestamp": past},
-                    {"batchId": 2, "numInputRows": 0, "timestamp": past}])
+    # A listing in a compacted log file (`<id>.compact` repeats every
+    # older entry, each with its own batchId) is found too.
+    (ckpt / "sources" / "0" / "9.compact").write_text("\n".join(
+        ["v1"] + [json.dumps({"path": f"file:///ev/{d}/part-00000.parquet",
+                              "timestamp": 1, "batchId": b})
+                  for d, b in (("cmd-a", 0), ("cmd-b", 1), ("cmd-c", 2),
+                               ("cmd-d", 9))]))
     with _pytest.raises(TimeoutError):
-        await_read_your_writes(q3, timeout=0.7)
-
-    # Case 4: a FRESH-checkpoint query (starter stamped
-    # _lh_fresh_start) cannot begin with a WAL replay, so its head
-    # batch IS trusted — otherwise an input-driven engine
-    # (native_timers=False) starves the first post-start barrier:
-    # the write's own batch is the head and no successor ever fires.
-    q4 = FakeQuery([])
-    q4._lh_fresh_start = True
-
-    def publish_head():
-        _time.sleep(0.2)
-        q4.recentProgress = [
-            {"batchId": 0, "numInputRows": 1,
-             "timestamp": stamp(datetime.now(timezone.utc))}]
-
-    t4 = threading.Thread(target=publish_head)
-    t4.start()
-    try:
-        await_read_your_writes(q4, timeout=5.0)  # must NOT time out
-    finally:
-        t4.join()
-    # ...but a pre-call head still never releases a fresh query.
-    q5 = FakeQuery([{"batchId": 0, "numInputRows": 1, "timestamp": past}])
-    q5._lh_fresh_start = True
-    with _pytest.raises(TimeoutError):
-        await_read_your_writes(q5, timeout=0.7)
+        await_read_your_writes(ckpt, ev / "cmd-d", timeout=0.5)
+    _fake_batch(ckpt, 5, 9)
+    await_read_your_writes(ckpt, ev / "cmd-d", timeout=5.0)

@@ -13,11 +13,7 @@ alternating order, so host weather cancels in the per-query ratio
 exactly like the round bench.
 
 Each timed run consumes every output column through Spark's no-op
-sink, where the round bench counts rows: under `.count()` Catalyst
-prunes a per-row projection or a left-joined column away (t_lm_score,
-t_dsir_weights, t_fingerprint and t_repetition_score reduce to a
-document-count scan), and the A/B would time a plan neither side's
-change touched.
+sink, as the round bench does (`bench.consume`).
 
 Usage:
   python tools/ab_movers.py --commit ad2b7a7^ \
@@ -70,7 +66,7 @@ def main() -> None:
     peer.send_warm(names)
     for name in names:  # same one-time-codegen warm as bench.py
         try:
-            specs[name].fn(spark, "/root/testdata/sf0.001").count()
+            bench.consume(specs[name].fn(spark, "/root/testdata/sf0.001"))
         except Exception:
             pass
     peer.wait_warm()
@@ -82,13 +78,7 @@ def main() -> None:
     def time_head(name: str) -> float | None:
         try:
             t0 = time.perf_counter()
-            df = specs[name].fn(spark, args.sf_dir)
-            # Mirror ReplayPeer.time_query(noop=True) exactly: the peer
-            # collects q1 (bench.py parity), so HEAD must too.
-            if name == "q1_pricing_summary":
-                df.collect()
-            else:
-                df.write.format("noop").mode("overwrite").save()
+            bench.consume(specs[name].fn(spark, args.sf_dir))
             return time.perf_counter() - t0
         except Exception as e:  # noqa: BLE001
             errors.setdefault(name, f"{type(e).__name__}: {e}"[:200])
@@ -97,9 +87,9 @@ def main() -> None:
     for pass_no in range(args.passes):
         for name in names:
             if pass_no % 2 == 0:
-                h, r = time_head(name), peer.time_query(name, noop=True)
+                h, r = time_head(name), peer.time_query(name)
             else:
-                r, h = peer.time_query(name, noop=True), time_head(name)
+                r, h = peer.time_query(name), time_head(name)
             if h is not None:
                 head[name].append(h)
             if r is not None:

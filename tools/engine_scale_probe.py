@@ -37,12 +37,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _bulk_produce(events_dir: str, spec_name: str, n: int,
-                  prefix: str = "run") -> None:
+                  prefix: str = "run"):
     """N run_request commands as ONE parquet file (the Kafka-produce
     stand-in, driver-side like cli._write_event; one file ⇒ the next
-    trigger sees the whole backlog at once — the stress shape)."""
+    trigger sees the whole backlog at once — the stress shape).
+    Returns the file's directory."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
+
+    from old_original_java_little_horse_spark.streaming.admission import (
+        write_event_file)
 
     base = time.time_ns() // 1000
     now_ms = int(time.time() * 1000)
@@ -58,11 +61,7 @@ def _bulk_produce(events_dir: str, spec_name: str, n: int,
         "content": pa.array([json.dumps({"variables": {}})] * n,
                             pa.string()),
     })
-    d = os.path.join(events_dir, f"cmd-{uuid.uuid4().hex[:12]}")
-    os.makedirs(d, exist_ok=True)
-    tmp = os.path.join(d, ".part-00000.parquet.tmp")
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, os.path.join(d, "part-00000.parquet"))
+    return write_event_file(events_dir, tbl).parent
 
 
 def probe(spark, n: int, trigger_seconds: float = 0.5,
@@ -80,9 +79,10 @@ def probe(spark, n: int, trigger_seconds: float = 0.5,
     events_dir = os.path.join(workdir, "events")
     serving_dir = os.path.join(workdir, "serving")
     os.makedirs(events_dir, exist_ok=True)
+    ckpt = os.path.join(workdir, "ckpt")
     q = start_continuous(
         spark, events_dir + "/*", make_spec_registry([spec]),
-        checkpoint_dir=os.path.join(workdir, "ckpt"),
+        checkpoint_dir=ckpt,
         output_dir=os.path.join(workdir, "out"),
         serving_dirs={spec["name"]: serving_dir},
         executor=execute,
@@ -90,10 +90,10 @@ def probe(spark, n: int, trigger_seconds: float = 0.5,
         state_partitions=state_partitions)
     try:
         # Warm up (codegen + Python workers + batch-0 schema stamp)
-        # with one throwaway run, then barrier on it: the barrier
-        # releases only on a post-write batch, so it needs traffic.
-        _bulk_produce(events_dir, spec["name"], 1, prefix="warm")
-        await_read_your_writes(q, timeout=120)
+        # with one throwaway run, then barrier on it.
+        await_read_your_writes(
+            ckpt, _bulk_produce(events_dir, spec["name"], 1, prefix="warm"),
+            timeout=120)
         base_batch = (q.lastProgress or {}).get("batchId", -1)
         t0 = time.perf_counter()
         _bulk_produce(events_dir, spec["name"], n)
@@ -136,9 +136,9 @@ def probe(spark, n: int, trigger_seconds: float = 0.5,
                 # — typically largest — batch may still be committing.
                 # Wait one extra trigger and only stop once the busy
                 # batches are quiescent: no new input-carrying batchId
-                # and an unchanged row total (ADVICE r11).  Idle
-                # no-data batches keep advancing batchId, so quiesce
-                # on BUSY entries only; the deadline stays the bound.
+                # and an unchanged row total (ADVICE r11).  Quiesce
+                # on BUSY entries only (a timer wake is a batch with
+                # no input); the deadline stays the bound.
                 def _busy_max(entries):
                     return max((p.get("batchId", -1) for p in entries
                                 if p.get("numInputRows", 0) > 0),
@@ -165,8 +165,8 @@ def probe(spark, n: int, trigger_seconds: float = 0.5,
         barrier: list[float] = []
         for _ in range(5):
             b0 = time.perf_counter()
-            _bulk_produce(events_dir, spec["name"], 1)
-            await_read_your_writes(q, timeout=60)
+            await_read_your_writes(
+                ckpt, _bulk_produce(events_dir, spec["name"], 1), timeout=60)
             barrier.append((time.perf_counter() - b0) * 1000.0)
         barrier.sort()
 

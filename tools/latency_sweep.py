@@ -3,7 +3,7 @@
 The task round-trip floor is micro-batch quantization, so the two
 knobs that set it are the engine trigger interval and the state-store
 fanout (every state partition costs a store commit + Arrow round-trip
-per micro-batch, even idle — `SparkEngineManager.state_partitions`).
+per micro-batch — `SparkEngineManager.state_partitions`).
 This tool measures end-to-end POST→COMPLETED-served p50/p95 over the
 grid trigger {100, 200, 500} ms × state_partitions {4, 8, 32}, through
 the exact production path `bench.task_roundtrip` drives (HTTP command →
